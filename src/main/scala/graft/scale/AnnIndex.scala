@@ -1,6 +1,6 @@
 package graft.scale
 
-import graft.core.{Q, Tables}
+import graft.core.{Par, Q, Tables}
 import graft.write.VersionedTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -284,14 +284,10 @@ object AnnIndex {
     }
     // Per-cell split work is INDEPENDENT across hot cells (each reads only
     // its own directory-pruned partition), so the Lloyd rounds of different
-    // cells overlap via futures (r21, the SpanGuard pattern); the fresh-cid
-    // assignment below stays sequential in hot order, so minted cell ids —
-    // and with them the output — are bit-identical to the serial walk.
-    // Futures are read-only compute (no staged writes), so a failed cell
-    // rethrows at its Await with nothing to unwind.
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val perCell = hot.map { h => h -> scala.concurrent.Future {
+    // cells overlap on the bounded pool; the fresh-cid assignment below
+    // stays sequential in hot order, so minted cell ids — and with them the
+    // output — are bit-identical to the serial walk.
+    val perCell = Par.all(hot.toSeq.map { h => () =>
       val members = pt.read().filter(col("cid") === h)
         .withColumn("gcode", col("code").cast("array<bigint>"))
         .localCheckpoint(false)
@@ -301,10 +297,8 @@ object AnnIndex {
       // a degenerate cell (all codes identical) assigns everything to one
       // sub-centroid — leave it alone rather than minting an empty cell
       (sub, assigned, assigned.select("cid").distinct().count())
-    } }
-    perCell.foreach { case (h, f) =>
-      val (sub, assigned, nSub) = scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf)
+    })
+    hot.zip(perCell).foreach { case (h, (sub, assigned, nSub)) =>
       if (nSub == 2) {
         val fresh = nextCid; nextCid += 1; split += h
         patches += assigned

@@ -1,8 +1,10 @@
 package graft.scale
 
-import graft.core.{Q, Tables}
+import graft.core.{Par, Q, Tables}
+import graft.core.Par.ec
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import scala.concurrent.Future
 
 /** Link-authority scoring over a document/entity graph — the PageRank family,
   * integer-exact so any SQL engine replays the trajectory bit-for-bit.
@@ -233,39 +235,21 @@ object Graph {
       */
     @volatile var collectStats: Boolean = false
 
-    /** Launch independent table patches on background threads. Each
-      * closure targets its OWN table; the round loop never reads a patched
-      * table back (it carries every patched relation in-plan — versions
-      * are immutable and `read()` pins the version at call time, so
-      * in-flight promotes cannot disturb a running plan). The per-table
-      * collect/stage/promote driver latencies overlap each other AND the
-      * round computations instead of serializing — the fixed cost of a
-      * delta update approaches one patch latency, not 2+iters of them.
-      */
-    private def startPatches(ps: Seq[() => Unit]): Seq[scala.concurrent.Future[Unit]] = {
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      ps.map(f => Future(f()))
-    }
-
-    private def awaitPatches(fs: Seq[scala.concurrent.Future[Unit]]): Unit = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.sequence(fs), Duration.Inf)
-    }
+    // Table patches run as futures on Par's pool. Each targets its OWN
+    // table; the round loop never reads a patched table back (it carries
+    // every patched relation in-plan — versions are immutable and `read()`
+    // pins the version at call time, so in-flight promotes cannot disturb a
+    // running plan). The per-table collect/stage/promote driver latencies
+    // overlap each other AND the round computations instead of serializing
+    // — the fixed cost of a delta update approaches one patch latency, not
+    // 2+iters of them. Every patch settles before the update returns.
 
     /** Materialize independent relations concurrently — sibling
       * localCheckpoints with no data dependency serialize only on the
       * cluster, not on the driver.
       */
-    private def lcPar(dfs: DataFrame*): Seq[DataFrame] = {
-      import scala.concurrent.{Await, Future}
-      import scala.concurrent.duration.Duration
-      import scala.concurrent.ExecutionContext.Implicits.global
-      Await.result(Future.sequence(dfs.map(df => Future(df.localCheckpoint()))),
-        Duration.Inf)
-    }
+    private def lcPar(dfs: DataFrame*): Seq[DataFrame] =
+      Par.all(dfs.map(df => () => df.localCheckpoint()))
 
     /** Full build: annotate, bucket, iterate, persisting every round's rank
       * relation (the history a later delta-update recomputes against).
@@ -354,8 +338,8 @@ object Graph {
       // patch the out-bucketed copy: touched buckets rewritten with updated
       // outdegs + the new rows; every other bucket inherited by reference.
       // The in-bucketed patch below is independent — the two stage+promote
-      // latencies overlap ([[flushPatches]]); the round loop reads both
-      // AFTER the await, so it always sees the patched edge relations.
+      // latencies overlap; the round loop carries both patched relations
+      // in-plan, so it always sees the patched edge relations.
       val outMerged = eo.read().filter(col("__b").isin(srcBuckets: _*)).drop("__b")
         .join(newDeg.select(col("src"), col("outdeg").as("__nd")), Seq("src"), "left")
         .select(col("src"), col("dst"), coalesce(col("__nd"), col("outdeg")).as("outdeg"))
@@ -372,70 +356,71 @@ object Graph {
       // materialize both merges once, concurrently; background writes and
       // the round loop's in-plan views both serve from the materialization
       val Seq(eoM, eiM) = lcPar(outMerged, inMerged)
-      val patchFs = Seq.newBuilder[scala.concurrent.Future[Unit]]
-      patchFs ++= startPatches(Seq(
-        () => eo.promote(eo.stagePatch(
-          eoM.repartition(srcBuckets.length.max(1), col("__b")), Seq("__b"))),
-        () => ei.promote(ei.stagePatch(
-          eiM.repartition(dstBuckets.length.max(1), col("__b")), Seq("__b")))))
-      // patched edge relations carried in-plan for the round loop, so the
-      // loop never waits on (or reads back) the background edge promotes
-      val eoV = eo.read().filter(!col("__b").isin(srcBuckets: _*)).unionByName(eoM)
-      val eiV = ei.read().filter(!col("__b").isin(dstBuckets: _*)).unionByName(eiM)
-      // permanently-changed inputs: dsts of new edges + dsts of re-divided
-      // old edges
-      val changedInputs = batch.select("dst").unionByName(oldTouched.select("dst"))
-        .distinct().localCheckpoint()
-      // round 0: brand-new srcs enter at the initial rank. Table patches
-      // are deferred ([[flushPatches]]); the loop's math runs against the
-      // patched relation carried in-plan, which is value-identical.
-      val newSrcs = newDeg.join(oldDeg, Seq("src"), "left_anti")
-        .select(col("src").as("node"), lit(Scale).as("rank")).localCheckpoint()
-      patchFs ++= startPatches(Seq(() => upsertByKey(t("rank0"), newSrcs, "node")))
-      // The dirty-cone chain (cheap, driver-latency-bound) advances on the
-      // main thread; each round's exact recompute + table patch chains off
-      // the previous round's on a future, so recompute latency hides
-      // behind the next round's cone discovery.
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      var prevF: Future[DataFrame] = Future.successful(
-        t("rank0").read().drop("__b")
-          .join(newSrcs.select("node"), Seq("node"), "left_anti")
-          .unionByName(newSrcs))
-      var dirty = newSrcs.select("node")
-      var dirtyB = bucketsOf(dirty, "node")
+      val patchFs = Seq.newBuilder[Future[Unit]]
       val cached = Seq.newBuilder[DataFrame]
       val stats = Seq.newBuilder[(Int, Long)]
-      if (collectStats) stats += 0 -> dirty.count()
-      for (i <- 1 to iters) {
-        // cone growth: changed inputs ∪ out-neighbors of the prior round's
-        // dirty set (bucket-pruned out-edge scan). persist + the buckets
-        // collect materializes the set in ONE job.
-        val prop =
-          if (dirtyB.isEmpty) changedInputs.limit(0)
-          else eoV.filter(col("__b").isin(dirtyB: _*))
-            .join(dirty.withColumnRenamed("node", "src"), "src").select("dst")
-        val dirtyNow = changedInputs.unionByName(prop).distinct().persist()
-        cached += dirtyNow
-        val ib = bucketsOf(dirtyNow, "dst")
-        if (collectStats) stats += i -> dirtyNow.count()
-        val round = i
-        // exact recompute of the dirty nodes from the patched (t-1) history:
-        // in-edges bucket-pruned to the dirty dsts
-        val rF = prevF.map { prev =>
-          roundStep(eiV.filter(col("__b").isin(ib: _*)).drop("__b")
-            .join(dirtyNow, Seq("dst")), prev).localCheckpoint()
+      // every started patch settles before this returns or rethrows
+      val rounds = scala.util.Try {
+        patchFs += Future(eo.promote(eo.stagePatch(
+          eoM.repartition(srcBuckets.length.max(1), col("__b")), Seq("__b"))))
+        patchFs += Future(ei.promote(ei.stagePatch(
+          eiM.repartition(dstBuckets.length.max(1), col("__b")), Seq("__b"))))
+        // patched edge relations carried in-plan for the round loop, so the
+        // loop never waits on (or reads back) the background edge promotes
+        val eoV = eo.read().filter(!col("__b").isin(srcBuckets: _*)).unionByName(eoM)
+        val eiV = ei.read().filter(!col("__b").isin(dstBuckets: _*)).unionByName(eiM)
+        // permanently-changed inputs: dsts of new edges + dsts of re-divided
+        // old edges
+        val changedInputs = batch.select("dst").unionByName(oldTouched.select("dst"))
+          .distinct().localCheckpoint()
+        // round 0: brand-new srcs enter at the initial rank. Table patches
+        // run in the background; the loop's math runs against the patched
+        // relation carried in-plan, which is value-identical.
+        val newSrcs = newDeg.join(oldDeg, Seq("src"), "left_anti")
+          .select(col("src").as("node"), lit(Scale).as("rank")).localCheckpoint()
+        patchFs += Future(upsertByKey(t("rank0"), newSrcs, "node"))
+        // The dirty-cone chain (cheap, driver-latency-bound) advances on the
+        // main thread; each round's exact recompute + table patch chains off
+        // the previous round's on a future, so recompute latency hides
+        // behind the next round's cone discovery.
+        var prevF: Future[DataFrame] = Future.successful(
+          t("rank0").read().drop("__b")
+            .join(newSrcs.select("node"), Seq("node"), "left_anti")
+            .unionByName(newSrcs))
+        var dirty = newSrcs.select("node")
+        var dirtyB = bucketsOf(dirty, "node")
+        if (collectStats) stats += 0 -> dirty.count()
+        for (i <- 1 to iters) {
+          // cone growth: changed inputs ∪ out-neighbors of the prior round's
+          // dirty set (bucket-pruned out-edge scan). persist + the buckets
+          // collect materializes the set in ONE job.
+          val prop =
+            if (dirtyB.isEmpty) changedInputs.limit(0)
+            else eoV.filter(col("__b").isin(dirtyB: _*))
+              .join(dirty.withColumnRenamed("node", "src"), "src").select("dst")
+          val dirtyNow = changedInputs.unionByName(prop).distinct().persist()
+          cached += dirtyNow
+          val ib = bucketsOf(dirtyNow, "dst")
+          if (collectStats) stats += i -> dirtyNow.count()
+          val round = i
+          // exact recompute of the dirty nodes from the patched (t-1) history:
+          // in-edges bucket-pruned to the dirty dsts
+          val rF = prevF.map { prev =>
+            roundStep(eiV.filter(col("__b").isin(ib: _*)).drop("__b")
+              .join(dirtyNow, Seq("dst")), prev).localCheckpoint()
+          }
+          patchFs += rF.map(rec => upsertByKey(t(s"rank$round"), rec, "node"))
+          prevF = rF.map { rec =>
+            t(s"rank$round").read().drop("__b")
+              .join(rec.select("node"), Seq("node"), "left_anti")
+              .unionByName(rec)
+          }
+          dirty = dirtyNow.withColumnRenamed("dst", "node")
+          dirtyB = ib
         }
-        patchFs += rF.map(rec => upsertByKey(t(s"rank$round"), rec, "node"))
-        prevF = rF.map { rec =>
-          t(s"rank$round").read().drop("__b")
-            .join(rec.select("node"), Seq("node"), "left_anti")
-            .unionByName(rec)
-        }
-        dirty = dirtyNow.withColumnRenamed("dst", "node")
-        dirtyB = ib
       }
-      awaitPatches(patchFs.result())
+      Par.settle(patchFs.result())
+      rounds.get
       cached.result().foreach(_.unpersist(false))
       lastAppendStats = AppendStats(stats.result())
       ranks(iters)
@@ -528,69 +513,70 @@ object Graph {
       // so the merge join runs once and the durable-write latency overlaps
       // the rounds
       val Seq(eoM, eiM) = lcPar(eoMerged, eiMerged)
-      val patchFs = Seq.newBuilder[scala.concurrent.Future[Unit]]
-      patchFs ++= startPatches(Seq(
-        () => eo.promote(eo.stagePatch(
-          eoM.repartition(eoTouch.length, col("__b")), Seq("__b"))),
-        () => ei.promote(ei.stagePatch(
-          eiM.repartition(eiTouch.length.max(1), col("__b")), Seq("__b")))))
-      val eoV = eo.read().filter(!col("__b").isin(eoTouch: _*)).unionByName(eoM)
-      val eiV = ei.read().filter(!col("__b").isin(eiTouch: _*)).unionByName(eiM)
-      // permanently-changed inputs: former dsts of the deleted nodes +
-      // remaining dsts of re-divided survivors (deleted nodes themselves
-      // are purged, never recomputed)
-      // round 0: the deleted nodes and the zero-outdeg survivors leave.
-      // changedInputs and r0Gone are independent — materialized together.
-      val Seq(changedInputs, r0Gone) = lcPar(
-        notDel("dst")(
-          dOut.select("dst").unionByName(oldTouched.select("dst")).distinct()),
-        del.unionByName(zeroSrcs))
-      patchFs ++= startPatches(Seq(() => patchByKey(t("rank0"), r0Gone,
-        del.limit(0).withColumn("rank", lit(Scale)), "node")))
-      // same pipelining as [[append]]: the dirty-cone chain advances on
-      // the main thread; each round's exact recompute + patch chains off
-      // the previous round's on a future.
-      import scala.concurrent.Future
-      import scala.concurrent.ExecutionContext.Implicits.global
-      var prevF: Future[DataFrame] = Future.successful(
-        t("rank0").read().drop("__b").join(r0Gone, Seq("node"), "left_anti"))
-      var dirty = changedInputs.limit(0).withColumnRenamed("dst", "node")
-      var dirtyB: Array[Integer] = Array.empty
+      val patchFs = Seq.newBuilder[Future[Unit]]
       val cached = Seq.newBuilder[DataFrame]
       val stats = Seq.newBuilder[(Int, Long)]
-      if (collectStats) stats += 0 -> del.count()
-      for (i <- 1 to iters) {
-        val prop =
-          if (dirtyB.isEmpty) changedInputs.limit(0)
-          else eoV.filter(col("__b").isin(dirtyB: _*))
-            .join(dirty.withColumnRenamed("node", "src"), "src").select("dst")
-        val dirtyNow = changedInputs.unionByName(prop).distinct().persist()
-        cached += dirtyNow
-        val ib = bucketsOf(dirtyNow, "dst")
-        if (collectStats) stats += i -> dirtyNow.count()
-        // dirty nodes whose recompute yields no row (every surviving
-        // in-contribution gone) vanish, exactly as a rebuild's roundStep
-        // would omit them; deleted nodes are purged unconditionally
-        val rmKeys = dirtyNow.withColumnRenamed("dst", "node").unionByName(del)
-        val round = i
-        val dirtyPrev = dirty
-        val rF = prevF.map { prev =>
-          (if (ib.isEmpty) dirtyPrev.limit(0).withColumn("rank", lit(Scale))
-           else roundStep(
-             eiV.filter(col("__b").isin(ib: _*)).drop("__b")
-               .join(dirtyNow, Seq("dst")),
-             prev)).localCheckpoint()
+      // every started patch settles before this returns or rethrows
+      val rounds = scala.util.Try {
+        patchFs += Future(eo.promote(eo.stagePatch(
+          eoM.repartition(eoTouch.length, col("__b")), Seq("__b"))))
+        patchFs += Future(ei.promote(ei.stagePatch(
+          eiM.repartition(eiTouch.length.max(1), col("__b")), Seq("__b"))))
+        val eoV = eo.read().filter(!col("__b").isin(eoTouch: _*)).unionByName(eoM)
+        val eiV = ei.read().filter(!col("__b").isin(eiTouch: _*)).unionByName(eiM)
+        // permanently-changed inputs: former dsts of the deleted nodes +
+        // remaining dsts of re-divided survivors (deleted nodes themselves
+        // are purged, never recomputed)
+        // round 0: the deleted nodes and the zero-outdeg survivors leave.
+        // changedInputs and r0Gone are independent — materialized together.
+        val Seq(changedInputs, r0Gone) = lcPar(
+          notDel("dst")(
+            dOut.select("dst").unionByName(oldTouched.select("dst")).distinct()),
+          del.unionByName(zeroSrcs))
+        patchFs += Future(patchByKey(t("rank0"), r0Gone,
+          del.limit(0).withColumn("rank", lit(Scale)), "node"))
+        // same pipelining as [[append]]: the dirty-cone chain advances on
+        // the main thread; each round's exact recompute + patch chains off
+        // the previous round's on a future.
+        var prevF: Future[DataFrame] = Future.successful(
+          t("rank0").read().drop("__b").join(r0Gone, Seq("node"), "left_anti"))
+        var dirty = changedInputs.limit(0).withColumnRenamed("dst", "node")
+        var dirtyB: Array[Integer] = Array.empty
+        if (collectStats) stats += 0 -> del.count()
+        for (i <- 1 to iters) {
+          val prop =
+            if (dirtyB.isEmpty) changedInputs.limit(0)
+            else eoV.filter(col("__b").isin(dirtyB: _*))
+              .join(dirty.withColumnRenamed("node", "src"), "src").select("dst")
+          val dirtyNow = changedInputs.unionByName(prop).distinct().persist()
+          cached += dirtyNow
+          val ib = bucketsOf(dirtyNow, "dst")
+          if (collectStats) stats += i -> dirtyNow.count()
+          // dirty nodes whose recompute yields no row (every surviving
+          // in-contribution gone) vanish, exactly as a rebuild's roundStep
+          // would omit them; deleted nodes are purged unconditionally
+          val rmKeys = dirtyNow.withColumnRenamed("dst", "node").unionByName(del)
+          val round = i
+          val dirtyPrev = dirty
+          val rF = prevF.map { prev =>
+            (if (ib.isEmpty) dirtyPrev.limit(0).withColumn("rank", lit(Scale))
+             else roundStep(
+               eiV.filter(col("__b").isin(ib: _*)).drop("__b")
+                 .join(dirtyNow, Seq("dst")),
+               prev)).localCheckpoint()
+          }
+          patchFs += rF.map(rec => patchByKey(t(s"rank$round"), rmKeys, rec, "node"))
+          prevF = rF.map { rec =>
+            t(s"rank$round").read().drop("__b")
+              .join(rmKeys, Seq("node"), "left_anti")
+              .unionByName(rec)
+          }
+          dirty = dirtyNow.withColumnRenamed("dst", "node")
+          dirtyB = ib
         }
-        patchFs += rF.map(rec => patchByKey(t(s"rank$round"), rmKeys, rec, "node"))
-        prevF = rF.map { rec =>
-          t(s"rank$round").read().drop("__b")
-            .join(rmKeys, Seq("node"), "left_anti")
-            .unionByName(rec)
-        }
-        dirty = dirtyNow.withColumnRenamed("dst", "node")
-        dirtyB = ib
       }
-      awaitPatches(patchFs.result())
+      Par.settle(patchFs.result())
+      rounds.get
       cached.result().foreach(_.unpersist(false))
       lastDeleteStats = AppendStats(stats.result())
       ranks(iters)

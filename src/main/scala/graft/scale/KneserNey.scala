@@ -1,6 +1,6 @@
 package graft.scale
 
-import graft.core.{Q, Tables}
+import graft.core.{Par, Q, Tables}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -455,16 +455,9 @@ WHERE d.doc_id % 2 = 1 ORDER BY d.doc_id"""
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
         .option("checkpointLocation", s"$wh/ckpt")
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          // the two count indexes are independent (separate tables, own
-          // replay gates) — overlap their batch passes (guide §2.6 shape);
-          // always settle the future before propagating a main-thread
-          // failure (the ADVICE r20 orphaned-future hazard)
-          val f = scala.concurrent.Future(biIdx.processBatch(b, id))(
-            scala.concurrent.ExecutionContext.global)
-          val main = scala.util.Try(triIdx.processBatch(b, id))
-          scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf)
-          main.get
-          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
+          // independent indexes (separate tables, own replay gates)
+          Par.both(biIdx.processBatch(b, id), triIdx.processBatch(b, id))
+          ()
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()

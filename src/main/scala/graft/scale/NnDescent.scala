@@ -1,5 +1,6 @@
 package graft.scale
 
+import graft.core.Par
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -400,28 +401,14 @@ object NnDescent {
         .select(col("qid").as("u"), col("nid").as("v"), col("score"))
       val gNew = links.join(graph.read().select("u").distinct(),
         Seq("u"), "left_anti").localCheckpoint(false)
-      // stage the codes append CONCURRENTLY with the walk+graph stage (the
-      // SpanGuard overlap pattern): the two stage writes are independent —
-      // only the PROMOTE order (graph first, then codes) carries the crash
-      // argument above, and both promotes stay on this thread, in order.
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
-      val codesStagedF = scala.concurrent.Future {
-        codes.stageAppend(NnDescent.codes(fresh, idCol, vecCol, metaCols))
-      }
-      try {
+      // the codes append stages while the walk runs; graph promotes first,
+      // then codes (the crash argument above)
+      val (codesStaged, _) = Par.both(
+        codes.stageAppend(NnDescent.codes(fresh, idCol, vecCol, metaCols)),
         // the count is the walk's ONE action: seeds, rounds and the
         // anti-join all materialize here through the lazy checkpoint chain
-        if (gNew.count() > 0) graph.promote(graph.stageAppend(gNew))
-      } finally {
-        // always await before propagating: an orphaned stage write racing a
-        // retry into the same version directory is the ADVICE r20 hazard
-        scala.concurrent.Await.ready(codesStagedF,
-          scala.concurrent.duration.Duration.Inf)
-        ()
-      }
-      codes.promote(scala.concurrent.Await.result(codesStagedF,
-        scala.concurrent.duration.Duration.Inf))
+        if (gNew.count() > 0) graph.promote(graph.stageAppend(gNew)))
+      codes.promote(codesStaged)
       graph.compactIfNeeded(maxChainDepth)
       codes.compactIfNeeded(maxChainDepth)
     }
@@ -435,24 +422,15 @@ object NnDescent {
     def compact(): Unit = {
       val dead = ts.dead()
       val cz = policy.checkpoint(ts.minus(codes.read()))
-      // stage the codes write CONCURRENTLY with the graph rebuild — both
-      // read only the checkpointed cz; promote order (codes, then graph)
-      // is unchanged and stays on this thread
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.global
-      val codesStagedF = scala.concurrent.Future { codes.stage(cz) }
-      val e = try {
+      // the codes stage overlaps the graph rebuild (both read only the
+      // checkpointed cz); codes promotes first, then graph
+      val (codesStaged, e) = Par.both(codes.stage(cz), {
         var g = cut(initGraph(cz.select("nid"), graphK, buckets), policy)
         for (_ <- 1 to iters)
           g = cut(descentRound(g, cz, graphK, policy), policy)
         g
-      } finally {
-        scala.concurrent.Await.ready(codesStagedF,
-          scala.concurrent.duration.Duration.Inf)
-        ()
-      }
-      codes.promote(scala.concurrent.Await.result(codesStagedF,
-        scala.concurrent.duration.Duration.Inf))
+      })
+      codes.promote(codesStaged)
       graph.promote(graph.stage(e))
       if (dead.nonEmpty) ts.truncate()
     }

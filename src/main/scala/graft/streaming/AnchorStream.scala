@@ -49,8 +49,7 @@ final class AnchorCountIndex(spark: SparkSession, root: String,
     if (counts.exists && counts.currentTag.contains(tag)) return
     val partial = build(inputFilter(batch))
       .sortWithinPartitions(keyCols.head)
-    if (counts.exists) counts.promote(counts.stageAppend(partial), Some(tag))
-    else counts.promote(counts.stage(partial), Some(tag))
+    counts.promote(counts.stageAppendOrCreate(partial), Some(tag))
     if (counts.chainDepth > maxChainDepth) compact()
   }
 

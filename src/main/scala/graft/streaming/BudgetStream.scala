@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Par
 import graft.write.VersionedTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -103,36 +104,23 @@ final class BudgetAdmitIndex(
       .filter(col("consumed") + col("__before") < col("__budget"))
       .select(col("id"), col("stratum"), col("n_tokens"), col("seq"))
       .localCheckpoint(false)
-    // overlapped stage writes, ordered promotes (admitted first — its tag
-    // is the replay gate); the future settles before any promote or
-    // rethrow (ADVICE r20). The two stages can race adm's lazy
-    // materialization and each compute the per-stratum window — accepted:
-    // it is one window over ONE micro-batch on otherwise-idle cores,
-    // cheaper than the extra serialized checkpoint job that would pin it.
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val admStagedF =
-      if (admittedDone) None
-      else Some(scala.concurrent.Future {
-        if (admitted.exists) admitted.stageAppend(adm) else admitted.stage(adm)
-      })
-    val stateStaged = try {
-      val newState = st
-        .join(adm.groupBy("stratum").agg(sum("n_tokens").as("__add")),
-          Seq("stratum"), "left")
-        .select(col("stratum"),
-          (col("consumed") + coalesce(col("__add"), lit(0L))).as("consumed"),
-          greatest(col("max_seq"), lit(batchMax)).as("max_seq"))
-      state.stage(newState)
-    } finally {
-      admStagedF.foreach(f => scala.concurrent.Await.ready(f,
-        scala.concurrent.duration.Duration.Inf))
-    }
-    admStagedF.foreach { f =>
-      admitted.promote(scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf), Some(tag))
+    // pinned by one count before the overlap: the admitted stage and the
+    // state fold both read adm, and two recomputes could break (seq, id)
+    // ties differently, splitting admissions from the consumed totals
+    adm.count()
+    val newState = st
+      .join(adm.groupBy("stratum").agg(sum("n_tokens").as("__add")),
+        Seq("stratum"), "left")
+      .select(col("stratum"),
+        (col("consumed") + coalesce(col("__add"), lit(0L))).as("consumed"),
+        greatest(col("max_seq"), lit(batchMax)).as("max_seq"))
+    // the stages overlap; admitted promotes first — its tag is the replay gate
+    val (admStaged, stateStaged) = Par.both(
+      if (admittedDone) None else Some(admitted.stageAppendOrCreate(adm)),
+      state.stage(newState))
+    admStaged.foreach { v =>
+      admitted.promote(v, Some(tag))
       admitted.compactIfNeeded(maxChainDepth)
-      ()
     }
     state.promote(stateStaged, Some(tag))
     ()

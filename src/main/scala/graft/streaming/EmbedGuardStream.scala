@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Par
 import graft.scale.Similarity
 import graft.write.VersionedTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -62,18 +63,6 @@ final class EmbedGuardIndex(spark: SparkSession, root: String,
       .select(col("vec_id").cast("long").as("vec_id")).distinct()
     val nulls = if (dropped.exists)
       nulls0.join(dropped.read(), Seq("vec_id"), "left_anti") else nulls0
-    // the dropped and admitted STAGE writes are independent (two tables,
-    // disjoint inputs) and overlap via futures — the SpanGuard pattern; the
-    // PROMOTES stay on this thread in the protocol order (dropped first,
-    // then admitted, whose tag is the batch-completion gate — a crash after
-    // the admitted promote must leave the nulls already recorded). Both
-    // futures settle before any promote and before rethrowing (ADVICE r20).
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val droppedExisted = dropped.exists
-    val nullsStagedF = scala.concurrent.Future {
-      if (droppedExisted) dropped.stageAppend(nulls) else dropped.stage(nulls)
-    }
     val cz = Similarity.quantizeInt8(batch.filter(col("embedding").isNotNull))
       .select(col("vec_id").cast("long").as("vec_id"), col("qcode").as("cc"))
     val dot = Similarity.int8Dot(col("cc"), col("ec"))
@@ -87,18 +76,15 @@ final class EmbedGuardIndex(spark: SparkSession, root: String,
       .join(flagged, Seq("vec_id"), "left_anti")
     // torn-retry anti-join: a replayed batch must not duplicate ids the
     // crashed attempt already appended
-    val admittedExisted = admitted.exists
-    val adm = if (admittedExisted)
+    val adm = if (admitted.exists)
       adm0.join(admitted.read(), Seq("vec_id"), "left_anti") else adm0
-    val admStagedF = scala.concurrent.Future {
-      if (admittedExisted) admitted.stageAppend(adm) else admitted.stage(adm)
-    }
-    val settled = Seq(nullsStagedF, admStagedF).map(f => scala.util.Try(
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
-    settled.foreach(_.get)
-    dropped.promote(settled(0).get, Some(tag))
+    // the two stages overlap; dropped promotes first — admitted's tag is the
+    // batch-completion gate, so a crash after it must find the nulls recorded
+    val (droppedStaged, admStaged) = Par.both(
+      dropped.stageAppendOrCreate(nulls), admitted.stageAppendOrCreate(adm))
+    dropped.promote(droppedStaged, Some(tag))
     if (dropped.chainDepth > maxChainDepth) { dropped.compact(); () }
-    admitted.promote(settled(1).get, Some(tag))
+    admitted.promote(admStaged, Some(tag))
     if (admitted.chainDepth > maxChainDepth) { admitted.compact(); () }
   }
 

@@ -158,14 +158,9 @@ final class NearDupIndex(spark: SparkSession, root: String,
       .localCheckpoint(false)
     // 3. grow both tables with the accepted rows
     val keptSigs = sigs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-    if (!survivorsDone) {
-      if (survivors.exists) survivors.promote(survivors.stageAppend(kept), Some(tag))
-      else survivors.promote(survivors.stage(kept), Some(tag))
-    }
-    if (!signaturesDone) {
-      if (signatures.exists) signatures.promote(signatures.stageAppend(keptSigs), Some(tag))
-      else signatures.promote(signatures.stage(keptSigs), Some(tag))
-    }
+    if (!survivorsDone) survivors.promote(survivors.stageAppendOrCreate(kept), Some(tag))
+    if (!signaturesDone)
+      signatures.promote(signatures.stageAppendOrCreate(keptSigs), Some(tag))
     // bound the append chains a continuous crawl accumulates: read cost
     // stays O(maxChainDepth) union legs, the O(table) rewrite amortizes to
     // one every ~maxChainDepth batches (policy law in StreamingNearDupSpec).

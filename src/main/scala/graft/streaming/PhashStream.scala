@@ -141,8 +141,7 @@ final class PhashIndex(spark: SparkSession, root: String,
            Seq("asset_id"), "left_anti")
        })
         .localCheckpoint(false) // materialized by the stage write (r21)
-    if (hashes.exists) hashes.promote(hashes.stageAppend(kept), Some(tag))
-    else hashes.promote(hashes.stage(kept), Some(tag))
+    hashes.promote(hashes.stageAppendOrCreate(kept), Some(tag))
     // bound the append chain; a rewrite that's being paid anyway also
     // clears pending tombstones (the NearDupIndex policy)
     if (hashes.chainDepth > maxChainDepth) compactPurge()
@@ -322,8 +321,7 @@ final class VideoPhashIndex(spark: SparkSession, root: String,
            Seq("asset_id"), "left_anti")
        })
         .localCheckpoint(false) // materialized by the stage write (r21)
-    if (frames.exists) frames.promote(frames.stageAppend(kept), Some(tag))
-    else frames.promote(frames.stage(kept), Some(tag))
+    frames.promote(frames.stageAppendOrCreate(kept), Some(tag))
     if (frames.chainDepth > maxChainDepth) compactPurge()
     ()
   }

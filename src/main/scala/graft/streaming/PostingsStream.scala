@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Par
 import graft.scale.Retrieval
 import graft.write.VersionedTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -107,12 +108,8 @@ final class PostingsIndex(spark: SparkSession, root: String,
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     val tag = s"batch=$batchId"
-    val postingsDone = postings.exists && postings.currentTag.contains(tag)
-    val lengthsDone = !maintainSidecars ||
-      (lengths.exists && lengths.currentTag.contains(tag))
-    val statsDone = !maintainSidecars ||
-      (stats.exists && stats.currentTag.contains(tag))
-    if (postingsDone && lengthsDone && statsDone) return
+    val done = (t: VersionedTable) => t.currentTag.contains(tag)
+    if (done(postings) && (!maintainSidecars || done(lengths) && done(stats))) return
     val incoming = batch.select(col("doc_id"), col("text"))
       .filter(col("text").isNotNull)
     // a tombstoned id stays deleted while its tombstone lives: admitting it
@@ -121,35 +118,18 @@ final class PostingsIndex(spark: SparkSession, root: String,
     // checkpoint: the first stage write to touch it materializes the scan +
     // anti-join; the concurrent stages below can race that materialization
     // and rescan the batch (bounded at batch size, in otherwise-idle
-    // tasks) — still at-most what the OLD form paid, which recomputed the
+    // tasks; the anti-join is deterministic, so a rescan yields the same
+    // rows) — still at-most what the OLD form paid, which recomputed the
     // anti-join serially in all three stages (r21).
     val live = ts.minus(incoming).localCheckpoint(false)
-    val p = build(live).sortWithinPartitions("term")
     val lp = lenPartial(live).localCheckpoint(false)
-    // the three stage WRITES are independent (three separate tables) and
-    // overlap via futures — the SpanGuard pattern; the tagged PROMOTES stay
-    // on this thread in the original order (postings, lengths, stats),
-    // which is the order the redelivery protocol's crash argument uses.
-    // Every future is awaited before any promote and before rethrowing (a
-    // failed/orphaned stage racing a retry into the same version directory
-    // is the ADVICE r20 hazard).
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    def staged(t: VersionedTable, df: DataFrame) =
-      scala.concurrent.Future { if (t.exists) t.stageAppend(df) else t.stage(df) }
-    val pF = if (!postingsDone) Some(staged(postings, p)) else None
-    val lF = if (maintainSidecars && !lengthsDone) Some(staged(lengths, lp)) else None
-    val sF = if (maintainSidecars && !statsDone) Some(staged(stats, statsPartial(lp))) else None
-    val all = Seq(pF, lF, sF).flatten
-    val results = all.map(f => scala.util.Try(
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
-    results.foreach(_.get) // first stage failure rethrows AFTER all settled
-    pF.foreach(f => postings.promote(scala.concurrent.Await.result(f,
-      scala.concurrent.duration.Duration.Inf), Some(tag)))
-    lF.foreach(f => lengths.promote(scala.concurrent.Await.result(f,
-      scala.concurrent.duration.Duration.Inf), Some(tag)))
-    sF.foreach(f => stats.promote(scala.concurrent.Await.result(f,
-      scala.concurrent.duration.Duration.Inf), Some(tag)))
+    val parts = Seq(postings -> build(live).sortWithinPartitions("term")) ++
+      (if (maintainSidecars) Seq(lengths -> lp, stats -> statsPartial(lp)) else Nil)
+    val todo = parts.filterNot(p => done(p._1))
+    // independent tables: the stages overlap; the tagged promotes follow in
+    // the order the redelivery protocol's crash argument uses
+    val versions = Par.all(todo.map { case (t, df) => () => t.stageAppendOrCreate(df) })
+    todo.zip(versions).foreach { case ((t, _), v) => t.promote(v, Some(tag)) }
     // chain-depth policy: bounded read cost for a continuous drain
     // (amortized rewrite — see VersionedTable.compactIfNeeded); routed
     // through the purge-aware compaction so pending tombstones clear too
@@ -293,10 +273,8 @@ final class FieldedPostingsIndex(spark: SparkSession, root: String,
 
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     val tag = s"batch=$batchId"
-    val postingsDone = postings.exists && postings.currentTag.contains(tag)
-    val lengthsDone = lengths.exists && lengths.currentTag.contains(tag)
-    val statsDone = stats.exists && stats.currentTag.contains(tag)
-    if (postingsDone && lengthsDone && statsDone) return
+    val done = (t: VersionedTable) => t.currentTag.contains(tag)
+    if (done(postings) && done(lengths) && done(stats)) return
     // reject-while-tombstoned (the PostingsIndex append-growth asymmetry);
     // lazy checkpoints, materialized ONCE by the count below BEFORE the
     // concurrent stage writes launch — three racing stages would otherwise
@@ -307,27 +285,12 @@ final class FieldedPostingsIndex(spark: SparkSession, root: String,
       .localCheckpoint(false)
     val lp = lenPartial(live).localCheckpoint(false)
     lp.count()
-    // overlapped stage writes + ordered promotes: PostingsIndex.processBatch's
-    // protocol, verbatim (see its comment for the await/crash argument)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    def staged(t: VersionedTable, df: DataFrame) =
-      scala.concurrent.Future { if (t.exists) t.stageAppend(df) else t.stage(df) }
-    val pF = if (!postingsDone) Some(staged(postings,
-      Retrieval.fieldedInvertedIndex(live, fields).sortWithinPartitions("term")))
-    else None
-    val lF = if (!lengthsDone) Some(staged(lengths, lp)) else None
-    val sF = if (!statsDone) Some(staged(stats, statsPartial(lp))) else None
-    val all = Seq(pF, lF, sF).flatten
-    val results = all.map(f => scala.util.Try(
-      scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
-    results.foreach(_.get)
-    pF.foreach(f => postings.promote(scala.concurrent.Await.result(f,
-      scala.concurrent.duration.Duration.Inf), Some(tag)))
-    lF.foreach(f => lengths.promote(scala.concurrent.Await.result(f,
-      scala.concurrent.duration.Duration.Inf), Some(tag)))
-    sF.foreach(f => stats.promote(scala.concurrent.Await.result(f,
-      scala.concurrent.duration.Duration.Inf), Some(tag)))
+    val todo = Seq(
+      postings -> Retrieval.fieldedInvertedIndex(live, fields).sortWithinPartitions("term"),
+      lengths -> lp, stats -> statsPartial(lp)).filterNot(p => done(p._1))
+    // PostingsIndex.processBatch's overlap and promote order
+    val versions = Par.all(todo.map { case (t, df) => () => t.stageAppendOrCreate(df) })
+    todo.zip(versions).foreach { case ((t, _), v) => t.promote(v, Some(tag)) }
     if (postings.chainDepth > maxChainDepth) compact()
   }
 

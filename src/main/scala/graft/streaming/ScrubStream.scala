@@ -39,8 +39,7 @@ final class ScrubIndex(spark: SparkSession, root: String, n: Int = 8,
     if (clean.exists && clean.currentTag.contains(tag)) return
     val scrubbed = Curation.scrubAgainstGrams(
       batch.filter(col("text").isNotNull), grams.read(), n)
-    if (clean.exists) clean.promote(clean.stageAppend(scrubbed), Some(tag))
-    else clean.promote(clean.stage(scrubbed), Some(tag))
+    clean.promote(clean.stageAppendOrCreate(scrubbed), Some(tag))
     if (clean.chainDepth > maxChainDepth) { clean.compact(); () }
   }
 }

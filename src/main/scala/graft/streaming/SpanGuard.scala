@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Par
 import graft.write.VersionedTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -83,17 +84,12 @@ final class SpanGuardIndex(spark: SparkSession, root: String,
     val admTag = if (growSpans) None else Some(tag)
     // the two staging writes are independent of each other (both read only
     // the checkpointed batch spans and the PRE-promote table states), so
-    // they run concurrently and back-fill each other's task tails; the
-    // PROMOTES stay strictly ordered (admitted, then spans) — the crash
-    // story below depends on that order, not on the stage order
-    val admStagedF = scala.concurrent.Future {
-      // the job description is a THREAD-LOCAL: set and clear it inside this
-      // pooled thread, or it leaks onto unrelated later jobs (ADVICE r20)
+    // they overlap; the PROMOTES stay strictly ordered (admitted, then
+    // spans) — the crash story below depends on that order
+    val (admStaged, spansStaged) = Par.both({
       sc.setJobDescription(s"spanguard $tag: admitted append")
-      try { if (admitted.exists) admitted.stageAppend(adm) else admitted.stage(adm) }
-      finally sc.setJobDescription(null)
-    }(scala.concurrent.ExecutionContext.global)
-    val spansStaged = try {
+      admitted.stageAppendOrCreate(adm)
+    }, {
       if (!growSpans) None
       else {
         // ALL batch spans enter the index (the re-crawl rule): admission
@@ -103,17 +99,9 @@ final class SpanGuardIndex(spark: SparkSession, root: String,
             .join(spans.read(), Seq("h"), "left_anti")
           else ds.select("h").distinct()
         sc.setJobDescription(s"spanguard $tag: spans append")
-        Some(if (spans.exists) spans.stageAppend(fresh) else spans.stage(fresh))
+        Some(spans.stageAppendOrCreate(fresh))
       }
-    } finally {
-      // settle the staging future even when the spans path throws — an
-      // orphaned stage write racing a retried batch is the ADVICE r20 hazard
-      scala.concurrent.Await.ready(admStagedF,
-        scala.concurrent.duration.Duration.Inf)
-      ()
-    }
-    val admStaged = scala.concurrent.Await.result(
-      admStagedF, scala.concurrent.duration.Duration.Inf)
+    })
     admitted.promote(admStaged, admTag)
     spansStaged.foreach { v =>
       spans.promote(v, Some(tag))

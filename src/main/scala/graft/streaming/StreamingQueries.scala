@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.core.{Q, Tables}
+import graft.core.{Par, Q, Tables}
 import graft.write.VersionedTable
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -2163,17 +2163,9 @@ object StreamingQueries {
         .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
         .option("checkpointLocation", s"$wh/ckpt")
         .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          // independent indexes (separate tables, own replay gates) —
-          // overlap their batch passes (guide §2.6 shape). The future is
-          // ALWAYS awaited before any exception propagates: an orphaned
-          // pass racing a retried batch's writes into the same version
-          // directory is the ADVICE r20 hazard.
-          val f = scala.concurrent.Future(uniIdx.processBatch(b, id))(
-            scala.concurrent.ExecutionContext.global)
-          val main = scala.util.Try(biIdx.processBatch(b, id))
-          scala.concurrent.Await.ready(f, scala.concurrent.duration.Duration.Inf)
-          main.get
-          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)
+          // independent indexes (separate tables, own replay gates)
+          Par.both(uniIdx.processBatch(b, id), biIdx.processBatch(b, id))
+          ()
         }
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()

@@ -73,8 +73,7 @@ final class TriangleStream(
         Some(stats.stage(next))
       }
     val edgesStaged =
-      if (edgesDone) None
-      else Some(if (edges.exists) edges.stageAppend(newEdges) else edges.stage(newEdges))
+      if (edgesDone) None else Some(edges.stageAppendOrCreate(newEdges))
     statsStaged.foreach(v => stats.promote(v, Some(tag)))
     edgesStaged.foreach(v => edges.promote(v, Some(tag)))
     edges.compactIfNeeded(maxChainDepth)

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import graft.core.Par
 import graft.write.VersionedTable
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -87,14 +88,11 @@ final class TtlDedupIndex(
       s"TtlDedupIndex: batch $batchId min day $batchMin precedes the " +
         s"state watermark $wmPrev — the feed must be day-ordered")
     // the admitted STAGE overlaps the state fold (independent tables; both
-    // read only the checkpointed batch/state) — promotes stay on this
-    // thread; the scaladoc's crash argument holds on either promote order,
-    // and the future settles before any promote or rethrow (ADVICE r20)
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val admStagedF =
+    // read only the checkpointed batch/state); the scaladoc's crash
+    // argument holds on either promote order
+    val (admStaged, (wm, merged)) = Par.both(
       if (admittedDone) None
-      else Some(scala.concurrent.Future {
+      else {
         val prevInBatch = lag("day", 1)
           .over(Window.partitionBy("key").orderBy("day", "id"))
         val adm = batch
@@ -103,24 +101,18 @@ final class TtlDedupIndex(
           .withColumn("__prev", coalesce(col("__prev_b"), col("__prev_s")))
           .filter(col("__prev").isNull || col("day") - col("__prev") > ttlDays)
           .select(col("id"), col("key"), col("day"))
-        if (admitted.exists) admitted.stageAppend(adm) else admitted.stage(adm)
+        Some(admitted.stageAppendOrCreate(adm))
+      }, {
+        // idempotent fold: max-merge last sightings, evict past the watermark
+        val m = st
+          .unionByName(batch.groupBy("key").agg(max("day").as("last_seen")))
+          .groupBy("key").agg(max("last_seen").as("last_seen"))
+          .localCheckpoint(false)
+        (m.agg(max("last_seen")).head().getLong(0), m)
       })
-    val (wm, merged) = try {
-      // idempotent fold: max-merge last sightings, evict past the watermark
-      val m = st
-        .unionByName(batch.groupBy("key").agg(max("day").as("last_seen")))
-        .groupBy("key").agg(max("last_seen").as("last_seen"))
-        .localCheckpoint(false)
-      (m.agg(max("last_seen")).head().getLong(0), m)
-    } finally {
-      admStagedF.foreach(f => scala.concurrent.Await.ready(f,
-        scala.concurrent.duration.Duration.Inf))
-    }
-    admStagedF.foreach { f =>
-      admitted.promote(scala.concurrent.Await.result(f,
-        scala.concurrent.duration.Duration.Inf), Some(tag))
+    admStaged.foreach { v =>
+      admitted.promote(v, Some(tag))
       admitted.compactIfNeeded(maxChainDepth)
-      ()
     }
     val live = merged.filter(lit(wm) - col("last_seen") <= ttlDays)
     state.promote(state.stage(live), Some(tag))

@@ -1,5 +1,6 @@
 package graft.write
 
+import graft.core.Par
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -144,21 +145,9 @@ final class TombstoneSet(spark: SparkSession, root: String, idCol: String,
   def purgeInto(primaries: (VersionedTable, DataFrame => DataFrame)*): Unit =
     dead() match {
       case Some(d) =>
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.global
-        val staged = primaries.map { case (t, reshape) =>
-          scala.concurrent.Future {
-            t.stage(reshape(t.read().join(d, Seq(idCol), "left_anti")))
-          }
-        }
-        // await EVERY stage before the first promote (a failed stage must
-        // not leave a prefix of the primaries promoted with the rest stale)
-        // and before rethrowing (an orphaned future could otherwise race a
-        // retry's stage into the same version directory — the ADVICE r20
-        // hazard)
-        val results = staged.map(f => scala.util.Try(
-          scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf)))
-        val versions = results.map(_.get)
+        val versions = Par.all(primaries.map { case (t, reshape) =>
+          () => t.stage(reshape(t.read().join(d, Seq(idCol), "left_anti")))
+        })
         primaries.zip(versions).foreach { case ((t, _), v) =>
           t.promote(v, t.currentTag)
         }

@@ -561,6 +561,12 @@ final class VersionedTable(spark: SparkSession, root: String) {
     next
   }
 
+  /** The append-only logs' growth step: [[stageAppend]] onto the current
+    * version, or [[stage]] the first one.
+    */
+  def stageAppendOrCreate(df: DataFrame): Int =
+    if (exists) stageAppend(df) else stage(df)
+
   /** W1/W2 full refresh: stage + promote. */
   def fullRefresh(df: DataFrame): Unit = promote(stage(df))
 

@@ -88,4 +88,19 @@ class BudgetStreamSpec extends SparkSpec {
     assert(admitted(ix) === a1 &&
       ix.consumed().as[(String, Long)].collect().toMap === s1)
   }
+
+  test("a batch repeating an (id, seq) row: admitted tokens == folded consumed") {
+    val ix = newIndex("en" -> 10L, "de" -> 6L)
+    // id 1 and id 5 arrive twice at the same seq with different token
+    // counts: the window's order among the tied rows is unspecified, so
+    // the admitted stage and the state fold must read ONE materialization
+    val batch = rows((1L, "en", 6L, 0L), (1L, "en", 3L, 0L), (2L, "en", 4L, 0L),
+      (5L, "de", 5L, 0L), (5L, "de", 2L, 0L), (3L, "en", 2L, 1L), (4L, "de", 1L, 1L))
+      .repartition(3)
+    ix.processBatch(batch, 0)
+    ix.processBatch(rows((6L, "en", 1L, 2L), (7L, "de", 1L, 2L)), 1)
+    val adm = ix.admitted.read().groupBy("stratum").agg(sum("n_tokens"))
+      .as[(String, Long)].collect().toMap
+    assert(ix.consumed().as[(String, Long)].collect().toMap === adm)
+  }
 }

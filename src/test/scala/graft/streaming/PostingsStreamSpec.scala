@@ -208,6 +208,35 @@ class PostingsStreamSpec extends SparkSpec {
       .as[(String, Long, Long)].collect().toSet === wantPostings)
   }
 
+  test("a failed stage promotes nothing; redelivery with a working build equals the uninterrupted index") {
+    val r = root("failstage")
+    val boom = udf { (t: String) =>
+      if (t.contains("MARKER")) throw new IllegalStateException("marker doc")
+      t
+    }
+    val failing = new PostingsIndex(spark, r,
+      build = df => Retrieval.invertedIndex(df.withColumn("text", boom(col("text")))))
+    failing.processBatch(b1.toDF("doc_id", "text"), 0L)
+    val tables = Seq(failing.postings, failing.lengths, failing.stats)
+    def committed = tables.map(t => (t.currentVersion, t.currentTag))
+    val before = committed
+    val marked = (b2 :+ ((12L, "MARKER spark"))).toDF("doc_id", "text")
+    intercept[Exception](failing.processBatch(marked, 1L))
+    // the lengths and stats stages succeeded, yet none of the three promoted
+    assert(committed === before)
+    val idx = new PostingsIndex(spark, r)
+    idx.processBatch(marked, 1L)
+    val want = new PostingsIndex(spark, root("failstage-want"))
+    want.processBatch(b1.toDF("doc_id", "text"), 0L)
+    want.processBatch(marked, 1L)
+    def content(ix: PostingsIndex) = (
+      ix.served().select("term", "doc_id", "tf").as[(String, Long, Long)].collect().toSet,
+      ix.servedLengths().select("doc_id", "len").as[(Long, Long)].collect().toSet,
+      ix.corpusTotals())
+    assert(content(idx) === content(want))
+    assert(Seq(idx.postings, idx.lengths, idx.stats).forall(_.currentTag.contains("batch=1")))
+  }
+
   test("bm25Serve plan: one term-pruned postings scan, no full-index aggregate") {
     val idx = new PostingsIndex(spark, root("plan"))
     idx.processBatch(b1.toDF("doc_id", "text"), 0L)
