@@ -33,14 +33,30 @@ object Multimodal {
     * feeds and [[graft.streaming.PhashStream]]'s byte-gated micro-batch
     * form): target = payload bytes / `bytesPerTask`, capped at cores, from
     * driver-side plan stats — shuffle only when the scan provides fewer
-    * splits than that.
+    * splits than that. A plan without computed stats (an RDD or memory
+    * source, a cached relation) reports `spark.sql.defaultSizeInBytes`;
+    * that size is unknown, so the guard leaves the plan alone rather than
+    * shuffling every small batch.
     */
   private[graft] def spreadForDecode(df: DataFrame, bytesPerTask: Long): DataFrame = {
-    val par = df.sparkSession.sparkContext.defaultParallelism
     val bytes = df.queryExecution.optimizedPlan.stats.sizeInBytes
+    if (bytes >= df.sparkSession.sessionState.conf.defaultSizeInBytes) return df
+    val par = df.sparkSession.sparkContext.defaultParallelism
     val target = (bytes / bytesPerTask).min(BigInt(par)).toInt
     if (target > df.rdd.getNumPartitions) df.repartition(target) else df
   }
+
+  // ---- byte-order reads over (buffer, offset), shared by every parser ----
+  private def u8(b: Array[Byte], i: Int): Int = b(i) & 0xff
+  private def u16be(b: Array[Byte], i: Int): Int = (u8(b, i) << 8) | u8(b, i + 1)
+  private def u16le(b: Array[Byte], i: Int): Int = u8(b, i) | (u8(b, i + 1) << 8)
+  private def u24le(b: Array[Byte], i: Int): Int = u16le(b, i) | (u8(b, i + 2) << 16)
+  private def u32be(b: Array[Byte], i: Int): Long = (u16be(b, i).toLong << 16) | u16be(b, i + 2)
+  private def u32le(b: Array[Byte], i: Int): Long = u16le(b, i) | (u16le(b, i + 2).toLong << 16)
+  private def u64be(b: Array[Byte], i: Int): Long = (u32be(b, i) << 32) | u32be(b, i + 4)
+  /** Whether `s` (ASCII) occurs at offset `i`. */
+  private def ascii(b: Array[Byte], i: Int, s: String): Boolean =
+    i + s.length <= b.length && s.indices.forall(j => b(i + j) == s.charAt(j).toByte)
 
   final case class Asset(asset_id: Long, content: Array[Byte], format: String, n_bytes: Long)
   final case class AssetFeatures(asset_id: Long, format: String, n_bytes: Long,
@@ -81,30 +97,23 @@ object Multimodal {
     * fake so the pipeline stays total.
     */
   def imageDims(b: Array[Byte]): Option[(Int, Int)] = {
-    def u16(i: Int): Int = ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-    def u32(i: Int): Int =
-      ((b(i) & 0xff) << 24) | ((b(i + 1) & 0xff) << 16) | ((b(i + 2) & 0xff) << 8) | (b(i + 3) & 0xff)
-    def u16le(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    def u24le(i: Int): Int = u16le(i) | ((b(i + 2) & 0xff) << 16)
-    def ascii(i: Int, s: String): Boolean =
-      b.length >= i + s.length && s.indices.forall(j => b(i + j) == s(j).toByte)
     val pngSig = Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte)
     if (b.length >= 24 && b.take(8).sameElements(pngSig) &&
         b(12) == 'I' && b(13) == 'H' && b(14) == 'D' && b(15) == 'R')
-      Some((u32(16), u32(20)))
-    else if (b.length >= 10 && (ascii(0, "GIF87a") || ascii(0, "GIF89a")))
-      Some((u16le(6), u16le(8)))
-    else if (ascii(0, "RIFF") && ascii(8, "WEBP")) {
-      if (ascii(12, "VP8X") && b.length >= 30)
-        Some((u24le(24) + 1, u24le(27) + 1))
-      else if (ascii(12, "VP8L") && b.length >= 25 && b(20) == 0x2F.toByte) {
+      Some((u32be(b, 16).toInt, u32be(b, 20).toInt))
+    else if (b.length >= 10 && (ascii(b, 0, "GIF87a") || ascii(b, 0, "GIF89a")))
+      Some((u16le(b, 6), u16le(b, 8)))
+    else if (ascii(b, 0, "RIFF") && ascii(b, 8, "WEBP")) {
+      if (ascii(b, 12, "VP8X") && b.length >= 30)
+        Some((u24le(b, 24) + 1, u24le(b, 27) + 1))
+      else if (ascii(b, 12, "VP8L") && b.length >= 25 && b(20) == 0x2F.toByte) {
         // 14-bit w-1 then 14-bit h-1, LSB-first from byte 21
         val v = (b(21) & 0xff) | ((b(22) & 0xff) << 8) | ((b(23) & 0xff) << 16) |
           ((b(24) & 0xff) << 24)
         Some(((v & 0x3fff) + 1, ((v >> 14) & 0x3fff) + 1))
-      } else if (ascii(12, "VP8 ") && b.length >= 30 && b(23) == 0x9D.toByte &&
+      } else if (ascii(b, 12, "VP8 ") && b.length >= 30 && b(23) == 0x9D.toByte &&
                  b(24) == 0x01.toByte && b(25) == 0x2A.toByte)
-        Some((u16le(26) & 0x3fff, u16le(28) & 0x3fff))
+        Some((u16le(b, 26) & 0x3fff, u16le(b, 28) & 0x3fff))
       else None
     }
     else if (b.length >= 4 && b(0) == 0xFF.toByte && b(1) == 0xD8.toByte) {
@@ -118,9 +127,9 @@ object Multimodal {
         else if (m == 0xD9) return None
         else if (m == 0xD8 || (m >= 0xD0 && m <= 0xD7) || m == 0x01) i += 2
         else {
-          val len = u16(i + 2)
+          val len = u16be(b, i + 2)
           if (m >= 0xC0 && m <= 0xCF && m != 0xC4 && m != 0xC8 && m != 0xCC && len >= 7)
-            return Some((u16(i + 7), u16(i + 5)))
+            return Some((u16be(b, i + 7), u16be(b, i + 5)))
           if (len < 2) return None
           i += 2 + len
         }
@@ -136,22 +145,18 @@ object Multimodal {
     * non-WAV/truncated payloads or a zero block align.
     */
   def wavInfo(b: Array[Byte]): Option[(Int, Int, Long)] = {
-    def u16le(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    def u32le(i: Int): Long = (u16le(i).toLong) | (u16le(i + 2).toLong << 16)
-    def ascii(i: Int, s: String): Boolean =
-      b.length >= i + s.length && s.indices.forall(j => b(i + j) == s(j).toByte)
-    if (!(ascii(0, "RIFF") && ascii(8, "WAVE"))) return None
+    if (!(ascii(b, 0, "RIFF") && ascii(b, 8, "WAVE"))) return None
     var channels, rate, bits = -1
     var dataBytes = -1L
     var i = 12
     var ok = true
     while (ok && i + 8 <= b.length && (channels < 0 || dataBytes < 0)) {
-      val size = u32le(i + 4)
-      if (ascii(i, "fmt ") && i + 8 + 16 <= b.length) {
-        channels = u16le(i + 10)
-        rate = u32le(i + 12).toInt
-        bits = u16le(i + 22)
-      } else if (ascii(i, "data")) {
+      val size = u32le(b, i + 4)
+      if (ascii(b, i, "fmt ") && i + 8 + 16 <= b.length) {
+        channels = u16le(b, i + 10)
+        rate = u32le(b, i + 12).toInt
+        bits = u16le(b, i + 22)
+      } else if (ascii(b, i, "data")) {
         dataBytes = size
       }
       // a declared size near u32 max would wrap the cursor negative and
@@ -251,35 +256,29 @@ object Multimodal {
     * single media sample. None for non-MP4 or malformed/lying box sizes.
     */
   def mp4Info(b: Array[Byte]): Option[(Int, Long)] = {
-    def u32be(i: Int): Long =
-      ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-        ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-    def u64be(i: Int): Long = (u32be(i) << 32) | u32be(i + 4)
-    def ascii(i: Int, s: String): Boolean =
-      b.length >= i + s.length && s.indices.forall(j => b(i + j) == s(j).toByte)
     def walk(from: Int, to: Int, target: String): Int = {
       var i = from
       while (i + 8 <= to) {
-        val size = u32be(i)
+        val size = u32be(b, i)
         if (size < 8 || i + size > to) return -1 // 64-bit/lying sizes: fail closed
-        if (ascii(i + 4, target)) return i
+        if (ascii(b, i + 4, target)) return i
         i += size.toInt
       }
       -1
     }
-    if (!(b.length >= 12 && ascii(4, "ftyp"))) return None
+    if (!(b.length >= 12 && ascii(b, 4, "ftyp"))) return None
     val moov = walk(0, b.length, "moov")
     if (moov < 0) return None
-    val moovEnd = moov + u32be(moov).toInt
+    val moovEnd = moov + u32be(b, moov).toInt
     val mvhd = walk(moov + 8, moovEnd, "mvhd")
     if (mvhd < 0) return None
     // bound field reads by the mvhd box's OWN declared end, not moovEnd: a
     // truncated mvhd followed by sibling boxes inside moov must fail closed,
     // not silently read timescale/duration from the sibling's bytes
-    val mvhdEnd = mvhd + u32be(mvhd).toInt
+    val mvhdEnd = mvhd + u32be(b, mvhd).toInt
     b(mvhd + 8) match {
-      case 0 if mvhd + 28 <= mvhdEnd => Some((u32be(mvhd + 20).toInt, u32be(mvhd + 24)))
-      case 1 if mvhd + 40 <= mvhdEnd => Some((u32be(mvhd + 28).toInt, u64be(mvhd + 32)))
+      case 0 if mvhd + 28 <= mvhdEnd => Some((u32be(b, mvhd + 20).toInt, u32be(b, mvhd + 24)))
+      case 1 if mvhd + 40 <= mvhdEnd => Some((u32be(b, mvhd + 28).toInt, u64be(b, mvhd + 32)))
       case _ => None
     }
   }
@@ -321,19 +320,12 @@ object Multimodal {
     */
   private[scale] def mp4SampleTableEx(b: Array[Byte],
       accept: String => Boolean): Option[(String, Int, Int, Seq[(Long, Int)])] = {
-    def u16be(i: Int): Int = ((b(i) & 0xff) << 8) | (b(i + 1) & 0xff)
-    def u32be(i: Int): Long =
-      ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-        ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
-    def u64be(i: Int): Long = (u32be(i) << 32) | u32be(i + 4)
-    def ascii(i: Int, s: String): Boolean =
-      b.length >= i + s.length && s.indices.forall(j => b(i + j) == s(j).toByte)
     // every child box [start, start+size) of [from, to), fail-closed sizes
     def children(from: Int, to: Int): Option[Seq[(String, Int, Int)]] = {
       val out = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
       var i = from
       while (i + 8 <= to) {
-        val size = u32be(i)
+        val size = u32be(b, i)
         if (size < 8 || i + size > to) return None // 64-bit/lying sizes
         out += ((new String(b, i + 4, 4, "US-ASCII"), i, i + size.toInt))
         i += size.toInt
@@ -342,7 +334,7 @@ object Multimodal {
     }
     def child(cs: Seq[(String, Int, Int)], typ: String): Option[(Int, Int)] =
       cs.collectFirst { case (t, s, e) if t == typ => (s, e) }
-    if (!(b.length >= 12 && ascii(4, "ftyp"))) return None
+    if (!(b.length >= 12 && ascii(b, 4, "ftyp"))) return None
     val top = children(0, b.length).getOrElse(return None)
     // fragmented (CMAF/DASH) files carry samples in moof/traf/trun runs;
     // handled below IF the moov sample tables are empty (a file mixing
@@ -366,8 +358,8 @@ object Multimodal {
       stbl.foreach { boxes =>
         val (fourcc, entryS, entryE) = (for {
           (s, e) <- child(boxes, "stsd")
-          if s + 24 <= e && u32be(s + 12) >= 1 // entry_count
-          esize = u32be(s + 16)
+          if s + 24 <= e && u32be(b, s + 12) >= 1 // entry_count
+          esize = u32be(b, s + 16)
           if esize >= 16 && s + 16 + esize <= e
         } yield (new String(b, s + 20, 4, "US-ASCII"), s + 16,
           s + 16 + esize.toInt)).getOrElse(return None)
@@ -378,7 +370,7 @@ object Multimodal {
             val progressiveCount = (for {
               (s, e) <- child(boxes, "stsz")
               if s + 20 <= e
-            } yield u32be(s + 16)).getOrElse(0L)
+            } yield u32be(b, s + 16)).getOrElse(0L)
             if (progressiveCount != 0) return None
             // this trak's track id gates the traf walk
             val trackId = (for {
@@ -388,7 +380,7 @@ object Multimodal {
               ver = b(ts + 8) & 0xff
               idOff = if (ver == 1) ts + 8 + 4 + 16 else ts + 8 + 4 + 8
               if idOff + 4 <= te
-            } yield u32be(idOff)).getOrElse(return None)
+            } yield u32be(b, idOff)).getOrElse(return None)
             val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Int)]
             moofs.foreach { case (_, moofS, moofE) =>
               val mkids = children(moofS + 8, moofE).getOrElse(return None)
@@ -401,13 +393,13 @@ object Multimodal {
                 if (tfS + 16 > tfE) return None
                 val tfFlags = ((b(tfS + 9) & 0xff) << 16) |
                   ((b(tfS + 10) & 0xff) << 8) | (b(tfS + 11) & 0xff)
-                val tfTrack = u32be(tfS + 12)
+                val tfTrack = u32be(b, tfS + 12)
                 if (tfTrack == trackId) {
                   var p = tfS + 16
                   val baseOffset =
                     if ((tfFlags & 1) != 0) {
                       if (p + 8 > tfE) return None
-                      val v = u64be(p); p += 8; v
+                      val v = u64be(b, p); p += 8; v
                     } else {
                       // moof-start default: legitimate via the explicit
                       // default-base-is-moof flag (0x020000) or, per ISO
@@ -422,7 +414,7 @@ object Multimodal {
                   val defaultSize =
                     if ((tfFlags & 0x10) != 0) {
                       if (p + 4 > tfE) return None
-                      val v = u32be(p); p += 4; v
+                      val v = u32be(b, p); p += 4; v
                     }
                     else -1L
                   // runs without an explicit data offset chain off the
@@ -433,13 +425,13 @@ object Multimodal {
                     if (trS + 16 > trE) return None
                     val trFlags = ((b(trS + 9) & 0xff) << 16) |
                       ((b(trS + 10) & 0xff) << 8) | (b(trS + 11) & 0xff)
-                    val n = u32be(trS + 12)
+                    val n = u32be(b, trS + 12)
                     if (n < 0 || n > Int.MaxValue) return None
                     var q = trS + 16
                     var off =
                       if ((trFlags & 1) != 0) {
                         if (q + 4 > trE) return None
-                        val v = baseOffset + u32be(q).toInt // s32 data offset
+                        val v = baseOffset + u32be(b, q).toInt // s32 data offset
                         q += 4
                         v
                       } else runOff
@@ -450,7 +442,7 @@ object Multimodal {
                       val size =
                         if ((trFlags & 0x200) != 0) {
                           if (q + 4 > trE) return None
-                          val v = u32be(q); q += 4; v
+                          val v = u32be(b, q); q += 4; v
                         }
                         else defaultSize
                       if ((trFlags & 0x400) != 0) q += 4
@@ -473,13 +465,13 @@ object Multimodal {
           val sizes: Array[Int] = (for {
             (s, e) <- child(boxes, "stsz")
             if s + 20 <= e
-            fixed = u32be(s + 12)
-            n = u32be(s + 16)
+            fixed = u32be(b, s + 12)
+            n = u32be(b, s + 16)
             if n >= 1 && n <= Int.MaxValue
             out <-
               if (fixed != 0) Some(Array.fill(n.toInt)(fixed.toInt))
               else if (s + 20 + 4 * n <= e)
-                Some(Array.tabulate(n.toInt)(i => u32be(s + 20 + 4 * i).toInt))
+                Some(Array.tabulate(n.toInt)(i => u32be(b, s + 20 + 4 * i).toInt))
               else None
           } yield out).getOrElse(return None)
           // stco/co64: absolute chunk offsets
@@ -487,22 +479,22 @@ object Multimodal {
             (s, e, wide) <- child(boxes, "stco").map(c => (c._1, c._2, false))
               .orElse(child(boxes, "co64").map(c => (c._1, c._2, true)))
             if s + 16 <= e
-            n = u32be(s + 12)
+            n = u32be(b, s + 12)
             if n >= 1
             step = if (wide) 8 else 4
             if s + 16 + step * n <= e
           } yield Array.tabulate(n.toInt)(i =>
-            if (wide) u64be(s + 16 + 8 * i) else u32be(s + 16 + 4 * i)))
+            if (wide) u64be(b, s + 16 + 8 * i) else u32be(b, s + 16 + 4 * i)))
             .getOrElse(return None)
           // stsc: (first_chunk, samples_per_chunk) runs — 1-based,
           // strictly increasing first_chunk, first run at chunk 1
           val runs: Array[(Long, Long)] = (for {
             (s, e) <- child(boxes, "stsc")
             if s + 16 <= e
-            n = u32be(s + 12)
+            n = u32be(b, s + 12)
             if n >= 1 && s + 16 + 12 * n <= e
           } yield Array.tabulate(n.toInt)(i =>
-            (u32be(s + 16 + 12 * i), u32be(s + 20 + 12 * i))))
+            (u32be(b, s + 16 + 12 * i), u32be(b, s + 20 + 12 * i))))
             .getOrElse(return None)
           if (runs.head._1 != 1L ||
               runs.sliding(2).exists(p => p.length == 2 && p(1)._1 <= p(0)._1))
@@ -906,23 +898,18 @@ object Multimodal {
     * twin of [[jpegDecodeGray]] for the q216/q264/q296 dHash path.
     */
   def webpDecodeGray(b: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
-    def ascii(i: Int, s: String): Boolean =
-      b.length >= i + s.length && s.indices.forall(j => b(i + j) == s(j).toByte)
-    def u32le(i: Int): Long =
-      (b(i) & 0xffL) | ((b(i + 1) & 0xffL) << 8) |
-        ((b(i + 2) & 0xffL) << 16) | ((b(i + 3) & 0xffL) << 24)
-    if (!(b.length >= 20 && ascii(0, "RIFF") && ascii(8, "WEBP"))) return None
+    if (!(b.length >= 20 && ascii(b, 0, "RIFF") && ascii(b, 8, "WEBP"))) return None
     // chunk walk: first VP8L or VP8 wins; everything else fails closed
     var i = 12
     var vp8l = -1
     var vp8lEnd = -1
     while (vp8l < 0 && i + 8 <= b.length) {
-      val size = u32le(i + 4)
+      val size = u32le(b, i + 4)
       val start = i + 8
       if (start + size > b.length) return None
-      if (ascii(i, "VP8 "))
+      if (ascii(b, i, "VP8 "))
         return Vp8.decodeGray(java.util.Arrays.copyOfRange(b, start, start + size.toInt))
-      if (ascii(i, "VP8L")) { vp8l = start; vp8lEnd = start + size.toInt }
+      if (ascii(b, i, "VP8L")) { vp8l = start; vp8lEnd = start + size.toInt }
       i = start + size.toInt + (size.toInt & 1)
     }
     if (vp8l < 0 || vp8l >= vp8lEnd) return None
@@ -977,44 +964,38 @@ object Multimodal {
     * (q302).
     */
   def webpDecodeGrayFrames(b: Array[Byte]): Option[(Int, Int, Vector[Array[Byte]])] = {
-    def ascii(i: Int, s: String): Boolean =
-      b.length >= i + s.length && s.indices.forall(j => b(i + j) == s(j).toByte)
-    def u24le(i: Int): Int =
-      (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8) | ((b(i + 2) & 0xff) << 16)
-    def u32le(i: Int): Long =
-      (u24le(i) & 0xffffffL) | ((b(i + 3) & 0xffL) << 24)
-    if (!(b.length >= 30 && ascii(0, "RIFF") && ascii(8, "WEBP") &&
-        ascii(12, "VP8X"))) return None
-    val vp8xSize = u32le(16)
+    if (!(b.length >= 30 && ascii(b, 0, "RIFF") && ascii(b, 8, "WEBP") &&
+        ascii(b, 12, "VP8X"))) return None
+    val vp8xSize = u32le(b, 16)
     if (vp8xSize != 10 || 20 + 10 > b.length) return None
     val flags = b(20) & 0xff
     if ((flags & 0x02) == 0) return None // not an animation
     if ((flags & 0x10) != 0) return None // alpha: outside the subset
-    val cw = u24le(24) + 1
-    val ch = u24le(27) + 1
+    val cw = u24le(b, 24) + 1
+    val ch = u24le(b, 27) + 1
     var i = 30
     val frames = Vector.newBuilder[Array[Byte]]
     var n = 0
     while (i + 8 <= b.length) {
-      val size = u32le(i + 4)
+      val size = u32le(b, i + 4)
       val start = i + 8
       if (start + size > b.length) return None
-      if (ascii(i, "ANMF")) {
+      if (ascii(b, i, "ANMF")) {
         if (size < 16 + 8) return None
-        val fx = u24le(start) * 2
-        val fy = u24le(start + 3) * 2
-        val fw = u24le(start + 6) + 1
-        val fh = u24le(start + 9) + 1
+        val fx = u24le(b, start) * 2
+        val fy = u24le(b, start + 3) * 2
+        val fw = u24le(b, start + 6) + 1
+        val fh = u24le(b, start + 9) + 1
         if (fx != 0 || fy != 0 || fw != cw || fh != ch) return None
         // frame image data: exactly one VP8 /VP8L chunk in the subset
         val ds = start + 16
         if (ds + 8 > start + size) return None
-        val csize = u32le(ds + 4)
+        val csize = u32le(b, ds + 4)
         if (ds + 8 + csize > start + size) return None
         val payload = java.util.Arrays.copyOfRange(b, ds + 8, ds + 8 + csize.toInt)
         val px =
-          if (ascii(ds, "VP8 ")) Vp8.decodeGray(payload)
-          else if (ascii(ds, "VP8L")) vp8lDecodeGrayChunk(payload)
+          if (ascii(b, ds, "VP8 ")) Vp8.decodeGray(payload)
+          else if (ascii(b, ds, "VP8L")) vp8lDecodeGrayChunk(payload)
           else None
         px match {
           case Some((w, h, gray)) if w == cw && h == ch =>
@@ -1022,7 +1003,7 @@ object Multimodal {
             n += 1
           case _ => return None
         }
-      } else if (ascii(i, "ALPH")) return None
+      } else if (ascii(b, i, "ALPH")) return None
       i = start + size.toInt + (size.toInt & 1)
     }
     if (i != b.length || n == 0) None else Some((cw, ch, frames.result()))
@@ -1064,27 +1045,25 @@ object Multimodal {
     * asset and it is INVISIBLE to near-dup.
     */
   private[scale] def coverageOf(b: Array[Byte]): (String, String, String) = {
-    def ascii(i: Int, s: String): Boolean =
-      b.length >= i + s.length && s.indices.forall(j => b(i + j) == s(j).toByte)
     def live(ok: Boolean) = if (ok) "live" else "fail_closed"
-    if (ascii(0, "GIF8"))
+    if (ascii(b, 0, "GIF8"))
       ("gif", "lzw", live(gifDecodeGrayFrames(b).isDefined))
-    else if (b.length >= 12 && ascii(4, "ftyp")) {
+    else if (b.length >= 12 && ascii(b, 4, "ftyp")) {
       val codec = mp4SampleTable(b, _ => true).map(_._1).getOrElse("unparsed")
       val status =
         if (mp4DecodeGrayFrames(b).isDefined) "live"
         else if (mp4AudioEnvelopeHash(b).isDefined) "audio_fallback"
         else "fail_closed"
       ("mp4", codec, status)
-    } else if (b.length >= 16 && ascii(0, "RIFF") && ascii(8, "WEBP")) {
+    } else if (b.length >= 16 && ascii(b, 0, "RIFF") && ascii(b, 8, "WEBP")) {
       val codec = new String(b, 12, 4, "US-ASCII").trim.toLowerCase
       ("webp", codec,
         live(webpDecodeGray(b).isDefined || webpDecodeGrayFrames(b).isDefined))
-    } else if (b.length >= 8 && (b(0) & 0xff) == 0x89 && ascii(1, "PNG"))
+    } else if (b.length >= 8 && (b(0) & 0xff) == 0x89 && ascii(b, 1, "PNG"))
       ("png", "deflate", live(pngDecodeGray(b).isDefined))
     else if (b.length >= 2 && (b(0) & 0xff) == 0xff && (b(1) & 0xff) == 0xd8)
       ("jpeg", "jpeg", live(jpegDecodeGray(b).isDefined))
-    else if (b.length >= 12 && ascii(0, "RIFF") && ascii(8, "WAVE"))
+    else if (b.length >= 12 && ascii(b, 0, "RIFF") && ascii(b, 8, "WAVE"))
       ("wav", "pcm", live(wavPcmSamples(b)
         .exists(s => s.length > 0 && s.length % 64 == 0)))
     else ("unknown", "unknown", "fail_closed")
@@ -1159,20 +1138,16 @@ object Multimodal {
     * None when the container is malformed or the data chunk is truncated.
     */
   def wavPcmSamples(b: Array[Byte]): Option[Array[Short]] = {
-    def u16le(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    def u32le(i: Int): Long = (u16le(i).toLong) | (u16le(i + 2).toLong << 16)
-    def ascii(i: Int, s: String): Boolean =
-      b.length >= i + s.length && s.indices.forall(j => b(i + j) == s(j).toByte)
-    if (!(ascii(0, "RIFF") && ascii(8, "WAVE"))) return None
+    if (!(ascii(b, 0, "RIFF") && ascii(b, 8, "WAVE"))) return None
     var i = 12
     while (i + 8 <= b.length) {
-      val size = u32le(i + 4)
-      if (ascii(i, "data")) {
+      val size = u32le(b, i + 4)
+      if (ascii(b, i, "data")) {
         if (i + 8 + size > b.length || size % 2 != 0) return None
         val out = new Array[Short](size.toInt / 2)
         var j = 0
         while (j < out.length) {
-          out(j) = u16le(i + 8 + j * 2).toShort
+          out(j) = u16le(b, i + 8 + j * 2).toShort
           j += 1
         }
         return Some(out)
@@ -1422,10 +1397,6 @@ object Multimodal {
 
   // ---- real PNG pixel codec (JDK zlib — no external codecs needed) --------
 
-  private def be32s(v: Long): Array[Byte] =
-    Array(((v >> 24) & 0xff).toByte, ((v >> 16) & 0xff).toByte,
-      ((v >> 8) & 0xff).toByte, (v & 0xff).toByte)
-
   private def paeth(a: Int, b: Int, c: Int): Int = {
     val p = a + b - c
     val pa = math.abs(p - a); val pb = math.abs(p - b); val pc = math.abs(p - c)
@@ -1436,7 +1407,7 @@ object Multimodal {
     val tb = tag.getBytes("US-ASCII")
     val crc = new java.util.zip.CRC32()
     crc.update(tb); crc.update(data)
-    be32s(data.length.toLong) ++ tb ++ data ++ be32s(crc.getValue)
+    be32(data.length.toLong) ++ tb ++ data ++ be32(crc.getValue)
   }
 
   private val PngSig = Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A).map(_.toByte)
@@ -1478,7 +1449,7 @@ object Multimodal {
     val buf = new Array[Byte](4096)
     while (!deflater.finished()) out.write(buf, 0, deflater.deflate(buf))
     deflater.end()
-    val ihdr = be32s(w.toLong) ++ be32s(h.toLong) ++ Array[Byte](8, 0, 0, 0, 0)
+    val ihdr = be32(w.toLong) ++ be32(h.toLong) ++ Array[Byte](8, 0, 0, 0, 0)
     PngSig ++ pngChunk("IHDR", ihdr) ++ pngChunk("IDAT", out.toByteArray) ++
       pngChunk("IEND", Array.emptyByteArray)
   }
@@ -1507,22 +1478,22 @@ object Multimodal {
       throw new IllegalStateException("pngEncodeGray emitted no IDAT")
     }
     def fcTL(seq: Int): Array[Byte] =
-      be32s(seq.toLong) ++ be32s(w.toLong) ++ be32s(h.toLong) ++
-        be32s(0) ++ be32s(0) ++ // x_offset, y_offset
+      be32(seq.toLong) ++ be32(w.toLong) ++ be32(h.toLong) ++
+        be32(0) ++ be32(0) ++ // x_offset, y_offset
         Array[Byte](0, 1, 0, 10) ++ // delay 1/10 s
         Array[Byte](0, 0) // dispose APNG_DISPOSE_OP_NONE, blend SOURCE
     val out = new java.io.ByteArrayOutputStream()
     out.write(PngSig, 0, PngSig.length)
-    val ihdr = be32s(w.toLong) ++ be32s(h.toLong) ++ Array[Byte](8, 0, 0, 0, 0)
+    val ihdr = be32(w.toLong) ++ be32(h.toLong) ++ Array[Byte](8, 0, 0, 0, 0)
     def put(c: Array[Byte]): Unit = out.write(c, 0, c.length)
     put(pngChunk("IHDR", ihdr))
-    put(pngChunk("acTL", be32s(frames.length.toLong) ++ be32s(0))) // loop forever
+    put(pngChunk("acTL", be32(frames.length.toLong) ++ be32(0))) // loop forever
     var seq = 0
     frames.zipWithIndex.foreach { case (px, fi) =>
       put(pngChunk("fcTL", fcTL(seq))); seq += 1
       if (fi == 0) put(pngChunk("IDAT", idatOf(px)))
       else {
-        put(pngChunk("fdAT", be32s(seq.toLong) ++ idatOf(px)))
+        put(pngChunk("fdAT", be32(seq.toLong) ++ idatOf(px)))
         seq += 1
       }
     }
@@ -1540,9 +1511,6 @@ object Multimodal {
     */
   def apngDecodeGrayFrames(b: Array[Byte]): Option[(Int, Int, Seq[Array[Byte]])] = {
     if (b.length < 8 || !b.take(8).sameElements(PngSig)) return None
-    def u32(i: Int): Long =
-      ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-        ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
     var w = -1
     var h = -1
     var numFrames = -1
@@ -1554,32 +1522,32 @@ object Multimodal {
     var i = 8
     var ended = false
     while (!ended && i + 12 <= b.length) {
-      val len = u32(i)
+      val len = u32be(b, i)
       if (len > b.length - i - 12) return None
       val tag = new String(b, i + 4, 4, "US-ASCII")
       val crc = new java.util.zip.CRC32()
       crc.update(b, i + 4, 4 + len.toInt)
-      if (crc.getValue != u32(i + 8 + len.toInt)) return None
+      if (crc.getValue != u32be(b, i + 8 + len.toInt)) return None
       val d = i + 8
       tag match {
         case "IHDR" =>
           if (len != 13) return None
-          w = u32(d).toInt; h = u32(d + 4).toInt
+          w = u32be(b, d).toInt; h = u32be(b, d + 4).toInt
           if (w <= 0 || h <= 0 || w > 16384 || h > 16384) return None
           // gray 8-bit, non-interlaced only in the animated subset
           if ((b(d + 8) & 0xff) != 8 || (b(d + 9) & 0xff) != 0 ||
             (b(d + 12) & 0xff) != 0) return None
         case "acTL" =>
           if (len != 8 || numFrames >= 0 || sawIdat) return None
-          numFrames = u32(d).toInt
+          numFrames = u32be(b, d).toInt
           if (numFrames <= 0 || numFrames > 4096) return None
         case "fcTL" =>
           if (len != 26 || numFrames < 0) return None
-          if (u32(d).toInt != seqExpect) return None
+          if (u32be(b, d).toInt != seqExpect) return None
           seqExpect += 1
           // full-canvas SOURCE frames only
-          if (u32(d + 4).toInt != w || u32(d + 8).toInt != h ||
-            u32(d + 12) != 0 || u32(d + 16) != 0) return None
+          if (u32be(b, d + 4).toInt != w || u32be(b, d + 8).toInt != h ||
+            u32be(b, d + 12) != 0 || u32be(b, d + 16) != 0) return None
           if ((b(d + 25) & 0xff) != 0) return None // blend must be SOURCE
           if (!sawIdat) { sawFctlBeforeIdat = true; idatIsFrame0 = true }
           frameData += new java.io.ByteArrayOutputStream()
@@ -1590,7 +1558,7 @@ object Multimodal {
           // image: skipped (not part of the animation)
         case "fdAT" =>
           if (len < 4 || frameData.isEmpty) return None
-          if (u32(d).toInt != seqExpect) return None
+          if (u32be(b, d).toInt != seqExpect) return None
           seqExpect += 1
           frameData.last.write(b, d + 4, len.toInt - 4)
         case "IEND" => ended = true
@@ -1693,7 +1661,7 @@ object Multimodal {
   private def pngAssemble(w: Int, h: Int, colorType: Int, interlace: Int,
                           plte: Array[Byte], trns: Array[Byte],
                           idat: Array[Byte], depth: Int = 8): Array[Byte] = {
-    val ihdr = be32s(w.toLong) ++ be32s(h.toLong) ++
+    val ihdr = be32(w.toLong) ++ be32(h.toLong) ++
       Array[Byte](depth.toByte, colorType.toByte, 0, 0, interlace.toByte)
     val pc = if (plte == null) Array.emptyByteArray else pngChunk("PLTE", plte)
     val tc = if (trns == null) Array.emptyByteArray else pngChunk("tRNS", trns)
@@ -1961,9 +1929,6 @@ object Multimodal {
     */
   def pngDecodeGray(b: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
     if (b.length < 8 || !b.take(8).sameElements(PngSig)) return None
-    def u32(i: Int): Long =
-      ((b(i) & 0xffL) << 24) | ((b(i + 1) & 0xffL) << 16) |
-        ((b(i + 2) & 0xffL) << 8) | (b(i + 3) & 0xffL)
     var w = -1; var h = -1; var colorType = -1; var depth = 8
     var interlaced = false
     var plte: Array[Byte] = null
@@ -1972,12 +1937,12 @@ object Multimodal {
     var i = 8
     var ended = false
     while (!ended && i + 12 <= b.length) {
-      val len = u32(i)
+      val len = u32be(b, i)
       if (len > b.length - i - 12) return None
       val tag = new String(b, i + 4, 4, "US-ASCII")
       val crc = new java.util.zip.CRC32()
       crc.update(b, i + 4, 4 + len.toInt)
-      if (crc.getValue != u32(i + 8 + len.toInt)) return None
+      if (crc.getValue != u32be(b, i + 8 + len.toInt)) return None
       tag match {
         case "IHDR" =>
           if (len != 13) return None
@@ -1995,7 +1960,7 @@ object Multimodal {
           val il = b(i + 20) & 0xff
           if (il > 1) return None
           interlaced = il == 1
-          w = u32(i + 8).toInt; h = u32(i + 12).toInt
+          w = u32be(b, i + 8).toInt; h = u32be(b, i + 12).toInt
           // bound allocations by sane dimensions BEFORE any buffer is
           // sized from attacker-controlled IHDR fields (r18 ADVICE)
           if (w <= 0 || h <= 0 || w > 16384 || h > 16384) return None
@@ -2488,11 +2453,8 @@ object Multimodal {
     * at a trailer. Returns (w, h, frames).
     */
   def gifDecodeGrayFrames(b: Array[Byte]): Option[(Int, Int, Vector[Array[Byte]])] = {
-    def ascii(i: Int, s: String): Boolean =
-      i + s.length <= b.length && s.indices.forall(j => b(i + j) == s.charAt(j).toByte)
-    if (!(ascii(0, "GIF87a") || ascii(0, "GIF89a")) || b.length < 14) return None
-    def u16le(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
-    val sw = u16le(6); val sh = u16le(8)
+    if (!(ascii(b, 0, "GIF87a") || ascii(b, 0, "GIF89a")) || b.length < 14) return None
+    val sw = u16le(b, 6); val sh = u16le(b, 8)
     if (sw <= 0 || sh <= 0) return None
     var i = 10
     val lsdFlags = b(i) & 0xff
@@ -2518,8 +2480,8 @@ object Multimodal {
           i += 1
         case 0x2c =>
           if (i + 10 > b.length) return None
-          val fx = u16le(i + 1); val fy = u16le(i + 3)
-          val fw = u16le(i + 5); val fh = u16le(i + 7)
+          val fx = u16le(b, i + 1); val fy = u16le(b, i + 3)
+          val fw = u16le(b, i + 5); val fh = u16le(b, i + 7)
           val iflags = b(i + 9) & 0xff
           i += 10
           val interlaced = (iflags & 0x40) != 0
@@ -2573,10 +2535,7 @@ object Multimodal {
   }
 
   def gifDecodeGray(b: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
-    def ascii(i: Int, s: String): Boolean =
-      i + s.length <= b.length && s.indices.forall(j => b(i + j) == s.charAt(j).toByte)
-    if (!(ascii(0, "GIF87a") || ascii(0, "GIF89a")) || b.length < 14) return None
-    def u16le(i: Int): Int = (b(i) & 0xff) | ((b(i + 1) & 0xff) << 8)
+    if (!(ascii(b, 0, "GIF87a") || ascii(b, 0, "GIF89a")) || b.length < 14) return None
     var i = 10
     val lsdFlags = b(i) & 0xff
     i += 3 // flags, background index, aspect ratio
@@ -2599,7 +2558,7 @@ object Multimodal {
           i += 1
         case 0x2c => // image descriptor
           if (i + 10 > b.length) return None
-          val fw = u16le(i + 5); val fh = u16le(i + 7)
+          val fw = u16le(b, i + 5); val fh = u16le(b, i + 7)
           val iflags = b(i + 9) & 0xff
           i += 10
           val interlaced = (iflags & 0x40) != 0 // appendix-E pass order
@@ -2646,21 +2605,27 @@ object Multimodal {
     None
   }
 
-  // ---- real JPEG baseline codec (pure-JDK — Huffman + DCT by hand) ----
+  // ---- JPEG codec (ITU-T T.81, pure JDK: Huffman + DCT by hand) ----
   //
   // Completes the codec family for the dominant web-image format (the PNG
   // and GIF decoders cover DEFLATE and LZW; this covers entropy-coded
-  // transform compression). Baseline sequential DCT, 8-bit, single
-  // grayscale component (ITU-T T.81): marker walk, DQT/DHT/SOF0/SOS/DRI
-  // parse, canonical Huffman decode with byte unstuffing and restart
-  // handling, dequantization, 2-D IDCT, level shift. Grayscale
-  // PROGRESSIVE (SOF2) frames decode too (r19): the unified multi-scan
-  // walk accumulates raw coefficients across DC/AC first + refinement
-  // scans (spectral selection, successive approximation, EOB runs) and
-  // dequantizes once at EOI. Fails closed (None) on extended/lossless/
-  // arithmetic frames, non-grayscale (color progressive stays a measured
-  // blind spot), truncation, or a malformed table — never a partial
-  // buffer.
+  // transform compression). One decoder core serves both entry points: the
+  // marker walk (DQT/DHT/SOF0/SOF2/DRI/SOS), one entropy reader with byte
+  // unstuffing and restart handling, the four scan types of baseline and
+  // progressive frames (spectral selection, successive approximation, EOB
+  // runs) over N ∈ {1, 3} components — interleaved scans walk MCUs, single-
+  // component scans walk the component's own block grid — and one
+  // dequantize + IDCT into per-component planes at EOI. Gray takes N = 1 at
+  // 1×1 sampling; color takes N = 3 at 4:2:0 or 4:4:4 and converts through
+  // [[yccToRgb]]. Both fail closed (None) on extended/lossless/arithmetic
+  // frames, the other's component structure, a non-conforming scan script,
+  // truncation, or a malformed table — never a partial buffer.
+  //
+  // One encoder core serves the four encoders: a segment writer with a
+  // byte-stuffed bit emitter, one forward DCT over an Int plane, one
+  // baseline block coder, and the progressive DC scan plus the AC
+  // first/refine scan. Each public encoder is a short driver that names its
+  // components and its scan script.
 
   /** JPEG natural-order index for each zigzag position (T.81 Figure A.6). */
   private val JZigZag: Array[Int] = Array(
@@ -2690,53 +2655,117 @@ object Multimodal {
     */
   val JpegFlatQuant8: Array[Int] = Array.fill(64)(8)
 
-  // Annex K.3.1 / K.3.2 luminance Huffman tables: (BITS ++ HUFFVAL) as hex
+  /** A Huffman table as DHT carries it (BITS, HUFFVAL) with its encoder
+    * view: symbol -> canonical code and length (T.81 Annex C).
+    */
+  private final class JHuff(val bits: Array[Int], val vals: Array[Int]) {
+    val code = new Array[Int](256)
+    val len = new Array[Int](256)
+    locally {
+      var c = 0; var k = 0
+      var l = 1
+      while (l <= 16) {
+        var i = 0
+        while (i < bits(l - 1)) { code(vals(k)) = c; len(vals(k)) = l; c += 1; k += 1; i += 1 }
+        c <<= 1
+        l += 1
+      }
+    }
+  }
+
   private def hexBytes(s: String): Array[Int] =
     s.grouped(2).map(Integer.parseInt(_, 16)).toArray
-  private val JDcBits = Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0)
-  private val JDcVals = (0 to 11).toArray
-  private val JAcBits = Array(0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 125)
-  private val JAcVals = hexBytes(
-    "01020300041105122131410613516107227114328191a1082342b1c11552d1f0" +
-      "2433627282090a161718191a25262728292a3435363738393a43444546474849" +
-      "4a535455565758595a636465666768696a737475767778797a83848586878889" +
-      "8a92939495969798999aa2a3a4a5a6a7a8a9aab2b3b4b5b6b7b8b9bac2c3c4c5" +
-      "c6c7c8c9cad2d3d4d5d6d7d8d9dae1e2e3e4e5e6e7e8e9eaf1f2f3f4f5f6f7f8" +
-      "f9fa")
-
-  /** Canonical code assignment (T.81 Annex C): symbol -> (code, length). */
-  private def canonicalCodes(bits: Array[Int], vals: Array[Int]): Array[(Int, Int)] = {
-    val out = new Array[(Int, Int)](vals.length)
-    var code = 0; var k = 0
-    var len = 1
-    while (len <= 16) {
-      var i = 0
-      while (i < bits(len - 1)) { out(k) = (code, len); code += 1; k += 1; i += 1 }
-      code <<= 1
-      len += 1
-    }
-    out
-  }
+  // Annex K.3 tables by table id: 0 luminance (K.3.1/K.3.2), 1 chrominance
+  // (K.3.3.1/K.3.3.2)
+  private val JStdDc = Array(
+    new JHuff(Array(0, 1, 5, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0, 0, 0), (0 to 11).toArray),
+    new JHuff(Array(0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0), (0 to 11).toArray))
+  private val JStdAc = Array(
+    new JHuff(Array(0, 2, 1, 3, 3, 2, 4, 3, 5, 5, 4, 4, 0, 0, 1, 125), hexBytes(
+      "01020300041105122131410613516107227114328191a1082342b1c11552d1f0" +
+        "2433627282090a161718191a25262728292a3435363738393a43444546474849" +
+        "4a535455565758595a636465666768696a737475767778797a83848586878889" +
+        "8a92939495969798999aa2a3a4a5a6a7a8a9aab2b3b4b5b6b7b8b9bac2c3c4c5" +
+        "c6c7c8c9cad2d3d4d5d6d7d8d9dae1e2e3e4e5e6e7e8e9eaf1f2f3f4f5f6f7f8" +
+        "f9fa")),
+    new JHuff(Array(0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 119), hexBytes(
+      "000102031104052131061241510761711322328108144291a1b1c109233352f0" +
+        "156272d10a162434e125f11718191a262728292a35363738393a434445464748" +
+        "494a535455565758595a636465666768696a737475767778797a828384858687" +
+        "88898a92939495969798999aa2a3a4a5a6a7a8a9aab2b3b4b5b6b7b8b9bac2c3" +
+        "c4c5c6c7c8c9cad2d3d4d5d6d7d8d9dae2e3e4e5e6e7e8e9eaf2f3f4f5f6f7f8" +
+        "f9fa")))
 
   private val CosTable: Array[Double] =
     Array.tabulate(8 * 8)(i => math.cos((2 * (i % 8) + 1) * (i / 8) * math.Pi / 16))
   private def c0(u: Int): Double = if (u == 0) 1.0 / math.sqrt(2) else 1.0
+  private def category(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
 
-  /** Encode an 8-bit grayscale buffer as a REAL baseline JPEG: level shift,
-    * 8×8 forward DCT, quantize by `quant` (natural order), zigzag, Annex-K
-    * Huffman entropy coding with byte stuffing. Partial edge blocks pad by
-    * edge replication (the standard encoder treatment). With
-    * [[JpegFlatQuant8]] a block-constant image is lossless (q214); with
-    * [[JpegStdQuant]] it is genuinely lossy — MultimodalSpec pins both
-    * against the JDK's own ImageIO JPEG codec.
+  // ---- encoder core ----
+
+  /** Segment writer plus the entropy-coded bit emitter: byte stuffing, and
+    * every scan ends in a 1-padded flush.
     */
-  /** Forward path shared by the baseline and progressive encoders: level
-    * shift, 8x8 DCT, quantize — bw*bh blocks of 64 natural-order
-    * quantized coefficients (edge blocks pad by replication).
+  private final class JpegWriter {
+    private val out = new java.io.ByteArrayOutputStream()
+    private var acc = 0L; private var nbits = 0
+    private def u8(v: Int): Unit = out.write(v & 0xff)
+    private def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
+    private def marker(m: Int): Unit = { u8(0xff); u8(m) }
+    /** SOI, one DQT per quant table (id = position), then the SOF0/SOF2 frame. */
+    def header(sof: Int, w: Int, h: Int, quants: Seq[Array[Int]], comps: Seq[JComp]): Unit = {
+      marker(0xd8)
+      quants.zipWithIndex.foreach { case (q, id) =>
+        marker(0xdb); u16(2 + 1 + 64); u8(id); JZigZag.foreach(nat => u8(q(nat)))
+      }
+      marker(sof); u16(2 + 6 + 3 * comps.length); u8(8); u16(h); u16(w); u8(comps.length)
+      comps.foreach { c => u8(c.id); u8((c.hs << 4) | c.vs); u8(c.q) }
+    }
+    def dht(cls: Int, id: Int, t: JHuff): Unit = {
+      marker(0xc4); u16(2 + 1 + 16 + t.vals.length); u8((cls << 4) | id)
+      t.bits.foreach(u8); t.vals.foreach(u8)
+    }
+    /** SOS over (component id, DC/AC table selector byte) pairs. */
+    def sos(comps: Seq[(Int, Int)], ss: Int, se: Int, ah: Int, al: Int): Unit = {
+      marker(0xda); u16(2 + 1 + 2 * comps.length + 3); u8(comps.length)
+      comps.foreach { case (id, t) => u8(id); u8(t) }
+      u8(ss); u8(se); u8((ah << 4) | al)
+    }
+    def putBits(code: Int, len: Int): Unit = {
+      acc = (acc << len) | (code & ((1L << len) - 1)); nbits += len
+      while (nbits >= 8) {
+        val byte = ((acc >> (nbits - 8)) & 0xff).toInt
+        u8(byte); if (byte == 0xff) u8(0x00)
+        nbits -= 8
+      }
+    }
+    def put(t: JHuff, sym: Int): Unit = {
+      require(t.len(sym) > 0, s"symbol 0x${sym.toHexString} has no Huffman code")
+      putBits(t.code(sym), t.len(sym))
+    }
+    /** The `s` magnitude bits of a category-`s` value (T.81 F.1.2.1). */
+    def putVal(v: Int, s: Int): Unit = if (s > 0) putBits(if (v >= 0) v else v - 1, s)
+    def flushBits(): Unit = if (nbits > 0) { val p = 8 - nbits; putBits((1 << p) - 1, p) }
+    def finish(): Array[Byte] = { marker(0xd9); out.toByteArray }
+  }
+
+  /** One encoder component: frame id, sampling factors, quant table id,
+    * Annex-K table id (0 luma, 1 chroma) and its quantized coefficients —
+    * blocks of 64 in natural order, `bw` blocks per row.
     */
-  private def jpegForwardCoefs(pixels: Array[Byte], w: Int, h: Int,
-                               quant: Array[Int]): Array[Int] = {
-    val bw = (w + 7) / 8; val bh = (h + 7) / 8
+  private final case class JComp(id: Int, hs: Int, vs: Int, q: Int, tbl: Int,
+                                 coefs: Array[Int], bw: Int)
+
+  private def requireQuant(q: Array[Int]): Unit =
+    require(q.length == 64 && q.forall(v => v >= 1 && v <= 255))
+
+  /** Level shift, 8×8 forward DCT and quantization of an Int sample plane:
+    * ceil(pw/8)·ceil(ph/8) blocks of 64 natural-order coefficients, partial
+    * edge blocks padded by edge replication (the standard encoder treatment).
+    */
+  private def jpegForwardDct(plane: Array[Int], pw: Int, ph: Int,
+                             quant: Array[Int]): Array[Int] = {
+    val bw = (pw + 7) / 8; val bh = (ph + 7) / 8
     val out = new Array[Int](bw * bh * 64)
     val blk = new Array[Double](64)
     var by = 0
@@ -2745,11 +2774,10 @@ object Multimodal {
       while (bx < bw) {
         var y = 0
         while (y < 8) {
-          val py = math.min(by * 8 + y, h - 1)
+          val py = math.min(by * 8 + y, ph - 1)
           var x = 0
           while (x < 8) {
-            val px = math.min(bx * 8 + x, w - 1)
-            blk(y * 8 + x) = (pixels(py * w + px) & 0xff) - 128.0
+            blk(y * 8 + x) = plane(py * pw + math.min(bx * 8 + x, pw - 1)) - 128.0
             x += 1
           }
           y += 1
@@ -2769,8 +2797,7 @@ object Multimodal {
               }
               y2 += 1
             }
-            val s = 0.25 * c0(u) * c0(v) * sum
-            out(base + u * 8 + v) = math.round(s / quant(u * 8 + v)).toInt
+            out(base + u * 8 + v) = math.round(0.25 * c0(u) * c0(v) * sum / quant(u * 8 + v)).toInt
             v += 1
           }
           u += 1
@@ -2780,6 +2807,251 @@ object Multimodal {
       by += 1
     }
     out
+  }
+
+  /** Visit a scan's blocks as (scan component index, component, block
+    * offset): a one-component scan walks the component's blocks in raster
+    * order; an interleaved scan walks `mw`×`mh` MCUs, each component's
+    * hs×vs blocks in raster order within the MCU (T.81 A.2).
+    */
+  private def jpegScanBlocks(comps: Seq[JComp], mw: Int, mh: Int)(
+      f: (Int, JComp, Int) => Unit): Unit =
+    if (comps.length == 1) {
+      val c = comps.head
+      var blk = 0
+      while (blk < c.coefs.length / 64) { f(0, c, blk * 64); blk += 1 }
+    } else {
+      var mi = 0
+      while (mi < mw * mh) {
+        val my = mi / mw; val mx = mi % mw
+        var si = 0
+        while (si < comps.length) {
+          val c = comps(si)
+          var v = 0
+          while (v < c.vs) {
+            var h = 0
+            while (h < c.hs) {
+              f(si, c, ((my * c.vs + v) * c.bw + mx * c.hs + h) * 64)
+              h += 1
+            }
+            v += 1
+          }
+          si += 1
+        }
+        mi += 1
+      }
+    }
+
+  /** One baseline scan over all components with the Annex-K tables: DC
+    * difference plus AC run-length coding per block.
+    */
+  private def jpegBaselineScan(wr: JpegWriter, comps: Seq[JComp], mw: Int, mh: Int): Unit = {
+    comps.map(_.tbl).distinct.foreach { t => wr.dht(0, t, JStdDc(t)); wr.dht(1, t, JStdAc(t)) }
+    wr.sos(comps.map(c => (c.id, c.tbl * 0x11)), 0, 63, 0, 0)
+    val preds = new Array[Int](comps.length)
+    jpegScanBlocks(comps, mw, mh) { (si, c, base) =>
+      val dc = c.coefs(base); val diff = dc - preds(si); preds(si) = dc
+      val s0 = category(diff)
+      wr.put(JStdDc(c.tbl), s0); wr.putVal(diff, s0)
+      val ac = JStdAc(c.tbl)
+      var run = 0
+      var k = 1
+      while (k < 64) {
+        val v = c.coefs(base + JZigZag(k))
+        if (v == 0) run += 1
+        else {
+          while (run >= 16) { wr.put(ac, 0xf0); run -= 16 }
+          val s = category(v)
+          wr.put(ac, (run << 4) | s); wr.putVal(v, s)
+          run = 0
+        }
+        k += 1
+      }
+      if (run > 0) wr.put(ac, 0x00)
+    }
+    wr.flushBits()
+  }
+
+  /** Progressive DC scan over the MCU walk (T.81 G.1.2.1): the first pass
+    * (ah = 0) codes differences of the point-transformed DC through the
+    * component's Annex-K table; a refinement emits bit `al` raw.
+    */
+  private def jpegDcScan(wr: JpegWriter, comps: Seq[JComp], mw: Int, mh: Int,
+                         ah: Int, al: Int): Unit = {
+    wr.sos(comps.map(c => (c.id, if (ah == 0) c.tbl << 4 else 0)), 0, 0, ah, al)
+    val preds = new Array[Int](comps.length)
+    jpegScanBlocks(comps, mw, mh) { (si, c, base) =>
+      if (ah == 0) {
+        val t = c.coefs(base) >> al
+        val diff = t - preds(si); preds(si) = t
+        val s = category(diff)
+        wr.put(JStdDc(c.tbl), s); wr.putVal(diff, s)
+      } else wr.putBits((c.coefs(base) >> al) & 1, 1)
+    }
+    wr.flushBits()
+  }
+
+  /** Progressive AC scan of one component over the band `ss..se` (T.81
+    * G.1.2.2/G.1.2.3): the first pass (ah = 0) batches EOB runs, a
+    * refinement carries correction bits. A dry pass collects the symbols so
+    * the scan ships its own flat canonical DHT (all codes 8 bits: at most
+    * 162 symbols, so the all-ones code stays unused); tables legally
+    * redefine between scans.
+    */
+  private def acScan(wr: JpegWriter, c: JComp, ss: Int, se: Int, ah: Int, al: Int): Unit = {
+    val nBlocks = c.coefs.length / 64
+    val seen = new Array[Boolean](256)
+    var table: JHuff = null
+    def sym(rs: Int): Unit = if (table == null) seen(rs) = true else wr.put(table, rs)
+    def bits(v: Int, n: Int): Unit = if (table != null && n > 0) wr.putBits(v, n)
+    def onePass(): Unit =
+      if (ah == 0) {
+        var eobrun = 0
+        def flushEob(): Unit = if (eobrun > 0) {
+          val r = 31 - Integer.numberOfLeadingZeros(eobrun)
+          sym(r << 4); bits(eobrun - (1 << r), r)
+          eobrun = 0
+        }
+        var blk = 0
+        while (blk < nBlocks) {
+          val base = blk * 64
+          var r = 0
+          var any = false
+          var k = ss
+          while (k <= se) {
+            val cv = c.coefs(base + JZigZag(k))
+            val t = if (cv >= 0) cv >> al else -((-cv) >> al)
+            if (t == 0) r += 1
+            else {
+              flushEob()
+              while (r > 15) { sym(0xf0); r -= 16 }
+              val s = category(t)
+              sym((r << 4) | s); bits(if (t >= 0) t else t - 1, s)
+              r = 0; any = true
+            }
+            k += 1
+          }
+          if (r > 0 || !any) {
+            eobrun += 1
+            if (eobrun == 0x7fff) flushEob()
+          }
+          blk += 1
+        }
+        flushEob()
+      } else {
+        val br = scala.collection.mutable.ArrayBuffer.empty[Int]
+        def flushBr(): Unit = { br.foreach(bit => bits(bit, 1)); br.clear() }
+        var blk = 0
+        while (blk < nBlocks) {
+          val base = blk * 64
+          // last position that becomes significant at this level
+          var lastNew = ss - 1
+          var k = ss
+          while (k <= se) {
+            if (math.abs(c.coefs(base + JZigZag(k))) >> al == 1) lastNew = k
+            k += 1
+          }
+          var r = 0
+          k = ss
+          while (k <= lastNew) {
+            val cv = c.coefs(base + JZigZag(k))
+            val t = math.abs(cv) >> al
+            if (t == 0) r += 1
+            else if (t > 1) br += (t & 1)
+            else {
+              while (r > 15) { sym(0xf0); flushBr(); r -= 16 }
+              sym((r << 4) | 1); bits(if (cv >= 0) 1 else 0, 1)
+              flushBr()
+              r = 0
+            }
+            k += 1
+          }
+          if (lastNew < se) { // EOB covers the tail; its corrections follow
+            sym(0x00)
+            while (k <= se) {
+              val t = math.abs(c.coefs(base + JZigZag(k))) >> al
+              if (t > 1) bits(t & 1, 1)
+              k += 1
+            }
+          }
+          blk += 1
+        }
+      }
+    onePass()
+    val vals = (0 until 256).filter(seen(_)).toArray
+    require(vals.nonEmpty && vals.length <= 255)
+    table = new JHuff(Array.tabulate(16)(i => if (i == 7) vals.length else 0), vals)
+    wr.dht(1, 1, table)
+    wr.sos(Seq((c.id, 0x01)), ss, se, ah, al)
+    onePass()
+    wr.flushBits()
+  }
+
+  /** The progressive scan script: DC first at `al` (interleaved), each
+    * component's AC `bands` first at `al`, then one DC and one AC
+    * refinement round per bit down to Al = 0.
+    */
+  private def jpegProgressiveScans(wr: JpegWriter, comps: Seq[JComp], mw: Int, mh: Int,
+                                   bands: Seq[(Int, Int)], al: Int): Unit = {
+    comps.map(_.tbl).distinct.foreach(t => wr.dht(0, t, JStdDc(t)))
+    jpegDcScan(wr, comps, mw, mh, 0, al)
+    for (c <- comps; (ss, se) <- bands) acScan(wr, c, ss, se, 0, al)
+    var a = al
+    while (a > 0) {
+      jpegDcScan(wr, comps, mw, mh, a, a - 1)
+      for (c <- comps; (ss, se) <- bands) acScan(wr, c, ss, se, a, a - 1)
+      a -= 1
+    }
+  }
+
+  private def jpegGrayComp(pixels: Array[Byte], w: Int, h: Int, quant: Array[Int]): JComp = {
+    require(pixels.length == w * h, s"pixel buffer ${pixels.length} != $w x $h")
+    requireQuant(quant)
+    JComp(1, 1, 1, 0, 0, jpegForwardDct(pixels.map(_ & 0xff), w, h, quant), (w + 7) / 8)
+  }
+
+  /** Y (2×2 sampling, quant 0, luma tables) and Cb/Cr (1×1, quant 1,
+    * chroma tables): fixed-point [[rgbToYcc]], chroma subsampled by the
+    * exact integer mean of each 2×2.
+    */
+  private def jpegColorComps(rgb: Array[Byte], w: Int, h: Int,
+                             quantY: Array[Int], quantC: Array[Int]): Seq[JComp] = {
+    require(rgb.length == 3 * w * h, s"rgb buffer ${rgb.length} != 3*$w*$h")
+    require(w % 16 == 0 && h % 16 == 0, s"encoder needs full MCUs, got $w x $h")
+    requireQuant(quantY); requireQuant(quantC)
+    val yP = new Array[Int](w * h)
+    val cbF = new Array[Int](w * h); val crF = new Array[Int](w * h)
+    var p = 0
+    while (p < w * h) {
+      val (yy, cb, cr) = rgbToYcc(rgb(3 * p) & 0xff, rgb(3 * p + 1) & 0xff, rgb(3 * p + 2) & 0xff)
+      yP(p) = yy; cbF(p) = cb; crF(p) = cr
+      p += 1
+    }
+    val cw = w / 2; val ch = h / 2
+    def subsample(src: Array[Int]): Array[Int] = Array.tabulate(cw * ch) { ci =>
+      val i0 = (2 * (ci / cw)) * w + 2 * (ci % cw)
+      (src(i0) + src(i0 + 1) + src(i0 + w) + src(i0 + w + 1) + 2) / 4
+    }
+    Seq(JComp(1, 2, 2, 0, 0, jpegForwardDct(yP, w, h, quantY), w / 8),
+      JComp(2, 1, 1, 1, 1, jpegForwardDct(subsample(cbF), cw, ch, quantC), cw / 8),
+      JComp(3, 1, 1, 1, 1, jpegForwardDct(subsample(crF), cw, ch, quantC), cw / 8))
+  }
+
+  /** Encode an 8-bit grayscale buffer as a REAL baseline JPEG: level shift,
+    * 8×8 forward DCT, quantize by `quant` (natural order), zigzag, Annex-K
+    * Huffman entropy coding with byte stuffing. Partial edge blocks pad by
+    * edge replication (the standard encoder treatment). With
+    * [[JpegFlatQuant8]] a block-constant image is lossless (q214); with
+    * [[JpegStdQuant]] it is genuinely lossy — MultimodalSpec pins both
+    * against the JDK's own ImageIO JPEG codec.
+    */
+  def jpegEncodeGray(pixels: Array[Byte], w: Int, h: Int,
+                     quant: Array[Int] = JpegStdQuant): Array[Byte] = {
+    val c = jpegGrayComp(pixels, w, h, quant)
+    val wr = new JpegWriter
+    wr.header(0xc0, w, h, Seq(quant), Seq(c))
+    jpegBaselineScan(wr, Seq(c), c.bw, (h + 7) / 8)
+    wr.finish()
   }
 
   /** REAL progressive grayscale JPEG (SOF2): the classic six-scan
@@ -2797,683 +3069,28 @@ object Multimodal {
                                 quant: Array[Int] = JpegStdQuant): Array[Byte] =
     jpegEncodeGrayProgressiveKnobs(pixels, w, h, quant, approx = true, bands = true)
 
+  /** The gray progressive script with its two shapes exposed to the spec:
+    * `approx` codes at Al=1 then refines to 0 (else one pass at Al=0);
+    * `bands` splits AC into 1..5 and 6..63 (else one 1..63 band).
+    */
   private[scale] def jpegEncodeGrayProgressiveKnobs(
       pixels: Array[Byte], w: Int, h: Int, quant: Array[Int],
       approx: Boolean, bands: Boolean): Array[Byte] = {
-    require(pixels.length == w * h, s"pixel buffer ${pixels.length} != $w x $h")
-    require(quant.length == 64 && quant.forall(q => q >= 1 && q <= 255))
-    val bw = (w + 7) / 8; val bh = (h + 7) / 8
-    val nBlocks = bw * bh
-    val coefs = jpegForwardCoefs(pixels, w, h, quant)
-    val out = new java.io.ByteArrayOutputStream()
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
-    def marker(m: Int): Unit = { u8(0xff); u8(m) }
-    marker(0xd8)
-    marker(0xdb); u16(2 + 1 + 64); u8(0)
-    JZigZag.foreach(nat => u8(quant(nat)))
-    marker(0xc2); u16(2 + 6 + 3); u8(8); u16(h); u16(w); u8(1) // SOF2
-    u8(1); u8(0x11); u8(0)
-    def dht(cls: Int, id: Int, bits: Array[Int], vals: Array[Int]): Unit = {
-      marker(0xc4); u16(2 + 1 + 16 + vals.length); u8((cls << 4) | id)
-      bits.foreach(u8); vals.foreach(u8)
-    }
-    // bit emitter with byte stuffing, flushed (1-padded) per scan
-    var acc = 0L; var nbits = 0
-    def putBits(code: Int, len: Int): Unit = {
-      acc = (acc << len) | (code & ((1L << len) - 1)); nbits += len
-      while (nbits >= 8) {
-        val byte = ((acc >> (nbits - 8)) & 0xff).toInt
-        u8(byte); if (byte == 0xff) u8(0x00)
-        nbits -= 8
-      }
-    }
-    def flushBits(): Unit = if (nbits > 0) { val p = 8 - nbits; putBits((1 << p) - 1, p) }
-    def category(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    def sos(dcT: Int, acT: Int, ss: Int, se: Int, ah: Int, al: Int): Unit = {
-      marker(0xda); u16(2 + 1 + 2 + 3); u8(1); u8(1); u8((dcT << 4) | acT)
-      u8(ss); u8(se); u8((ah << 4) | al)
-    }
-    val dcAl = if (approx) 1 else 0
-    // ---- DC first: diff coding over the point-transformed values -------
-    dht(0, 0, JDcBits, JDcVals)
-    val dcCodes = canonicalCodes(JDcBits, JDcVals)
-    sos(0, 0, 0, 0, 0, dcAl)
-    locally {
-      var pred = 0
-      var blk = 0
-      while (blk < nBlocks) {
-        val t = coefs(blk * 64) >> dcAl
-        val diff = t - pred; pred = t
-        val s = category(diff)
-        val (c, l) = dcCodes(s); putBits(c, l)
-        if (s > 0) putBits(if (diff >= 0) diff else diff - 1, s)
-        blk += 1
-      }
-      flushBits()
-    }
-    // ---- AC scans -------------------------------------------------------
-    /** Emit one AC scan (first pass when ah == 0, refinement otherwise).
-      * `emitSym` is resolved per pass: pass 1 collects the symbol set for
-      * the scan's DHT, pass 2 writes bits.
-      */
-    def acScan(ss: Int, se: Int, ah: Int, al: Int): Unit = {
-      val symbols = scala.collection.mutable.LinkedHashSet.empty[Int]
-      var emitting = false
-      var codes: Map[Int, (Int, Int)] = null
-      def sym(rs: Int): Unit =
-        if (!emitting) symbols += rs
-        else { val (c, l) = codes(rs); putBits(c, l) }
-      def bits(v: Int, n: Int): Unit = if (emitting && n > 0) putBits(v, n)
-      def onePass(): Unit = {
-        if (ah == 0) { // AC first with batched EOB runs
-          var eobrun = 0
-          def flushEob(): Unit = if (eobrun > 0) {
-            val r = 31 - Integer.numberOfLeadingZeros(eobrun)
-            sym(r << 4); bits(eobrun - (1 << r), r)
-            eobrun = 0
-          }
-          var blk = 0
-          while (blk < nBlocks) {
-            val base = blk * 64
-            var r = 0
-            var any = false
-            var k = ss
-            while (k <= se) {
-              val c = coefs(base + JZigZag(k))
-              val t = if (c >= 0) c >> al else -((-c) >> al)
-              if (t == 0) r += 1
-              else {
-                flushEob()
-                while (r > 15) { sym(0xf0); r -= 16 }
-                val s = category(t)
-                sym((r << 4) | s); bits(if (t >= 0) t else t - 1, s)
-                r = 0; any = true
-              }
-              k += 1
-            }
-            if (r > 0 || !any) {
-              eobrun += 1
-              if (eobrun == 0x7fff) flushEob()
-            }
-            blk += 1
-          }
-          flushEob()
-        } else { // AC refinement: per-block EOB, correction bits ride
-          val p1 = 1 << al
-          var blk = 0
-          while (blk < nBlocks) {
-            val base = blk * 64
-            // last newly-significant position at this level
-            var lastNew = ss - 1
-            var k = ss
-            while (k <= se) {
-              val c = coefs(base + JZigZag(k))
-              if (math.abs(c) >> al == 1) lastNew = k
-              k += 1
-            }
-            val br = scala.collection.mutable.ArrayBuffer.empty[Int]
-            def flushBr(): Unit = { br.foreach(bit => bits(bit, 1)); br.clear() }
-            var r = 0
-            k = ss
-            while (k <= lastNew) {
-              val c = coefs(base + JZigZag(k))
-              val t = math.abs(c) >> al
-              if (t == 0) r += 1
-              else if (t > 1) br += ((math.abs(c) >> al) & 1)
-              else {
-                while (r > 15) { sym(0xf0); flushBr(); r -= 16 }
-                sym((r << 4) | 1); bits(if (c >= 0) 1 else 0, 1)
-                flushBr()
-                r = 0
-              }
-              k += 1
-            }
-            if (lastNew < se) { // EOB covers the tail; corrections follow
-              sym(0x00)
-              while (k <= se) {
-                val c = coefs(base + JZigZag(k))
-                if (math.abs(c) >> al > 1) bits((math.abs(c) >> al) & 1, 1)
-                k += 1
-              }
-            }
-            blk += 1
-          }
-        }
-      }
-      onePass() // collect symbols
-      // flat canonical table over the symbol set (all codes 8 bits:
-      // n <= 162 << 255, the all-ones code stays unused)
-      val vals = symbols.toArray.sorted
-      require(vals.nonEmpty && vals.length <= 255)
-      val bitsArr = Array.tabulate(16)(i => if (i == 7) vals.length else 0)
-      dht(1, 1, bitsArr, vals)
-      codes = vals.zipWithIndex.map { case (v, i) => v -> ((i, 8)) }.toMap
-      sos(0, 1, ss, se, ah, al)
-      emitting = true
-      onePass() // emit
-      flushBits()
-    }
-    val acAl = if (approx) 1 else 0
-    if (bands) { acScan(1, 5, 0, acAl); acScan(6, 63, 0, acAl) }
-    else acScan(1, 63, 0, acAl)
-    if (approx) {
-      // ---- DC refine (Ah=1, Al=0): one raw bit per block, no table -----
-      sos(0, 0, 0, 0, 1, 0)
-      locally {
-        var blk = 0
-        while (blk < nBlocks) {
-          putBits(coefs(blk * 64) & 1, 1)
-          blk += 1
-        }
-        flushBits()
-      }
-      if (bands) { acScan(1, 5, 1, 0); acScan(6, 63, 1, 0) }
-      else acScan(1, 63, 1, 0)
-    }
-    marker(0xd9)
-    out.toByteArray
+    val c = jpegGrayComp(pixels, w, h, quant)
+    val wr = new JpegWriter
+    wr.header(0xc2, w, h, Seq(quant), Seq(c))
+    jpegProgressiveScans(wr, Seq(c), c.bw, (h + 7) / 8,
+      if (bands) Seq((1, 5), (6, 63)) else Seq((1, 63)), if (approx) 1 else 0)
+    wr.finish()
   }
 
-  def jpegEncodeGray(pixels: Array[Byte], w: Int, h: Int,
-                     quant: Array[Int] = JpegStdQuant): Array[Byte] = {
-    require(pixels.length == w * h, s"pixel buffer ${pixels.length} != $w x $h")
-    require(quant.length == 64 && quant.forall(q => q >= 1 && q <= 255))
-    val out = new java.io.ByteArrayOutputStream()
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
-    def marker(m: Int): Unit = { u8(0xff); u8(m) }
-    marker(0xd8) // SOI
-    marker(0xdb); u16(2 + 1 + 64); u8(0) // DQT, Pq=0 Tq=0
-    JZigZag.foreach(nat => u8(quant(nat)))
-    marker(0xc0); u16(2 + 6 + 3); u8(8); u16(h); u16(w); u8(1) // SOF0, 1 comp
-    u8(1); u8(0x11); u8(0) // id 1, 1x1 sampling, quant table 0
-    def dht(cls: Int, bits: Array[Int], vals: Array[Int]): Unit = {
-      marker(0xc4); u16(2 + 1 + 16 + vals.length); u8(cls << 4)
-      bits.foreach(u8); vals.foreach(u8)
-    }
-    dht(0, JDcBits, JDcVals); dht(1, JAcBits, JAcVals)
-    marker(0xda); u16(2 + 1 + 2 + 3); u8(1); u8(1); u8(0x00); u8(0); u8(63); u8(0)
-    // entropy-coded segment with byte stuffing
-    var acc = 0L; var nbits = 0
-    def putBits(code: Int, len: Int): Unit = {
-      acc = (acc << len) | (code & ((1L << len) - 1)); nbits += len
-      while (nbits >= 8) {
-        val byte = ((acc >> (nbits - 8)) & 0xff).toInt
-        u8(byte); if (byte == 0xff) u8(0x00)
-        nbits -= 8
-      }
-    }
-    val dcCodes = canonicalCodes(JDcBits, JDcVals)
-    val acCodes = canonicalCodes(JAcBits, JAcVals)
-    val acIndex = new Array[Int](256); java.util.Arrays.fill(acIndex, -1)
-    JAcVals.zipWithIndex.foreach { case (v, i) => acIndex(v) = i }
-    def category(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    def putVal(v: Int, s: Int): Unit =
-      if (s > 0) putBits(if (v >= 0) v else v - 1, s)
-    val bw = (w + 7) / 8; val bh = (h + 7) / 8
-    val allCoefs = jpegForwardCoefs(pixels, w, h, quant)
-    val coef = new Array[Int](64)
-    var pred = 0
-    var by = 0
-    while (by < bh) {
-      var bx = 0
-      while (bx < bw) {
-        System.arraycopy(allCoefs, (by * bw + bx) * 64, coef, 0, 64)
-        // DC difference
-        val dc = coef(0); val diff = dc - pred; pred = dc
-        val s0 = category(diff)
-        val (dcode, dlen) = dcCodes(s0); putBits(dcode, dlen); putVal(diff, s0)
-        // AC run-length coding in zigzag order
-        var run = 0
-        var k = 1
-        while (k < 64) {
-          val v = coef(JZigZag(k))
-          if (v == 0) run += 1
-          else {
-            while (run >= 16) { val (zc, zl) = acCodes(acIndex(0xf0)); putBits(zc, zl); run -= 16 }
-            val s = category(v)
-            val (ac, al) = acCodes(acIndex((run << 4) | s))
-            putBits(ac, al); putVal(v, s)
-            run = 0
-          }
-          k += 1
-        }
-        if (run > 0) { val (ec, el) = acCodes(acIndex(0x00)); putBits(ec, el) }
-        bx += 1
-      }
-      by += 1
-    }
-    if (nbits > 0) { // pad final byte with 1-bits
-      val pad = 8 - nbits
-      putBits((1 << pad) - 1, pad)
-    }
-    marker(0xd9) // EOI
-    out.toByteArray
-  }
-
-  /** REAL JPEG pixel decode for 8-bit single-component grayscale —
-    * baseline (SOF0) and progressive (SOF2) through one multi-scan
-    * coefficient-domain walk. See the family comment above. Restart
-    * markers (DRI/RSTn) are honored; foreign Huffman and quantization
-    * tables (any spec-valid DHT/DQT, 8- or 16-bit precision, redefined
-    * between scans) are accepted — MultimodalSpec decodes the JDK ImageIO
-    * writer's output through this path and pins
-    * decode(progressive) == decode(baseline) byte-exactly.
-    */
-  def jpegDecodeGray(b: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
-    if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-    def u8(i: Int): Int = b(i) & 0xff
-    def u16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
-    val quant = Array.ofDim[Int](4, 64)
-    val quantSeen = new Array[Boolean](4)
-    // huffBits(cls)(id) parallel to huffVals — canonical rebuild; tables
-    // may be (re)defined BETWEEN scans, so they live across the walk
-    val huffBits = Array.ofDim[Array[Int]](2, 4)
-    val huffVals = Array.ofDim[Array[Int]](2, 4)
-    var w = -1; var h = -1; var qTab = -1
-    var progressive = false
-    var frameSeen = false
-    var restartInterval = 0
-    var bw = 0; var bh = 0
-    var coefs: Array[Int] = null // bw*bh*64 RAW coefficients, natural order
-    // canonical Huffman decode tables: mincode/maxcode/valptr per length
-    def decTables(bits: Array[Int]): (Array[Int], Array[Int], Array[Int]) = {
-      val mincode = new Array[Int](17); val maxcode = new Array[Int](17)
-      val valptr = new Array[Int](17)
-      var code = 0; var k = 0
-      var len = 1
-      while (len <= 16) {
-        valptr(len) = k; mincode(len) = code
-        code += bits(len - 1); k += bits(len - 1)
-        maxcode(len) = code - 1
-        if (bits(len - 1) == 0) maxcode(len) = -1
-        code <<= 1
-        len += 1
-      }
-      (mincode, maxcode, valptr)
-    }
-    // entropy-coded bit reader: byte unstuffing, restart-marker awareness;
-    // reset at each SOS, shared by every scan type
-    var pos = 0; var acc = 0; var nbits = 0; var hitMarker = false
-    def fill(): Boolean = {
-      while (nbits <= 24 && !hitMarker) {
-        if (pos >= b.length) return nbits > 0
-        val v = u8(pos)
-        if (v == 0xff) {
-          if (pos + 1 >= b.length) { hitMarker = true; return nbits > 0 }
-          val nxt = u8(pos + 1)
-          if (nxt == 0x00) { acc = (acc << 8) | 0xff; nbits += 8; pos += 2 }
-          else { hitMarker = true; return nbits > 0 } // RST or EOI: stop here
-        } else { acc = (acc << 8) | v; nbits += 8; pos += 1 }
-      }
-      true
-    }
-    def readBit(): Int = {
-      if (nbits == 0 && !fill()) return -1
-      if (nbits == 0) return -1
-      nbits -= 1
-      (acc >> nbits) & 1
-    }
-    def readBits(n: Int): Int = {
-      var v = 0; var j = 0
-      while (j < n) { val bit = readBit(); if (bit < 0) return -1; v = (v << 1) | bit; j += 1 }
-      v
-    }
-    def decodeSym(min: Array[Int], max: Array[Int], ptr: Array[Int],
-                  vals: Array[Int]): Int = {
-      var code = 0; var len = 0
-      while (len < 16) {
-        val bit = readBit(); if (bit < 0) return -1
-        code = (code << 1) | bit; len += 1
-        if (max(len) >= 0 && code <= max(len))
-          return vals(ptr(len) + code - min(len))
-      }
-      -1
-    }
-    def extend(v: Int, s: Int): Int =
-      if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
-    def syncRestart(): Boolean = {
-      // byte-align and consume the RSTn marker the reader stopped at
-      nbits = 0; acc = 0; hitMarker = false
-      while (pos + 1 < b.length && !(u8(pos) == 0xff && u8(pos + 1) >= 0xd0 && u8(pos + 1) <= 0xd7)) {
-        if (u8(pos) == 0xff && u8(pos + 1) != 0x00) return false
-        pos += 1
-      }
-      if (pos + 1 >= b.length) return false
-      pos += 2
-      true
-    }
-    /** One scan over all blocks (single-component => block raster order in
-      * both modes). Baseline: the full DC+AC block decode. Progressive
-      * (T.81 G.1.2): DC first/refine, AC first/refine with EOB runs.
-      * Coefficients accumulate RAW into `coefs`; dequantization happens
-      * once, after EOI.
-      */
-    def runScan(dcT: Int, acT: Int, ss: Int, se: Int, ah: Int, al: Int): Boolean = {
-      val needDcTable = (ss == 0 && ah == 0) || !progressive
-      val needAcTable = ss > 0 || !progressive
-      if (needDcTable && huffBits(0)(dcT) == null) return false
-      if (needAcTable && huffBits(1)(acT) == null) return false
-      val (dcMin, dcMax, dcPtr) =
-        if (needDcTable) decTables(huffBits(0)(dcT)) else (null, null, null)
-      val (acMin, acMax, acPtr) =
-        if (needAcTable) decTables(huffBits(1)(acT)) else (null, null, null)
-      val dcV = if (needDcTable) huffVals(0)(dcT) else null
-      val acV = if (needAcTable) huffVals(1)(acT) else null
-      var pred = 0
-      var eobrun = 0
-      val p1 = 1 << al
-      val m1 = -1 << al
-      var sinceRestart = 0
-      var blkIdx = 0
-      val totalBlocks = bw * bh
-      while (blkIdx < totalBlocks) {
-        if (restartInterval > 0 && sinceRestart == restartInterval) {
-          if (!syncRestart()) return false
-          pred = 0; eobrun = 0; sinceRestart = 0
-        }
-        val base = blkIdx * 64
-        if (!progressive) {
-          // baseline: DC + full AC in one pass
-          val s0 = decodeSym(dcMin, dcMax, dcPtr, dcV)
-          if (s0 < 0 || s0 > 11) return false
-          val dbits = if (s0 == 0) 0 else readBits(s0)
-          if (dbits < 0) return false
-          pred += extend(dbits, s0)
-          coefs(base) = pred
-          var k = 1
-          var eob = false
-          while (k < 64 && !eob) {
-            val rs = decodeSym(acMin, acMax, acPtr, acV)
-            if (rs < 0) return false
-            if (rs == 0x00) eob = true
-            else if (rs == 0xf0) k += 16
-            else {
-              k += rs >> 4
-              val s = rs & 0x0f
-              if (k > 63) return false
-              val vb = readBits(s); if (vb < 0) return false
-              coefs(base + JZigZag(k)) = extend(vb, s)
-              k += 1
-            }
-          }
-        } else if (ss == 0) {
-          if (ah == 0) { // DC first: diff coded at the point transform
-            val s0 = decodeSym(dcMin, dcMax, dcPtr, dcV)
-            if (s0 < 0 || s0 > 11) return false
-            val dbits = if (s0 == 0) 0 else readBits(s0)
-            if (dbits < 0) return false
-            pred += extend(dbits, s0)
-            coefs(base) = pred << al
-          } else { // DC refine: one raw bit per block
-            val bit = readBit(); if (bit < 0) return false
-            if (bit == 1) coefs(base) |= p1
-          }
-        } else if (ah == 0) { // AC first (G.1.2.2)
-          if (eobrun > 0) eobrun -= 1
-          else {
-            var k = ss
-            var blockDone = false
-            while (k <= se && !blockDone) {
-              val rs = decodeSym(acMin, acMax, acPtr, acV)
-              if (rs < 0) return false
-              val r = rs >> 4; val s = rs & 15
-              if (s == 0) {
-                if (r == 15) k += 16 // ZRL
-                else {
-                  eobrun = (1 << r) - 1
-                  if (r > 0) {
-                    val ext = readBits(r); if (ext < 0) return false
-                    eobrun += ext
-                  }
-                  blockDone = true
-                }
-              } else {
-                k += r
-                if (k > se) return false
-                val vb = readBits(s); if (vb < 0) return false
-                coefs(base + JZigZag(k)) = extend(vb, s) << al
-                k += 1
-              }
-            }
-          }
-        } else { // AC refine (G.1.2.3): correction bits + new +-1 coefficients
-          var k = ss
-          if (eobrun == 0) {
-            var scanDone = false
-            while (k <= se && !scanDone) {
-              val rs = decodeSym(acMin, acMax, acPtr, acV)
-              if (rs < 0) return false
-              var r = rs >> 4; val s = rs & 15
-              var newval = 0
-              if (s == 0) {
-                if (r < 15) {
-                  eobrun = 1 << r
-                  if (r > 0) {
-                    val ext = readBits(r); if (ext < 0) return false
-                    eobrun += ext
-                  }
-                  scanDone = true
-                }
-                // r == 15: skip 16 zero-history positions (corrections ride)
-              } else {
-                if (s != 1) return false // refinement codes only +-1
-                val bit = readBit(); if (bit < 0) return false
-                newval = if (bit == 1) p1 else m1
-              }
-              if (!scanDone) {
-                var placed = false
-                while (k <= se && !placed) {
-                  val p = base + JZigZag(k)
-                  if (coefs(p) != 0) {
-                    val bit = readBit(); if (bit < 0) return false
-                    if (bit == 1 && (coefs(p) & p1) == 0)
-                      coefs(p) += (if (coefs(p) >= 0) p1 else m1)
-                  } else {
-                    if (r == 0) {
-                      if (newval != 0) coefs(p) = newval
-                      placed = true
-                    } else r -= 1
-                  }
-                  k += 1
-                }
-                if (!placed && newval != 0) return false // ran off the band
-              }
-            }
-          }
-          if (eobrun > 0) { // EOB run: corrections continue over nonzeros
-            while (k <= se) {
-              val p = base + JZigZag(k)
-              if (coefs(p) != 0) {
-                val bit = readBit(); if (bit < 0) return false
-                if (bit == 1 && (coefs(p) & p1) == 0)
-                  coefs(p) += (if (coefs(p) >= 0) p1 else m1)
-              }
-              k += 1
-            }
-            eobrun -= 1
-          }
-        }
-        sinceRestart += 1
-        blkIdx += 1
-      }
-      true
-    }
-    // ---- marker walk: tables + frame, scans processed as encountered ----
-    var i = 2
-    var eoiSeen = false
-    var anyScan = false
-    // Per-band successive-approximation state across progressive scans
-    // (T.81 G.1.1.1.1): bandAl(k) is the Al the band was last coded at,
-    // -1 = untouched. A refinement whose Ah does not match the band's
-    // current Al, a duplicate first pass, or an AC scan before the DC
-    // first pass is a non-conforming scan script — fail closed instead of
-    // decoding garbage pixels.
-    val bandAl = Array.fill(64)(-1)
-    while (!eoiSeen) {
-      if (i + 2 > b.length) return None
-      if (u8(i) != 0xff) return None
-      var m = u8(i + 1)
-      while (m == 0xff) { i += 1; if (i + 2 > b.length) return None; m = u8(i + 1) }
-      if (m == 0xd9) eoiSeen = true
-      else {
-        if (i + 4 > b.length) return None
-        val len = u16(i + 2)
-        if (len < 2 || i + 2 + len > b.length) return None
-        val seg = i + 4
-        var nextI = i + 2 + len
-        m match {
-          case 0xc0 | 0xc2 => // SOF0 baseline / SOF2 progressive
-            if (frameSeen) return None
-            frameSeen = true
-            progressive = m == 0xc2
-            if (u8(seg) != 8) return None // 8-bit precision only
-            h = u16(seg + 1); w = u16(seg + 3)
-            if (u8(seg + 5) != 1) return None // grayscale only
-            if (u8(seg + 7) != 0x11) return None // 1x1 sampling
-            qTab = u8(seg + 8)
-            if (w <= 0 || h <= 0) return None
-            bw = (w + 7) / 8; bh = (h + 7) / 8
-            coefs = new Array[Int](bw * bh * 64)
-          case 0xc1 | 0xc3 | 0xc5 | 0xc6 | 0xc7 |
-               0xc9 | 0xca | 0xcb | 0xcd | 0xce | 0xcf =>
-            return None // extended/lossless/arithmetic frames: fail closed
-          case 0xc4 => // DHT: one or more tables
-            var p = seg
-            while (p < i + 2 + len) {
-              val tc = u8(p) >> 4; val th = u8(p) & 0x0f
-              if (tc > 1 || th > 3 || p + 17 > i + 2 + len) return None
-              val bits = Array.tabulate(16)(j => u8(p + 1 + j))
-              val n = bits.sum
-              if (n == 0 || n > 256 || p + 17 + n > i + 2 + len) return None
-              huffBits(tc)(th) = bits
-              huffVals(tc)(th) = Array.tabulate(n)(j => u8(p + 17 + j))
-              p += 17 + n
-            }
-          case 0xdb => // DQT: one or more tables, Pq 0 (8-bit) or 1 (16-bit)
-            var p = seg
-            while (p < i + 2 + len) {
-              val pq = u8(p) >> 4; val tq = u8(p) & 0x0f
-              if (pq > 1 || tq > 3) return None
-              val step = if (pq == 0) 1 else 2
-              if (p + 1 + 64 * step > i + 2 + len) return None
-              var k = 0
-              while (k < 64) {
-                quant(tq)(JZigZag(k)) =
-                  if (pq == 0) u8(p + 1 + k) else u16(p + 1 + 2 * k)
-                k += 1
-              }
-              quantSeen(tq) = true
-              p += 1 + 64 * step
-            }
-          case 0xdd => // DRI
-            restartInterval = u16(seg)
-          case 0xda => // SOS: decode this scan in place
-            if (!frameSeen) return None
-            if (u8(seg) != 1) return None // single-component scan only
-            val dcT = u8(seg + 2) >> 4; val acT = u8(seg + 2) & 0x0f
-            if (dcT > 3 || acT > 3) return None // selectors index 4 tables
-            val ss = u8(seg + 3); val se = u8(seg + 4)
-            val ah = u8(seg + 5) >> 4; val al = u8(seg + 5) & 0x0f
-            if (progressive) {
-              if (ss == 0 && se != 0) return None // DC scans carry only k=0
-              if (ss > 0 && (se < ss || se > 63)) return None
-              if (al > 13 || (ah != 0 && ah != al + 1)) return None
-              if (ss > 0 && bandAl(0) < 0) return None // AC before DC first pass
-              var k = if (ss == 0) 0 else ss
-              val kEnd = if (ss == 0) 0 else se
-              while (k <= kEnd) {
-                if (ah == 0) { if (bandAl(k) >= 0) return None } // duplicate first pass
-                else if (bandAl(k) != ah) return None // refinement out of sequence
-                bandAl(k) = al
-                k += 1
-              }
-            } else {
-              if (ss != 0 || se != 63 || ah != 0 || al != 0) return None
-              if (anyScan) return None // baseline: exactly one scan
-            }
-            pos = i + 2 + len; acc = 0; nbits = 0; hitMarker = false
-            if (!runScan(dcT, acT, ss, se, ah, al)) return None
-            anyScan = true
-            nextI = pos // the reader stopped AT the next marker's 0xff
-          case _ => () // APPn / COM / others: skip
-        }
-        i = nextI
-      }
-    }
-    if (!frameSeen || !anyScan || qTab < 0 || !quantSeen(qTab)) return None
-    // ---- dequantize + IDCT every block ----
-    val qt = quant(qTab)
-    val out = new Array[Byte](w * h)
-    val px = new Array[Double](64)
-    var blkIdx = 0
-    val totalBlocks = bw * bh
-    while (blkIdx < totalBlocks) {
-      val base = blkIdx * 64
-      var y = 0
-      while (y < 8) {
-        var x = 0
-        while (x < 8) {
-          var sum = 0.0
-          var u = 0
-          while (u < 8) {
-            var v = 0
-            while (v < 8) {
-              val c = coefs(base + u * 8 + v)
-              if (c != 0)
-                sum += c0(u) * c0(v) * c * qt(u * 8 + v) *
-                  CosTable(u * 8 + y) * CosTable(v * 8 + x)
-              v += 1
-            }
-            u += 1
-          }
-          px(y * 8 + x) = 0.25 * sum + 128.0
-          x += 1
-        }
-        y += 1
-      }
-      val by = blkIdx / bw; val bx = blkIdx % bw
-      var yy = 0
-      while (yy < 8) {
-        val py = by * 8 + yy
-        if (py < h) {
-          var xx = 0
-          while (xx < 8) {
-            val pxx = bx * 8 + xx
-            if (pxx < w) {
-              val v = math.round(px(yy * 8 + xx)).toInt
-              out(py * w + pxx) = math.max(0, math.min(255, v)).toByte
-            }
-            xx += 1
-          }
-        }
-        yy += 1
-      }
-      blkIdx += 1
-    }
-    Some((w, h, out))
-  }
-
-  // ---- baseline COLOR JPEG: YCbCr, 4:2:0 interleaved MCUs ----
+  // ---- color: YCbCr, 4:2:0 interleaved MCUs ----
   //
-  // Extends the grayscale codec to the form nearly every web JPEG takes:
-  // three components, chroma subsampled 2×2, one interleaved scan. The
-  // color conversions are libjpeg-style 16-bit fixed point with explicit
-  // positive-bias divisions, so every step is integer-exact and the q225
-  // oracle replays the full decode arithmetic in SQL.
-
-  // Annex K.3.3.1 / K.3.3.2 chrominance Huffman tables
-  private val JDcBitsC = Array(0, 3, 1, 1, 1, 1, 1, 1, 1, 1, 1, 0, 0, 0, 0, 0)
-  private val JDcValsC = (0 to 11).toArray
-  private val JAcBitsC = Array(0, 2, 1, 2, 4, 4, 3, 4, 7, 5, 4, 4, 0, 1, 2, 119)
-  private val JAcValsC = hexBytes(
-    "000102031104052131061241510761711322328108144291a1b1c109233352f0" +
-      "156272d10a162434e125f11718191a262728292a35363738393a434445464748" +
-      "494a535455565758595a636465666768696a737475767778797a828384858687" +
-      "88898a92939495969798999aa2a3a4a5a6a7a8a9aab2b3b4b5b6b7b8b9bac2c3" +
-      "c4c5c6c7c8c9cad2d3d4d5d6d7d8d9dae2e3e4e5e6e7e8e9eaf2f3f4f5f6f7f8" +
-      "f9fa")
+  // The form nearly every web JPEG takes: three components, chroma
+  // subsampled 2×2. The color conversions are libjpeg-style 16-bit fixed
+  // point with explicit positive-bias divisions, so every step is
+  // integer-exact and the q225 oracle replays the full decode arithmetic in
+  // SQL.
 
   /** Fixed-point RGB → luma: the q225 JPEG chain's Y ([[rgbToYcc]]'s first
     * component), shared by the color PNG/GIF/VP8L → dHash paths (r17
@@ -3510,6 +3127,25 @@ object Multimodal {
     (r, g, b)
   }
 
+  /** Encode an interleaved RGB buffer (3 bytes per pixel) as a REAL
+    * baseline 4:2:0 color JPEG: fixed-point YCbCr conversion, exact 2×2
+    * chroma mean subsampling, per-component Annex-K luma/chroma tables,
+    * interleaved MCU entropy coding with independent DC predictors.
+    * Requires w, h multiples of 16 (full MCUs — the fixture contract; the
+    * DECODER handles arbitrary dimensions). With [[JpegFlatQuant8]] on
+    * both tables a macroblock-constant image round-trips to exactly
+    * `yccToRgb(rgbToYcc(...))` — the q225 losslessness basis.
+    */
+  def jpegEncodeColor420(rgb: Array[Byte], w: Int, h: Int,
+                         quantY: Array[Int] = JpegStdQuant,
+                         quantC: Array[Int] = JpegStdQuant): Array[Byte] = {
+    val comps = jpegColorComps(rgb, w, h, quantY, quantC)
+    val wr = new JpegWriter
+    wr.header(0xc0, w, h, Seq(quantY, quantC), comps)
+    jpegBaselineScan(wr, comps, w / 16, h / 16)
+    wr.finish()
+  }
+
   /** REAL progressive color JPEG (SOF2, 4:2:0): the interleaved-DC +
     * per-component-AC progression real encoders emit — one interleaved DC
     * first scan at Al=1 (Y through the Annex-K luminance DC table, chroma
@@ -3523,487 +3159,53 @@ object Multimodal {
   def jpegEncodeColorProgressive(rgb: Array[Byte], w: Int, h: Int,
                                  quantY: Array[Int] = JpegStdQuant,
                                  quantC: Array[Int] = JpegStdQuant): Array[Byte] = {
-    require(rgb.length == 3 * w * h, s"rgb buffer ${rgb.length} != 3*$w*$h")
-    require(w % 16 == 0 && h % 16 == 0, s"encoder needs full MCUs, got $w x $h")
-    // plane conversion + subsample: byte-identical to jpegEncodeColor420
-    val yP = new Array[Int](w * h)
-    val cbF = new Array[Int](w * h); val crF = new Array[Int](w * h)
-    var p = 0
-    while (p < w * h) {
-      val (yy, cb, cr) = rgbToYcc(rgb(3 * p) & 0xff, rgb(3 * p + 1) & 0xff,
-        rgb(3 * p + 2) & 0xff)
-      yP(p) = yy; cbF(p) = cb; crF(p) = cr
-      p += 1
-    }
-    val cw = w / 2; val ch = h / 2
-    val cbP = new Array[Int](cw * ch); val crP = new Array[Int](cw * ch)
-    var cy = 0
-    while (cy < ch) {
-      var cx = 0
-      while (cx < cw) {
-        def mean(srcA: Array[Int]): Int = {
-          val i0 = (2 * cy) * w + 2 * cx
-          (srcA(i0) + srcA(i0 + 1) + srcA(i0 + w) + srcA(i0 + w + 1) + 2) / 4
-        }
-        cbP(cy * cw + cx) = mean(cbF); crP(cy * cw + cx) = mean(crF)
-        cx += 1
-      }
-      cy += 1
-    }
-    // forward DCT + quant per component (full MCUs: no edge replication)
-    def fwd(plane: Array[Int], pw2: Int, ph2: Int, quant: Array[Int]): Array[Int] = {
-      val bw2 = pw2 / 8; val bh2 = ph2 / 8
-      val outC = new Array[Int](bw2 * bh2 * 64)
-      val blk = new Array[Double](64)
-      var by = 0
-      while (by < bh2) {
-        var bx = 0
-        while (bx < bw2) {
-          var y = 0
-          while (y < 8) {
-            var x = 0
-            while (x < 8) {
-              blk(y * 8 + x) = plane((by * 8 + y) * pw2 + bx * 8 + x) - 128.0
-              x += 1
-            }
-            y += 1
-          }
-          val base = (by * bw2 + bx) * 64
-          var u = 0
-          while (u < 8) {
-            var v = 0
-            while (v < 8) {
-              var sum = 0.0
-              var y2 = 0
-              while (y2 < 8) {
-                var x2 = 0
-                while (x2 < 8) {
-                  sum += blk(y2 * 8 + x2) * CosTable(u * 8 + y2) * CosTable(v * 8 + x2)
-                  x2 += 1
-                }
-                y2 += 1
-              }
-              outC(base + u * 8 + v) =
-                math.round(0.25 * c0(u) * c0(v) * sum / quant(u * 8 + v)).toInt
-              v += 1
-            }
-            u += 1
-          }
-          bx += 1
-        }
-        by += 1
-      }
-      outC
-    }
-    val coefsC = Array(fwd(yP, w, h, quantY), fwd(cbP, cw, ch, quantC),
-      fwd(crP, cw, ch, quantC))
-    val bW = Array(w / 8, cw / 8, cw / 8)
-    val bH = Array(h / 8, ch / 8, ch / 8)
-    val mw = w / 16; val mh = h / 16
-    val out = new java.io.ByteArrayOutputStream()
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
-    def marker(m: Int): Unit = { u8(0xff); u8(m) }
-    marker(0xd8)
-    def dqt(id: Int, q: Array[Int]): Unit = {
-      marker(0xdb); u16(2 + 1 + 64); u8(id); JZigZag.foreach(nat => u8(q(nat)))
-    }
-    dqt(0, quantY); dqt(1, quantC)
-    marker(0xc2); u16(2 + 6 + 3 * 3); u8(8); u16(h); u16(w); u8(3) // SOF2
-    u8(1); u8(0x22); u8(0); u8(2); u8(0x11); u8(1); u8(3); u8(0x11); u8(1)
-    def dht(cls: Int, id: Int, bits: Array[Int], vals: Array[Int]): Unit = {
-      marker(0xc4); u16(2 + 1 + 16 + vals.length); u8((cls << 4) | id)
-      bits.foreach(u8); vals.foreach(u8)
-    }
-    var acc = 0L; var nbits = 0
-    def putBits(code: Int, len: Int): Unit = {
-      acc = (acc << len) | (code & ((1L << len) - 1)); nbits += len
-      while (nbits >= 8) {
-        val byte = ((acc >> (nbits - 8)) & 0xff).toInt
-        u8(byte); if (byte == 0xff) u8(0x00)
-        nbits -= 8
-      }
-    }
-    def flushBits(): Unit = if (nbits > 0) { val pd = 8 - nbits; putBits((1 << pd) - 1, pd) }
-    def category(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    // ---- interleaved DC first (Al = 1) -------------------------------
-    dht(0, 0, JDcBits, JDcVals); dht(0, 1, JDcBitsC, JDcValsC)
-    marker(0xda); u16(2 + 1 + 2 * 3 + 3); u8(3)
-    u8(1); u8(0x00); u8(2); u8(0x10); u8(3); u8(0x10)
-    u8(0); u8(0); u8(0x01) // Ss=0 Se=0 Ah=0 Al=1
-    locally {
-      val dcCodesY = canonicalCodes(JDcBits, JDcVals)
-      val dcCodesC = canonicalCodes(JDcBitsC, JDcValsC)
-      val preds = new Array[Int](3)
-      var mi = 0
-      while (mi < mw * mh) {
-        val my = mi / mw; val mx = mi % mw
-        var c = 0
-        while (c < 3) {
-          val nBlk = if (c == 0) 4 else 1
-          var s = 0
-          while (s < nBlk) {
-            val bx = if (c == 0) 2 * mx + (s % 2) else mx
-            val by = if (c == 0) 2 * my + (s / 2) else my
-            val t = coefsC(c)((by * bW(c) + bx) * 64) >> 1
-            val diff = t - preds(c); preds(c) = t
-            val s0 = category(diff)
-            val (cd, cl) = (if (c == 0) dcCodesY else dcCodesC)(s0)
-            putBits(cd, cl)
-            if (s0 > 0) putBits(if (diff >= 0) diff else diff - 1, s0)
-            s += 1
-          }
-          c += 1
-        }
-        mi += 1
-      }
-      flushBits()
-    }
-    // ---- per-component AC scans (first at Al=1, refine at Al=0) -------
-    def acScan(c: Int, ah: Int, al: Int): Unit = {
-      val coefsG = coefsC(c)
-      val nBlocks = bW(c) * bH(c)
-      val symbols = scala.collection.mutable.LinkedHashSet.empty[Int]
-      var emitting = false
-      var codes: Map[Int, (Int, Int)] = null
-      def sym(rs: Int): Unit =
-        if (!emitting) symbols += rs
-        else { val (cd, cl) = codes(rs); putBits(cd, cl) }
-      def bits(v: Int, n: Int): Unit = if (emitting && n > 0) putBits(v, n)
-      def onePass(): Unit = {
-        if (ah == 0) {
-          var eobrun = 0
-          def flushEob(): Unit = if (eobrun > 0) {
-            val r = 31 - Integer.numberOfLeadingZeros(eobrun)
-            sym(r << 4); bits(eobrun - (1 << r), r)
-            eobrun = 0
-          }
-          var blk = 0
-          while (blk < nBlocks) {
-            val base = blk * 64
-            var r = 0
-            var any = false
-            var k = 1
-            while (k <= 63) {
-              val cv = coefsG(base + JZigZag(k))
-              val t = if (cv >= 0) cv >> al else -((-cv) >> al)
-              if (t == 0) r += 1
-              else {
-                flushEob()
-                while (r > 15) { sym(0xf0); r -= 16 }
-                val s = category(t)
-                sym((r << 4) | s); bits(if (t >= 0) t else t - 1, s)
-                r = 0; any = true
-              }
-              k += 1
-            }
-            if (r > 0 || !any) {
-              eobrun += 1
-              if (eobrun == 0x7fff) flushEob()
-            }
-            blk += 1
-          }
-          flushEob()
-        } else {
-          val p1 = 1 << al
-          var blk = 0
-          while (blk < nBlocks) {
-            val base = blk * 64
-            var lastNew = 0
-            var k = 1
-            while (k <= 63) {
-              if (math.abs(coefsG(base + JZigZag(k))) >> al == 1) lastNew = k
-              k += 1
-            }
-            val br = scala.collection.mutable.ArrayBuffer.empty[Int]
-            def flushBr(): Unit = { br.foreach(bit => bits(bit, 1)); br.clear() }
-            var r = 0
-            k = 1
-            while (k <= lastNew) {
-              val cv = coefsG(base + JZigZag(k))
-              val t = math.abs(cv) >> al
-              if (t == 0) r += 1
-              else if (t > 1) br += ((math.abs(cv) >> al) & 1)
-              else {
-                while (r > 15) { sym(0xf0); flushBr(); r -= 16 }
-                sym((r << 4) | 1); bits(if (cv >= 0) 1 else 0, 1)
-                flushBr()
-                r = 0
-              }
-              k += 1
-            }
-            if (lastNew < 63) {
-              sym(0x00)
-              while (k <= 63) {
-                val cv = coefsG(base + JZigZag(k))
-                if (math.abs(cv) >> al > 1) bits((math.abs(cv) >> al) & 1, 1)
-                k += 1
-              }
-            }
-            blk += 1
-          }
-        }
-      }
-      onePass()
-      val vals = symbols.toArray.sorted
-      require(vals.nonEmpty && vals.length <= 255)
-      val bitsArr = Array.tabulate(16)(i2 => if (i2 == 7) vals.length else 0)
-      dht(1, 1, bitsArr, vals)
-      codes = vals.zipWithIndex.map { case (v, i2) => v -> ((i2, 8)) }.toMap
-      marker(0xda); u16(2 + 1 + 2 + 3); u8(1); u8(c + 1); u8(0x01)
-      u8(1); u8(63); u8((ah << 4) | al)
-      emitting = true
-      onePass()
-      flushBits()
-    }
-    acScan(0, 0, 1); acScan(1, 0, 1); acScan(2, 0, 1)
-    // ---- interleaved DC refine (Ah=1, Al=0): raw bits -----------------
-    marker(0xda); u16(2 + 1 + 2 * 3 + 3); u8(3)
-    u8(1); u8(0x00); u8(2); u8(0x00); u8(3); u8(0x00)
-    u8(0); u8(0); u8(0x10)
-    locally {
-      var mi = 0
-      while (mi < mw * mh) {
-        val my = mi / mw; val mx = mi % mw
-        var c = 0
-        while (c < 3) {
-          val nBlk = if (c == 0) 4 else 1
-          var s = 0
-          while (s < nBlk) {
-            val bx = if (c == 0) 2 * mx + (s % 2) else mx
-            val by = if (c == 0) 2 * my + (s / 2) else my
-            putBits(coefsC(c)((by * bW(c) + bx) * 64) & 1, 1)
-            s += 1
-          }
-          c += 1
-        }
-        mi += 1
-      }
-      flushBits()
-    }
-    acScan(0, 1, 0); acScan(1, 1, 0); acScan(2, 1, 0)
-    marker(0xd9)
-    out.toByteArray
+    val comps = jpegColorComps(rgb, w, h, quantY, quantC)
+    val wr = new JpegWriter
+    wr.header(0xc2, w, h, Seq(quantY, quantC), comps)
+    jpegProgressiveScans(wr, comps, w / 16, h / 16, Seq((1, 63)), 1)
+    wr.finish()
   }
 
-  /** Encode an interleaved RGB buffer (3 bytes per pixel) as a REAL
-    * baseline 4:2:0 color JPEG: fixed-point YCbCr conversion, exact 2×2
-    * chroma mean subsampling, per-component Annex-K luma/chroma tables,
-    * interleaved MCU entropy coding with independent DC predictors.
-    * Requires w, h multiples of 16 (full MCUs — the fixture contract; the
-    * DECODER handles arbitrary dimensions). With [[JpegFlatQuant8]] on
-    * both tables a macroblock-constant image round-trips to exactly
-    * `yccToRgb(rgbToYcc(...))` — the q225 losslessness basis.
+  // ---- decoder core ----
+
+  /** Canonical Huffman decode table (T.81 F.2.2.3): per code length the
+    * smallest code, the largest (−1 when the length is unused) and the
+    * index of its first value.
     */
-  def jpegEncodeColor420(rgb: Array[Byte], w: Int, h: Int,
-                         quantY: Array[Int] = JpegStdQuant,
-                         quantC: Array[Int] = JpegStdQuant): Array[Byte] = {
-    require(rgb.length == 3 * w * h, s"rgb buffer ${rgb.length} != 3*$w*$h")
-    require(w % 16 == 0 && h % 16 == 0, s"encoder needs full MCUs, got $w x $h")
-    require(quantY.length == 64 && quantY.forall(q => q >= 1 && q <= 255))
-    require(quantC.length == 64 && quantC.forall(q => q >= 1 && q <= 255))
-    // plane conversion + chroma subsample (exact integer mean of 2×2)
-    val yP = new Array[Int](w * h)
-    val cbF = new Array[Int](w * h); val crF = new Array[Int](w * h)
-    var p = 0
-    while (p < w * h) {
-      val (yy, cb, cr) = rgbToYcc(rgb(3 * p) & 0xff, rgb(3 * p + 1) & 0xff,
-        rgb(3 * p + 2) & 0xff)
-      yP(p) = yy; cbF(p) = cb; crF(p) = cr
-      p += 1
+  private final class JHuffDec(val mincode: Array[Int], val maxcode: Array[Int],
+                               val valptr: Array[Int], val vals: Array[Int])
+
+  private def decTables(bits: Array[Int], vals: Array[Int]): JHuffDec = {
+    val mincode = new Array[Int](17); val maxcode = new Array[Int](17)
+    val valptr = new Array[Int](17)
+    var code = 0; var k = 0
+    var len = 1
+    while (len <= 16) {
+      valptr(len) = k; mincode(len) = code
+      code += bits(len - 1); k += bits(len - 1)
+      maxcode(len) = if (bits(len - 1) == 0) -1 else code - 1
+      code <<= 1
+      len += 1
     }
-    val cw = w / 2; val ch = h / 2
-    val cbP = new Array[Int](cw * ch); val crP = new Array[Int](cw * ch)
-    var cy = 0
-    while (cy < ch) {
-      var cx = 0
-      while (cx < cw) {
-        def mean(src: Array[Int]): Int = {
-          val i0 = (2 * cy) * w + 2 * cx
-          (src(i0) + src(i0 + 1) + src(i0 + w) + src(i0 + w + 1) + 2) / 4
-        }
-        cbP(cy * cw + cx) = mean(cbF); crP(cy * cw + cx) = mean(crF)
-        cx += 1
-      }
-      cy += 1
-    }
-    val out = new java.io.ByteArrayOutputStream()
-    def u8(v: Int): Unit = out.write(v & 0xff)
-    def u16(v: Int): Unit = { u8(v >> 8); u8(v) }
-    def marker(m: Int): Unit = { u8(0xff); u8(m) }
-    marker(0xd8)
-    def dqt(id: Int, q: Array[Int]): Unit = {
-      marker(0xdb); u16(2 + 1 + 64); u8(id); JZigZag.foreach(nat => u8(q(nat)))
-    }
-    dqt(0, quantY); dqt(1, quantC)
-    marker(0xc0); u16(2 + 6 + 3 * 3); u8(8); u16(h); u16(w); u8(3)
-    u8(1); u8(0x22); u8(0) // Y: 2x2 sampling, quant 0
-    u8(2); u8(0x11); u8(1) // Cb
-    u8(3); u8(0x11); u8(1) // Cr
-    def dht(cls: Int, id: Int, bits: Array[Int], vals: Array[Int]): Unit = {
-      marker(0xc4); u16(2 + 1 + 16 + vals.length); u8((cls << 4) | id)
-      bits.foreach(u8); vals.foreach(u8)
-    }
-    dht(0, 0, JDcBits, JDcVals); dht(1, 0, JAcBits, JAcVals)
-    dht(0, 1, JDcBitsC, JDcValsC); dht(1, 1, JAcBitsC, JAcValsC)
-    marker(0xda); u16(2 + 1 + 2 * 3 + 3); u8(3)
-    u8(1); u8(0x00); u8(2); u8(0x11); u8(3); u8(0x11)
-    u8(0); u8(63); u8(0)
-    var acc = 0L; var nbits = 0
-    def putBits(code: Int, len: Int): Unit = {
-      acc = (acc << len) | (code & ((1L << len) - 1)); nbits += len
-      while (nbits >= 8) {
-        val byte = ((acc >> (nbits - 8)) & 0xff).toInt
-        u8(byte); if (byte == 0xff) u8(0x00)
-        nbits -= 8
-      }
-    }
-    def codesOf(bits: Array[Int], vals: Array[Int]) = {
-      val cs = canonicalCodes(bits, vals)
-      val idx = new Array[Int](256); java.util.Arrays.fill(idx, -1)
-      vals.zipWithIndex.foreach { case (v, i) => idx(v) = i }
-      (cs, idx)
-    }
-    val (dcY, _) = codesOf(JDcBits, JDcVals)
-    val (acY, acYIdx) = codesOf(JAcBits, JAcVals)
-    val (dcC, _) = codesOf(JDcBitsC, JDcValsC)
-    val (acC, acCIdx) = codesOf(JAcBitsC, JAcValsC)
-    def category(v: Int): Int = 32 - Integer.numberOfLeadingZeros(math.abs(v))
-    val blk = new Array[Double](64); val coef = new Array[Int](64)
-    def encodeBlock(plane: Array[Int], pw: Int, ph: Int, bx: Int, by: Int,
-                    quant: Array[Int], dcCodes: Array[(Int, Int)],
-                    acCodes: Array[(Int, Int)], acIdx: Array[Int],
-                    pred: Int): Int = {
-      var y = 0
-      while (y < 8) {
-        val py = math.min(by * 8 + y, ph - 1)
-        var x = 0
-        while (x < 8) {
-          val px = math.min(bx * 8 + x, pw - 1)
-          blk(y * 8 + x) = plane(py * pw + px) - 128.0
-          x += 1
-        }
-        y += 1
-      }
-      var u = 0
-      while (u < 8) {
-        var v = 0
-        while (v < 8) {
-          var sum = 0.0
-          var y2 = 0
-          while (y2 < 8) {
-            var x2 = 0
-            while (x2 < 8) {
-              sum += blk(y2 * 8 + x2) * CosTable(u * 8 + y2) * CosTable(v * 8 + x2)
-              x2 += 1
-            }
-            y2 += 1
-          }
-          coef(u * 8 + v) = math.round(0.25 * c0(u) * c0(v) * sum / quant(u * 8 + v)).toInt
-          v += 1
-        }
-        u += 1
-      }
-      val dc = coef(0); val diff = dc - pred
-      val s0 = category(diff)
-      val (dcode, dlen) = dcCodes(s0); putBits(dcode, dlen)
-      if (s0 > 0) putBits(if (diff >= 0) diff else diff - 1, s0)
-      var run = 0
-      var k = 1
-      while (k < 64) {
-        val v = coef(JZigZag(k))
-        if (v == 0) run += 1
-        else {
-          while (run >= 16) { val (zc, zl) = acCodes(acIdx(0xf0)); putBits(zc, zl); run -= 16 }
-          val s = category(v)
-          val (ac, al) = acCodes(acIdx((run << 4) | s))
-          putBits(ac, al)
-          putBits(if (v >= 0) v else v - 1, s)
-          run = 0
-        }
-        k += 1
-      }
-      if (run > 0) { val (ec, el) = acCodes(acIdx(0x00)); putBits(ec, el) }
-      dc
-    }
-    val mw = w / 16; val mh = h / 16
-    var predY = 0; var predCb = 0; var predCr = 0
-    var my = 0
-    while (my < mh) {
-      var mx = 0
-      while (mx < mw) {
-        var sub = 0
-        while (sub < 4) { // Y blocks in 2x2 raster order
-          predY = encodeBlock(yP, w, h, 2 * mx + (sub % 2), 2 * my + (sub / 2),
-            quantY, dcY, acY, acYIdx, predY)
-          sub += 1
-        }
-        predCb = encodeBlock(cbP, cw, ch, mx, my, quantC, dcC, acC, acCIdx, predCb)
-        predCr = encodeBlock(crP, cw, ch, mx, my, quantC, dcC, acC, acCIdx, predCr)
-        mx += 1
-      }
-      my += 1
-    }
-    if (nbits > 0) { val pad = 8 - nbits; putBits((1 << pad) - 1, pad) }
-    marker(0xd9)
-    out.toByteArray
+    new JHuffDec(mincode, maxcode, valptr, vals)
   }
 
-  /** REAL baseline color JPEG pixel decode: three-component SOF0 in 4:2:0
-    * (Y 2×2, chroma 1×1) or 4:4:4 (all 1×1), one interleaved scan,
-    * per-component quant/Huffman table selection, restart markers, foreign
-    * tables. Chroma upsamples by box replication; YCbCr→RGB is the
-    * fixed-point [[yccToRgb]]. Returns (w, h, interleaved rgb — 3 bytes
-    * per pixel). Fails closed on progressive frames, other sampling
-    * structures, component-count ≠ 3, truncation, or malformed tables.
+  /** Entropy-coded segment reader: byte unstuffing; stops at any marker
+    * (RSTn, or the segment after the scan), where [[syncRestart]] or the
+    * marker walk picks up. `start` resets it at each SOS.
     */
-  def jpegDecodeColor(b: Array[Byte]): Option[(Int, Int, Array[Byte])] = {
-    if (b.length < 4 || (b(0) & 0xff) != 0xff || (b(1) & 0xff) != 0xd8) return None
-    def u8(i: Int): Int = b(i) & 0xff
-    def u16(i: Int): Int = (u8(i) << 8) | u8(i + 1)
-    val quant = Array.ofDim[Int](4, 64)
-    val quantSeen = new Array[Boolean](4)
-    val huffBits = Array.ofDim[Array[Int]](2, 4)
-    val huffVals = Array.ofDim[Array[Int]](2, 4)
-    var w = -1; var h = -1
-    var progressive = false
-    var frameSeen = false
-    // per component (frame order): id, sampling, quant id
-    var compId: Array[Int] = null; var compH: Array[Int] = null
-    var compV: Array[Int] = null; var compQ: Array[Int] = null
-    var restartInterval = 0
-    var is420 = false
-    var mw = 0; var mh = 0
-    // coefficient grids, MCU-padded; true block dims gate non-interleaved
-    // scans (spec A.2.2: they cover the component's own blocks only)
-    var coefs: Array[Array[Int]] = null
-    val blocksW = new Array[Int](3); val blocksH = new Array[Int](3)
-    val trueBW = new Array[Int](3); val trueBH = new Array[Int](3)
-    def decTables(bits: Array[Int]): (Array[Int], Array[Int], Array[Int]) = {
-      val mincode = new Array[Int](17); val maxcode = new Array[Int](17)
-      val valptr = new Array[Int](17)
-      var code = 0; var k = 0
-      var len = 1
-      while (len <= 16) {
-        valptr(len) = k; mincode(len) = code
-        code += bits(len - 1); k += bits(len - 1)
-        maxcode(len) = code - 1
-        if (bits(len - 1) == 0) maxcode(len) = -1
-        code <<= 1
-        len += 1
-      }
-      (mincode, maxcode, valptr)
-    }
-    var pos = 0; var acc = 0; var nbits = 0; var hitMarker = false
-    def fill(): Boolean = {
+  private final class JpegBitReader(b: Array[Byte]) {
+    var pos = 0
+    private var acc = 0; private var nbits = 0; private var hitMarker = false
+    def start(p: Int): Unit = { pos = p; acc = 0; nbits = 0; hitMarker = false }
+    private def fill(): Boolean = {
       while (nbits <= 24 && !hitMarker) {
         if (pos >= b.length) return nbits > 0
-        val v = u8(pos)
+        val v = b(pos) & 0xff
         if (v == 0xff) {
           if (pos + 1 >= b.length) { hitMarker = true; return nbits > 0 }
-          val nxt = u8(pos + 1)
-          if (nxt == 0x00) { acc = (acc << 8) | 0xff; nbits += 8; pos += 2 }
-          else { hitMarker = true; return nbits > 0 }
+          if (b(pos + 1) == 0) { acc = (acc << 8) | 0xff; nbits += 8; pos += 2 }
+          else { hitMarker = true; return nbits > 0 } // RST or EOI: stop here
         } else { acc = (acc << 8) | v; nbits += 8; pos += 1 }
       }
       true
@@ -4019,463 +3221,471 @@ object Multimodal {
       while (j < n) { val bit = readBit(); if (bit < 0) return -1; v = (v << 1) | bit; j += 1 }
       v
     }
-    def decodeSym(t: (Array[Int], Array[Int], Array[Int]), vals: Array[Int]): Int = {
-      val (min, max, ptr) = t
+    def decodeSym(t: JHuffDec): Int = {
       var code = 0; var len = 0
       while (len < 16) {
         val bit = readBit(); if (bit < 0) return -1
         code = (code << 1) | bit; len += 1
-        if (max(len) >= 0 && code <= max(len))
-          return vals(ptr(len) + code - min(len))
+        if (t.maxcode(len) >= 0 && code <= t.maxcode(len))
+          return t.vals(t.valptr(len) + code - t.mincode(len))
       }
       -1
     }
-    def extend(v: Int, s: Int): Int =
-      if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
+    /** Byte-align and consume the RSTn marker the reader stopped at. */
     def syncRestart(): Boolean = {
       nbits = 0; acc = 0; hitMarker = false
-      while (pos + 1 < b.length && !(u8(pos) == 0xff && u8(pos + 1) >= 0xd0 && u8(pos + 1) <= 0xd7)) {
-        if (u8(pos) == 0xff && u8(pos + 1) != 0x00) return false
+      def at(i: Int): Int = b(i) & 0xff
+      while (pos + 1 < b.length &&
+             !(at(pos) == 0xff && at(pos + 1) >= 0xd0 && at(pos + 1) <= 0xd7)) {
+        if (at(pos) == 0xff && at(pos + 1) != 0x00) return false
         pos += 1
       }
       if (pos + 1 >= b.length) return false
       pos += 2
       true
     }
-    /** One scan. `comps` in scan order; interleaved scans walk MCUs over
-      * the padded grid, single-component scans walk the component's true
-      * block grid. Scan types exactly as the grayscale twin (the shared
-      * T.81 G.1.2 semantics), indexing each component's padded grid.
+  }
+
+  private def extend(v: Int, s: Int): Int =
+    if (s == 0) 0 else if (v < (1 << (s - 1))) v - (1 << s) + 1 else v
+
+  /** A decoded frame: per-component horizontal sampling and sample planes,
+    * each padded to whole MCUs with `planeW` samples per row.
+    */
+  private final class JpegPlanes(val w: Int, val h: Int, val hs: Array[Int],
+                                 val planes: Array[Array[Int]], val planeW: Array[Int])
+
+  /** The T.81 decoder core over exactly `nComp` frame components, sampled
+    * all 1×1 or (three components) 4:2:0. Baseline (SOF0) and progressive
+    * (SOF2) frames; restart markers; foreign tables (any spec-valid
+    * DHT/DQT, 8- or 16-bit precision, redefined between scans).
+    * Coefficients accumulate raw across scans and are dequantized once,
+    * after EOI.
+    */
+  private def jpegDecodePlanes(b: Array[Byte], nComp: Int): Option[JpegPlanes] = {
+    if (b.length < 4 || u8(b, 0) != 0xff || u8(b, 1) != 0xd8) return None
+    val quant = Array.ofDim[Int](4, 64)
+    val quantSeen = new Array[Boolean](4)
+    // huff(cls)(id); tables may be (re)defined BETWEEN scans, so they live
+    // across the walk
+    val huff = Array.ofDim[JHuffDec](2, 4)
+    var w = -1; var h = -1
+    var progressive = false
+    var frameSeen = false
+    // per component (frame order): id, sampling, quant id
+    val compId = new Array[Int](nComp); val compH = new Array[Int](nComp)
+    val compV = new Array[Int](nComp); val compQ = new Array[Int](nComp)
+    var restartInterval = 0
+    var mw = 0; var mh = 0
+    // coefficient grids, MCU-padded; true block dims bound single-component
+    // scans (T.81 A.2.2: they cover the component's own blocks only)
+    var coefs: Array[Array[Int]] = null
+    val blocksW = new Array[Int](nComp); val blocksH = new Array[Int](nComp)
+    val trueBW = new Array[Int](nComp); val trueBH = new Array[Int](nComp)
+    val rd = new JpegBitReader(b)
+
+    /** One scan, `comps` in scan order. A unit is one MCU of an interleaved
+      * scan (over the padded grid) or one block of a single-component scan
+      * (over the component's true block grid, T.81 A.2.2). Baseline: the
+      * full DC+AC block decode. Progressive (T.81 G.1.2): DC first/refine,
+      * AC first/refine with EOB runs.
       */
     def runScan(comps: Array[Int], dcSel: Array[Int], acSel: Array[Int],
                 ss: Int, se: Int, ah: Int, al: Int): Boolean = {
-      val needDc = !progressive || (ss == 0 && ah == 0)
-      val needAc = !progressive || ss > 0
-      val dcT = new Array[(Array[Int], Array[Int], Array[Int])](comps.length)
-      val acT = new Array[(Array[Int], Array[Int], Array[Int])](comps.length)
-      val dcV = new Array[Array[Int]](comps.length)
-      val acV = new Array[Array[Int]](comps.length)
+      val prog = progressive; val grids = coefs; val interval = restartInterval
+      val ns = comps.length
+      val needDc = !prog || (ss == 0 && ah == 0)
+      val needAc = !prog || ss > 0
+      val dcT = new Array[JHuffDec](ns)
+      val acT = new Array[JHuffDec](ns)
       var ci = 0
-      while (ci < comps.length) {
-        if (needDc) {
-          if (huffBits(0)(dcSel(ci)) == null) return false
-          dcT(ci) = decTables(huffBits(0)(dcSel(ci)))
-          dcV(ci) = huffVals(0)(dcSel(ci))
-        }
-        if (needAc) {
-          if (huffBits(1)(acSel(ci)) == null) return false
-          acT(ci) = decTables(huffBits(1)(acSel(ci)))
-          acV(ci) = huffVals(1)(acSel(ci))
-        }
+      while (ci < ns) {
+        if (needDc) { dcT(ci) = huff(0)(dcSel(ci)); if (dcT(ci) == null) return false }
+        if (needAc) { acT(ci) = huff(1)(acSel(ci)); if (acT(ci) == null) return false }
         ci += 1
       }
-      val preds = new Array[Int](comps.length)
+      val single = ns == 1
+      val uh = comps.map(c => if (single) 1 else compH(c))
+      val uv = comps.map(c => if (single) 1 else compV(c))
+      // the blocks of one unit in coding order: scan component, row, column
+      val unitBlocks = (0 until ns).flatMap(si =>
+        for (v <- 0 until uv(si); h <- 0 until uh(si)) yield (si, v, h)).toArray
+      val kSi = unitBlocks.map(_._1); val kDy = unitBlocks.map(_._2)
+      val kDx = unitBlocks.map(_._3)
+      val unitsW = if (single) trueBW(comps(0)) else mw
+      val total = if (single) unitsW * trueBH(comps(0)) else mw * mh
+      val preds = new Array[Int](ns)
       var eobrun = 0
       val p1 = 1 << al
       val m1 = -1 << al
-      // full-block baseline decode, raw coefficients
-      def baselineBlock(si: Int, base: Int): Boolean = {
-        val cgrid = coefs(comps(si))
-        val s0 = decodeSym(dcT(si), dcV(si))
-        if (s0 < 0 || s0 > 11) return false
-        val dbits = if (s0 == 0) 0 else readBits(s0)
-        if (dbits < 0) return false
-        preds(si) += extend(dbits, s0)
-        cgrid(base) = preds(si)
-        var k = 1
-        var eob = false
-        while (k < 64 && !eob) {
-          val rs = decodeSym(acT(si), acV(si))
-          if (rs < 0) return false
-          if (rs == 0x00) eob = true
-          else if (rs == 0xf0) k += 16
-          else {
-            k += rs >> 4
-            val s = rs & 0x0f
-            if (k > 63) return false
-            val vb = readBits(s); if (vb < 0) return false
-            cgrid(base + JZigZag(k)) = extend(vb, s)
-            k += 1
-          }
-        }
+      // AC refine (G.1.2.3): one correction bit for a nonzero coefficient
+      def refine(cgrid: Array[Int], p: Int): Boolean = {
+        val bit = rd.readBit(); if (bit < 0) return false
+        if (bit == 1 && (cgrid(p) & p1) == 0) cgrid(p) += (if (cgrid(p) >= 0) p1 else m1)
         true
       }
-      def dcBlock(si: Int, base: Int): Boolean = {
-        val cgrid = coefs(comps(si))
-        if (ah == 0) {
-          val s0 = decodeSym(dcT(si), dcV(si))
-          if (s0 < 0 || s0 > 11) return false
-          val dbits = if (s0 == 0) 0 else readBits(s0)
-          if (dbits < 0) return false
-          preds(si) += extend(dbits, s0)
-          cgrid(base) = preds(si) << al
-        } else {
-          val bit = readBit(); if (bit < 0) return false
-          if (bit == 1) cgrid(base) |= p1
+      var sinceRestart = 0
+      var unit = 0
+      while (unit < total) {
+        if (interval > 0 && sinceRestart == interval) {
+          if (!rd.syncRestart()) return false
+          java.util.Arrays.fill(preds, 0); eobrun = 0; sinceRestart = 0
         }
-        true
-      }
-      def acFirstBlock(si: Int, base: Int): Boolean = {
-        val cgrid = coefs(comps(si))
-        if (eobrun > 0) { eobrun -= 1; return true }
-        var k = ss
-        var blockDone = false
-        while (k <= se && !blockDone) {
-          val rs = decodeSym(acT(si), acV(si))
-          if (rs < 0) return false
-          val r = rs >> 4; val s = rs & 15
-          if (s == 0) {
-            if (r == 15) k += 16
+        val my = unit / unitsW; val mx = unit % unitsW
+        var kb = 0
+        while (kb < kSi.length) {
+          val si = kSi(kb); val c = comps(si); val cgrid = grids(c)
+          val base = ((my * uv(si) + kDy(kb)) * blocksW(c) + mx * uh(si) + kDx(kb)) * 64
+          if (!prog || (ss == 0 && ah == 0)) { // DC (baseline, or first at the point transform)
+            val s0 = rd.decodeSym(dcT(si))
+            if (s0 < 0 || s0 > 11) return false
+            val dbits = if (s0 == 0) 0 else rd.readBits(s0)
+            if (dbits < 0) return false
+            preds(si) += extend(dbits, s0)
+            cgrid(base) = preds(si) << al
+            if (!prog) { // baseline: the full AC band follows
+              var k = 1
+              var eob = false
+              while (k < 64 && !eob) {
+                val rs = rd.decodeSym(acT(si))
+                if (rs < 0) return false
+                if (rs == 0x00) eob = true
+                else if (rs == 0xf0) k += 16
+                else {
+                  k += rs >> 4
+                  val s = rs & 0x0f
+                  if (k > 63) return false
+                  val vb = rd.readBits(s); if (vb < 0) return false
+                  cgrid(base + JZigZag(k)) = extend(vb, s)
+                  k += 1
+                }
+              }
+            }
+          } else if (ss == 0) { // DC refine: one raw bit per block
+            val bit = rd.readBit(); if (bit < 0) return false
+            if (bit == 1) cgrid(base) |= p1
+          } else if (ah == 0) { // AC first (G.1.2.2)
+            if (eobrun > 0) eobrun -= 1
             else {
-              eobrun = (1 << r) - 1
-              if (r > 0) {
-                val ext = readBits(r); if (ext < 0) return false
-                eobrun += ext
-              }
-              blockDone = true
-            }
-          } else {
-            k += r
-            if (k > se) return false
-            val vb = readBits(s); if (vb < 0) return false
-            cgrid(base + JZigZag(k)) = extend(vb, s) << al
-            k += 1
-          }
-        }
-        true
-      }
-      def acRefineBlock(si: Int, base: Int): Boolean = {
-        val cgrid = coefs(comps(si))
-        var k = ss
-        if (eobrun == 0) {
-          var scanDone = false
-          while (k <= se && !scanDone) {
-            val rs = decodeSym(acT(si), acV(si))
-            if (rs < 0) return false
-            var r = rs >> 4; val s = rs & 15
-            var newval = 0
-            if (s == 0) {
-              if (r < 15) {
-                eobrun = 1 << r
-                if (r > 0) {
-                  val ext = readBits(r); if (ext < 0) return false
-                  eobrun += ext
-                }
-                scanDone = true
-              }
-            } else {
-              if (s != 1) return false
-              val bit = readBit(); if (bit < 0) return false
-              newval = if (bit == 1) p1 else m1
-            }
-            if (!scanDone) {
-              var placed = false
-              while (k <= se && !placed) {
-                val p = base + JZigZag(k)
-                if (cgrid(p) != 0) {
-                  val bit = readBit(); if (bit < 0) return false
-                  if (bit == 1 && (cgrid(p) & p1) == 0)
-                    cgrid(p) += (if (cgrid(p) >= 0) p1 else m1)
+              var k = ss
+              var blockDone = false
+              while (k <= se && !blockDone) {
+                val rs = rd.decodeSym(acT(si))
+                if (rs < 0) return false
+                val r = rs >> 4; val s = rs & 15
+                if (s == 0) {
+                  if (r == 15) k += 16 // ZRL
+                  else {
+                    eobrun = (1 << r) - 1
+                    if (r > 0) {
+                      val ext = rd.readBits(r); if (ext < 0) return false
+                      eobrun += ext
+                    }
+                    blockDone = true
+                  }
                 } else {
-                  if (r == 0) {
-                    if (newval != 0) cgrid(p) = newval
-                    placed = true
-                  } else r -= 1
+                  k += r
+                  if (k > se) return false
+                  val vb = rd.readBits(s); if (vb < 0) return false
+                  cgrid(base + JZigZag(k)) = extend(vb, s) << al
+                  k += 1
                 }
+              }
+            }
+          } else { // AC refine: correction bits + new ±1 coefficients
+            var k = ss
+            if (eobrun == 0) {
+              var scanDone = false
+              while (k <= se && !scanDone) {
+                val rs = rd.decodeSym(acT(si))
+                if (rs < 0) return false
+                var r = rs >> 4; val s = rs & 15
+                var newval = 0
+                if (s == 0) {
+                  if (r < 15) {
+                    eobrun = 1 << r
+                    if (r > 0) {
+                      val ext = rd.readBits(r); if (ext < 0) return false
+                      eobrun += ext
+                    }
+                    scanDone = true
+                  }
+                  // r == 15: skip 16 zero-history positions (corrections ride)
+                } else {
+                  if (s != 1) return false // refinement codes only ±1
+                  val bit = rd.readBit(); if (bit < 0) return false
+                  newval = if (bit == 1) p1 else m1
+                }
+                if (!scanDone) {
+                  var placed = false
+                  while (k <= se && !placed) {
+                    val p = base + JZigZag(k)
+                    if (cgrid(p) != 0) { if (!refine(cgrid, p)) return false }
+                    else if (r == 0) {
+                      if (newval != 0) cgrid(p) = newval
+                      placed = true
+                    } else r -= 1
+                    k += 1
+                  }
+                  if (!placed && newval != 0) return false // ran off the band
+                }
+              }
+            }
+            if (eobrun > 0) { // EOB run: corrections continue over nonzeros
+              while (k <= se) {
+                val p = base + JZigZag(k)
+                if (cgrid(p) != 0 && !refine(cgrid, p)) return false
                 k += 1
               }
-              if (!placed && newval != 0) return false
+              eobrun -= 1
             }
           }
+          kb += 1
         }
-        if (eobrun > 0) {
-          while (k <= se) {
-            val p = base + JZigZag(k)
-            if (cgrid(p) != 0) {
-              val bit = readBit(); if (bit < 0) return false
-              if (bit == 1 && (cgrid(p) & p1) == 0)
-                cgrid(p) += (if (cgrid(p) >= 0) p1 else m1)
-            }
-            k += 1
-          }
-          eobrun -= 1
-        }
-        true
-      }
-      def oneBlock(si: Int, base: Int): Boolean =
-        if (!progressive) baselineBlock(si, base)
-        else if (ss == 0) dcBlock(si, base)
-        else if (ah == 0) acFirstBlock(si, base)
-        else acRefineBlock(si, base)
-      var sinceRestart = 0
-      if (comps.length > 1) { // interleaved: MCU walk over the padded grid
-        var mi = 0
-        val total = mw * mh
-        while (mi < total) {
-          if (restartInterval > 0 && sinceRestart == restartInterval) {
-            if (!syncRestart()) return false
-            java.util.Arrays.fill(preds, 0); eobrun = 0; sinceRestart = 0
-          }
-          val my = mi / mw; val mx = mi % mw
-          var si = 0
-          while (si < comps.length) {
-            val c = comps(si)
-            var v2 = 0
-            while (v2 < compV(c)) {
-              var h2 = 0
-              while (h2 < compH(c)) {
-                val bx = mx * compH(c) + h2
-                val by = my * compV(c) + v2
-                if (!oneBlock(si, (by * blocksW(c) + bx) * 64)) return false
-                h2 += 1
-              }
-              v2 += 1
-            }
-            si += 1
-          }
-          sinceRestart += 1
-          mi += 1
-        }
-      } else { // single component: its true block grid
-        val c = comps(0)
-        var bi = 0
-        val total = trueBW(c) * trueBH(c)
-        while (bi < total) {
-          if (restartInterval > 0 && sinceRestart == restartInterval) {
-            if (!syncRestart()) return false
-            java.util.Arrays.fill(preds, 0); eobrun = 0; sinceRestart = 0
-          }
-          val bx = bi % trueBW(c); val by = bi / trueBW(c)
-          if (!oneBlock(0, (by * blocksW(c) + bx) * 64)) return false
-          sinceRestart += 1
-          bi += 1
-        }
+        sinceRestart += 1
+        unit += 1
       }
       true
     }
-    // ---- marker walk ----
+
+    // ---- marker walk: tables + frame, scans decoded as encountered ----
     var i = 2
     var eoiSeen = false
     var anyScan = false
-    var baselineScanDone = false
     // Per-component per-band successive-approximation state across
-    // progressive scans (T.81 G.1.1.1.1) — same fail-closed scan-script
-    // discipline as the gray path.
-    val bandAl = Array.fill(3, 64)(-1)
+    // progressive scans (T.81 G.1.1.1.1): bandAl(c)(k) is the Al the band
+    // was last coded at, -1 = untouched. A refinement whose Ah does not
+    // match, a duplicate first pass, or an AC scan before the component's
+    // DC first pass is a non-conforming scan script — fail closed instead
+    // of decoding garbage pixels.
+    val bandAl = Array.fill(nComp, 64)(-1)
     while (!eoiSeen) {
       if (i + 2 > b.length) return None
-      if (u8(i) != 0xff) return None
-      var m = u8(i + 1)
-      while (m == 0xff) { i += 1; if (i + 2 > b.length) return None; m = u8(i + 1) }
+      if (u8(b, i) != 0xff) return None
+      var m = u8(b, i + 1)
+      while (m == 0xff) { i += 1; if (i + 2 > b.length) return None; m = u8(b, i + 1) }
       if (m == 0xd9) eoiSeen = true
       else {
         if (i + 4 > b.length) return None
-        val len = u16(i + 2)
-        if (len < 2 || i + 2 + len > b.length) return None
+        val len = u16be(b, i + 2)
+        val end = i + 2 + len
+        if (len < 2 || end > b.length) return None
         val seg = i + 4
-        var nextI = i + 2 + len
+        var nextI = end
         m match {
-          case 0xc0 | 0xc2 =>
+          case 0xc0 | 0xc2 => // SOF0 baseline / SOF2 progressive
             if (frameSeen) return None
             frameSeen = true
             progressive = m == 0xc2
-            if (u8(seg) != 8) return None
-            h = u16(seg + 1); w = u16(seg + 3)
-            if (u8(seg + 5) != 3) return None // color path: 3 components only
+            if (u8(b, seg) != 8) return None // 8-bit precision only
+            h = u16be(b, seg + 1); w = u16be(b, seg + 3)
+            if (u8(b, seg + 5) != nComp) return None
             if (w <= 0 || h <= 0) return None
-            compId = new Array[Int](3); compH = new Array[Int](3)
-            compV = new Array[Int](3); compQ = new Array[Int](3)
             var c = 0
-            while (c < 3) {
-              compId(c) = u8(seg + 6 + 3 * c)
-              compH(c) = u8(seg + 7 + 3 * c) >> 4
-              compV(c) = u8(seg + 7 + 3 * c) & 0x0f
-              compQ(c) = u8(seg + 8 + 3 * c)
+            while (c < nComp) {
+              compId(c) = u8(b, seg + 6 + 3 * c)
+              compH(c) = u8(b, seg + 7 + 3 * c) >> 4
+              compV(c) = u8(b, seg + 7 + 3 * c) & 0x0f
+              compQ(c) = u8(b, seg + 8 + 3 * c)
+              if (compQ(c) > 3) return None
               c += 1
             }
-            is420 = compH(0) == 2 && compV(0) == 2 &&
-              compH(1) == 1 && compV(1) == 1 && compH(2) == 1 && compV(2) == 1
-            val is444 = (0 until 3).forall(cc => compH(cc) == 1 && compV(cc) == 1)
+            val is444 = (0 until nComp).forall(cc => compH(cc) == 1 && compV(cc) == 1)
+            val is420 = nComp == 3 && compH(0) == 2 && compV(0) == 2 &&
+              (1 until 3).forall(cc => compH(cc) == 1 && compV(cc) == 1)
             if (!is420 && !is444) return None
-            val mcuPx = if (is420) 16 else 8
-            mw = (w + mcuPx - 1) / mcuPx; mh = (h + mcuPx - 1) / mcuPx
+            val hmax = compH.max; val vmax = compV.max
+            mw = (w + 8 * hmax - 1) / (8 * hmax); mh = (h + 8 * vmax - 1) / (8 * vmax)
             c = 0
-            while (c < 3) {
+            while (c < nComp) {
               blocksW(c) = mw * compH(c); blocksH(c) = mh * compV(c)
-              // component pixel dims: ceil(w * Hc / Hmax), ceil(h * Vc / Vmax)
-              val hmax = if (is420) 2 else 1
-              val cpw = (w * compH(c) + hmax - 1) / hmax
-              val cph = (h * compV(c) + hmax - 1) / hmax
-              trueBW(c) = (cpw + 7) / 8; trueBH(c) = (cph + 7) / 8
+              // component sample dims: ceil(w * Hc / Hmax), ceil(h * Vc / Vmax)
+              trueBW(c) = ((w * compH(c) + hmax - 1) / hmax + 7) / 8
+              trueBH(c) = ((h * compV(c) + vmax - 1) / vmax + 7) / 8
               c += 1
             }
-            coefs = Array.tabulate(3)(cc => new Array[Int](blocksW(cc) * blocksH(cc) * 64))
+            coefs = Array.tabulate(nComp)(cc => new Array[Int](blocksW(cc) * blocksH(cc) * 64))
           case 0xc1 | 0xc3 | 0xc5 | 0xc6 | 0xc7 |
                0xc9 | 0xca | 0xcb | 0xcd | 0xce | 0xcf =>
-            return None
-          case 0xc4 =>
+            return None // extended/lossless/arithmetic frames: fail closed
+          case 0xc4 => // DHT: one or more tables
             var p = seg
-            while (p < i + 2 + len) {
-              val tc = u8(p) >> 4; val th = u8(p) & 0x0f
-              if (tc > 1 || th > 3 || p + 17 > i + 2 + len) return None
-              val bits = Array.tabulate(16)(j => u8(p + 1 + j))
+            while (p < end) {
+              val tc = u8(b, p) >> 4; val th = u8(b, p) & 0x0f
+              if (tc > 1 || th > 3 || p + 17 > end) return None
+              val bits = Array.tabulate(16)(j => u8(b, p + 1 + j))
               val n = bits.sum
-              if (n == 0 || n > 256 || p + 17 + n > i + 2 + len) return None
-              huffBits(tc)(th) = bits
-              huffVals(tc)(th) = Array.tabulate(n)(j => u8(p + 17 + j))
+              if (n == 0 || n > 256 || p + 17 + n > end) return None
+              huff(tc)(th) = decTables(bits, Array.tabulate(n)(j => u8(b, p + 17 + j)))
               p += 17 + n
             }
-          case 0xdb =>
+          case 0xdb => // DQT: one or more tables, Pq 0 (8-bit) or 1 (16-bit)
             var p = seg
-            while (p < i + 2 + len) {
-              val pq = u8(p) >> 4; val tq = u8(p) & 0x0f
+            while (p < end) {
+              val pq = u8(b, p) >> 4; val tq = u8(b, p) & 0x0f
               if (pq > 1 || tq > 3) return None
               val step = if (pq == 0) 1 else 2
-              if (p + 1 + 64 * step > i + 2 + len) return None
+              if (p + 1 + 64 * step > end) return None
               var k = 0
               while (k < 64) {
-                quant(tq)(JZigZag(k)) =
-                  if (pq == 0) u8(p + 1 + k) else u16(p + 1 + 2 * k)
+                quant(tq)(JZigZag(k)) = if (pq == 0) u8(b, p + 1 + k) else u16be(b, p + 1 + 2 * k)
                 k += 1
               }
               quantSeen(tq) = true
               p += 1 + 64 * step
             }
-          case 0xdd =>
-            restartInterval = u16(seg)
-          case 0xda =>
+          case 0xdd => // DRI
+            restartInterval = u16be(b, seg)
+          case 0xda => // SOS: decode this scan in place
             if (!frameSeen) return None
-            val ns = u8(seg)
-            if (ns < 1 || ns > 3) return None
+            val ns = u8(b, seg)
+            if (ns < 1 || ns > nComp) return None
             val comps = new Array[Int](ns)
             val dcSel = new Array[Int](ns)
             val acSel = new Array[Int](ns)
             var c = 0
             while (c < ns) {
-              val sid = u8(seg + 1 + 2 * c)
-              val ci = compId.indexOf(sid)
-              if (ci < 0) return None
+              val ci = compId.indexOf(u8(b, seg + 1 + 2 * c))
+              if (ci < 0) return None // names no frame component
               comps(c) = ci
-              dcSel(c) = u8(seg + 2 + 2 * c) >> 4
-              acSel(c) = u8(seg + 2 + 2 * c) & 0x0f
+              dcSel(c) = u8(b, seg + 2 + 2 * c) >> 4
+              acSel(c) = u8(b, seg + 2 + 2 * c) & 0x0f
               if (dcSel(c) > 3 || acSel(c) > 3) return None // 4 tables per class
               c += 1
             }
-            val ss = u8(seg + 1 + 2 * ns)
-            val se = u8(seg + 2 + 2 * ns)
-            val ahal = u8(seg + 3 + 2 * ns)
-            val ah = ahal >> 4; val al = ahal & 0x0f
+            val ss = u8(b, seg + 1 + 2 * ns)
+            val se = u8(b, seg + 2 + 2 * ns)
+            val ah = u8(b, seg + 3 + 2 * ns) >> 4; val al = u8(b, seg + 3 + 2 * ns) & 0x0f
             if (progressive) {
-              if (ss == 0 && se != 0) return None
+              if (ss == 0 && se != 0) return None // DC scans carry only k=0
               if (ss > 0 && (ns != 1 || se < ss || se > 63)) return None // AC: one component
               if (al > 13 || (ah != 0 && ah != al + 1)) return None
-              var sc = 0
-              while (sc < ns) {
-                val ci = comps(sc)
-                if (ss > 0 && bandAl(ci)(0) < 0) return None // AC before DC first pass
-                var k = if (ss == 0) 0 else ss
-                val kEnd = if (ss == 0) 0 else se
-                while (k <= kEnd) {
-                  if (ah == 0) { if (bandAl(ci)(k) >= 0) return None }
-                  else if (bandAl(ci)(k) != ah) return None
-                  bandAl(ci)(k) = al
+              c = 0
+              while (c < ns) {
+                val band = bandAl(comps(c))
+                if (ss > 0 && band(0) < 0) return None // AC before DC first pass
+                var k = ss
+                while (k <= se) {
+                  if (ah == 0) { if (band(k) >= 0) return None } // duplicate first pass
+                  else if (band(k) != ah) return None // refinement out of sequence
+                  band(k) = al
                   k += 1
                 }
-                sc += 1
+                c += 1
               }
             } else {
-              if (ns != 3 || ss != 0 || se != 63 || ah != 0 || al != 0) return None
-              if (baselineScanDone) return None
-              baselineScanDone = true
+              if (ns != nComp || ss != 0 || se != 63 || ah != 0 || al != 0) return None
+              if (anyScan) return None // baseline: exactly one scan
             }
-            pos = i + 2 + len; acc = 0; nbits = 0; hitMarker = false
+            rd.start(end)
             if (!runScan(comps, dcSel, acSel, ss, se, ah, al)) return None
             anyScan = true
-            nextI = pos
-          case _ => ()
+            nextI = rd.pos // the reader stopped AT the next marker's 0xff
+          case _ => () // APPn / COM / others: skip
         }
         i = nextI
       }
     }
-    if (!frameSeen || !anyScan) return None
-    var cchk = 0
-    while (cchk < 3) {
-      if (!quantSeen(compQ(cchk))) return None
-      cchk += 1
-    }
-    // ---- dequantize + IDCT every block of every component ----
-    val pw = new Array[Int](3); val ph = new Array[Int](3)
-    var cpl = 0
-    while (cpl < 3) { pw(cpl) = blocksW(cpl) * 8; ph(cpl) = blocksH(cpl) * 8; cpl += 1 }
-    val planes = Array.tabulate(3)(c => new Array[Int](pw(c) * ph(c)))
-    val px = new Array[Double](64)
-    var c2 = 0
-    while (c2 < 3) {
-      val qt = quant(compQ(c2))
-      val cgrid = coefs(c2)
-      var blk = 0
-      val total = blocksW(c2) * blocksH(c2)
-      while (blk < total) {
-        val base = blk * 64
-        var y = 0
-        while (y < 8) {
-          var x = 0
-          while (x < 8) {
-            var sum = 0.0
-            var u = 0
-            while (u < 8) {
-              var v = 0
-              while (v < 8) {
-                val cv = cgrid(base + u * 8 + v)
-                if (cv != 0)
-                  sum += c0(u) * c0(v) * cv * qt(u * 8 + v) *
-                    CosTable(u * 8 + y) * CosTable(v * 8 + x)
-                v += 1
-              }
-              u += 1
-            }
-            px(y * 8 + x) = 0.25 * sum + 128.0
-            x += 1
-          }
-          y += 1
-        }
-        val by = blk / blocksW(c2); val bx = blk % blocksW(c2)
-        var yy = 0
-        while (yy < 8) {
-          var xx = 0
-          while (xx < 8) {
-            val v = math.round(px(yy * 8 + xx)).toInt
-            planes(c2)((by * 8 + yy) * pw(c2) + bx * 8 + xx) =
-              math.max(0, math.min(255, v))
-            xx += 1
-          }
-          yy += 1
-        }
-        blk += 1
-      }
-      c2 += 1
-    }
-    // upsample chroma (box) + color convert
-    val out = new Array[Byte](3 * w * h)
-    var yy = 0
-    while (yy < h) {
-      var xx = 0
-      while (xx < w) {
-        val yv = planes(0)(yy * pw(0) + xx)
-        val (cbv, crv) =
-          if (is420) {
-            val ci = (yy / 2) * pw(1) + (xx / 2)
-            (planes(1)(ci), planes(2)(ci))
-          } else (planes(1)(yy * pw(1) + xx), planes(2)(yy * pw(2) + xx))
-        val (r, g, bl) = yccToRgb(yv, cbv, crv)
-        val o = 3 * (yy * w + xx)
-        out(o) = r.toByte; out(o + 1) = g.toByte; out(o + 2) = bl.toByte
-        xx += 1
-      }
-      yy += 1
-    }
-    Some((w, h, out))
+    if (!frameSeen || !anyScan || compQ.exists(q => !quantSeen(q))) return None
+    val planes = Array.tabulate(nComp)(c =>
+      jpegIdct(coefs(c), quant(compQ(c)), blocksW(c), blocksH(c)))
+    Some(new JpegPlanes(w, h, compH, planes, blocksW.map(_ * 8)))
   }
+
+  /** Dequantize + 2-D IDCT + level shift of `bw`×`bh` blocks of raw
+    * natural-order coefficients into a (bw·8)×(bh·8) plane of 0..255 samples.
+    */
+  private def jpegIdct(coefs: Array[Int], qt: Array[Int], bw: Int, bh: Int): Array[Int] = {
+    val pw = bw * 8
+    val plane = new Array[Int](pw * bh * 8)
+    val px = new Array[Double](64)
+    var blk = 0
+    while (blk < bw * bh) {
+      val base = blk * 64
+      var y = 0
+      while (y < 8) {
+        var x = 0
+        while (x < 8) {
+          var sum = 0.0
+          var u = 0
+          while (u < 8) {
+            var v = 0
+            while (v < 8) {
+              val cv = coefs(base + u * 8 + v)
+              if (cv != 0)
+                sum += c0(u) * c0(v) * cv * qt(u * 8 + v) *
+                  CosTable(u * 8 + y) * CosTable(v * 8 + x)
+              v += 1
+            }
+            u += 1
+          }
+          px(y * 8 + x) = 0.25 * sum + 128.0
+          x += 1
+        }
+        y += 1
+      }
+      val by = blk / bw; val bx = blk % bw
+      var yy = 0
+      while (yy < 8) {
+        var xx = 0
+        while (xx < 8) {
+          val v = math.round(px(yy * 8 + xx)).toInt
+          plane((by * 8 + yy) * pw + bx * 8 + xx) = math.max(0, math.min(255, v))
+          xx += 1
+        }
+        yy += 1
+      }
+      blk += 1
+    }
+    plane
+  }
+
+  /** REAL JPEG pixel decode for 8-bit single-component grayscale (1×1
+    * sampling), baseline (SOF0) and progressive (SOF2), through the shared
+    * decoder core — see the family comment above. MultimodalSpec decodes
+    * the JDK ImageIO writer's output through this path and pins
+    * decode(progressive) == decode(baseline) byte-exactly. Returns
+    * (w, h, w·h gray bytes); None on any other frame, including color.
+    */
+  def jpegDecodeGray(b: Array[Byte]): Option[(Int, Int, Array[Byte])] =
+    jpegDecodePlanes(b, 1).map { f =>
+      val out = new Array[Byte](f.w * f.h)
+      var y = 0
+      while (y < f.h) {
+        var x = 0
+        while (x < f.w) { out(y * f.w + x) = f.planes(0)(y * f.planeW(0) + x).toByte; x += 1 }
+        y += 1
+      }
+      (f.w, f.h, out)
+    }
+
+  /** REAL color JPEG pixel decode: three-component SOF0 or SOF2 in 4:2:0
+    * (Y 2×2, chroma 1×1) or 4:4:4 (all 1×1), interleaved or
+    * per-component scans, per-component quant/Huffman table selection,
+    * restart markers, foreign tables. Chroma upsamples by box replication;
+    * YCbCr→RGB is the fixed-point [[yccToRgb]]. Returns (w, h, interleaved
+    * rgb — 3 bytes per pixel). Fails closed on other sampling structures,
+    * component-count ≠ 3, truncation, or malformed tables.
+    */
+  def jpegDecodeColor(b: Array[Byte]): Option[(Int, Int, Array[Byte])] =
+    jpegDecodePlanes(b, 3).map { f =>
+      val sub = f.hs(0) // 2 on 4:2:0: one chroma sample per 2×2 luma
+      val out = new Array[Byte](3 * f.w * f.h)
+      var y = 0
+      while (y < f.h) {
+        var x = 0
+        while (x < f.w) {
+          val ci = (y / sub) * f.planeW(1) + x / sub
+          val (r, g, bl) =
+            yccToRgb(f.planes(0)(y * f.planeW(0) + x), f.planes(1)(ci), f.planes(2)(ci))
+          val o = 3 * (y * f.w + x)
+          out(o) = r.toByte; out(o + 1) = g.toByte; out(o + 2) = bl.toByte
+          x += 1
+        }
+        y += 1
+      }
+      (f.w, f.h, out)
+    }
 
   // ---- perceptual hashes (image near-dup keys over decoded pixels) ----
 

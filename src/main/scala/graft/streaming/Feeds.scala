@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardCopyOption}
 import java.nio.file.attribute.FileTime
 
+import scala.jdk.CollectionConverters._
+
 /** Micro-batch feed staging for the streaming lifecycle queries.
   *
   * The historical per-query pattern wrote the N batch files with N
@@ -34,9 +36,10 @@ object Feeds {
     * coalesce(1) append emitted an empty schema-bearing part file (its own
     * micro-batch with its own batch id) — so an empty batch would SHIFT
     * every later batch id relative to the N-pass form. Every current call
-    * site feeds provably non-empty batches; the mtime loop below asserts
-    * one file per expected index so a future empty-batch feed fails loudly
-    * instead of silently renumbering batches.
+    * site feeds provably non-empty batches; a check before any file moves
+    * asserts one file per expected index so a future empty-batch feed fails
+    * loudly, naming every empty index, instead of silently renumbering
+    * batches.
     */
   def write(df: DataFrame, batch: Column, n: Int, dir: String): Unit = {
     val stage = s"$dir/__stage"
@@ -44,41 +47,6 @@ object Feeds {
       .filter(col("__b") >= 0 && col("__b") < n)
       .repartition(n, col("__b"))
       .write.mode("overwrite").partitionBy("__b").parquet(stage)
-    val base = Paths.get(dir)
-    Files.createDirectories(base)
-    // explicit mtimes: strictly ascending, in the past, one second apart —
-    // the FileStreamSource sort key, fully pinned
-    val t0 = System.currentTimeMillis() - (n + 2) * 1000L
-    for (i <- 0 until n) {
-      val pdir = Paths.get(stage, s"__b=$i")
-      // an EMPTY batch cannot reproduce the historical feed (see scaladoc:
-      // the coalesce(1) form gave it an empty file and a batch id; dynamic
-      // partitionBy emits nothing, shifting every later id) — fail loudly
-      require(Files.isDirectory(pdir),
-        s"feed batch $i of $n is empty — batch ids would silently shift")
-      locally {
-        val parts = {
-          val s = Files.list(pdir)
-          try {
-            val it = s.iterator()
-            val out = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-            while (it.hasNext) {
-              val p = it.next()
-              val nm = p.getFileName.toString
-              if (nm.startsWith("part-") && nm.endsWith(".parquet")) out += p
-            }
-            out.toSeq
-          } finally s.close()
-        }
-        require(parts.size <= 1,
-          s"feed batch $i produced ${parts.size} files; repartition by the batch index must yield one")
-        parts.foreach { p =>
-          val dst = base.resolve(f"batch-$i%03d.parquet")
-          Files.move(p, dst, StandardCopyOption.REPLACE_EXISTING)
-          Files.setLastModifiedTime(dst, FileTime.fromMillis(t0 + i * 1000L))
-        }
-      }
-    }
     def rm(p: java.nio.file.Path): Unit = {
       if (Files.isDirectory(p)) {
         val s = Files.list(p)
@@ -86,6 +54,37 @@ object Feeds {
         finally s.close()
       }
       Files.deleteIfExists(p); ()
+    }
+    // every batch is checked before any file moves, so a failure leaves
+    // neither a partial feed in `dir` nor the stage behind
+    val parts = try {
+      // an EMPTY batch cannot reproduce the historical feed (see scaladoc:
+      // the coalesce(1) form gave it an empty file and a batch id; dynamic
+      // partitionBy emits nothing, shifting every later id) — fail loudly
+      val pdirs = (0 until n).map(i => Paths.get(stage, s"__b=$i"))
+      val empty = pdirs.indices.filterNot(i => Files.isDirectory(pdirs(i)))
+      require(empty.isEmpty,
+        s"feed batches ${empty.mkString(", ")} of $n are empty — batch ids would silently shift")
+      pdirs.zipWithIndex.map { case (pdir, i) =>
+        val s = Files.list(pdir)
+        val files = try s.iterator().asScala.filter { p =>
+          val nm = p.getFileName.toString
+          nm.startsWith("part-") && nm.endsWith(".parquet")
+        }.toList finally s.close()
+        require(files.size <= 1,
+          s"feed batch $i produced ${files.size} files; repartition by the batch index must yield one")
+        files
+      }
+    } catch { case e: Throwable => rm(Paths.get(stage)); throw e }
+    val base = Paths.get(dir)
+    Files.createDirectories(base)
+    // explicit mtimes: strictly ascending, in the past, one second apart —
+    // the FileStreamSource sort key, fully pinned
+    val t0 = System.currentTimeMillis() - (n + 2) * 1000L
+    for ((files, i) <- parts.zipWithIndex; p <- files) {
+      val dst = base.resolve(f"batch-$i%03d.parquet")
+      Files.move(p, dst, StandardCopyOption.REPLACE_EXISTING)
+      Files.setLastModifiedTime(dst, FileTime.fromMillis(t0 + i * 1000L))
     }
     rm(Paths.get(stage))
   }

@@ -449,6 +449,13 @@ class MultimodalSpec extends SparkSpec {
     assert(Multimodal.jpegDecodeGray(bos.toByteArray) === None)
     assert(Multimodal.jpegDecodeGray("not a jpeg at all".getBytes("US-ASCII")) === None)
     assert(Multimodal.jpegDecodeGray(Array[Byte](0xff.toByte, 0xd8.toByte)) === None)
+    // a scan naming a component id the frame does not declare
+    val strange = jpg.clone()
+    val sos = strange.indices.find(i =>
+      (strange(i) & 0xff) == 0xff && (strange(i + 1) & 0xff) == 0xda).get
+    assert((strange(sos + 5) & 0xff) === 1, "SOS component selector located")
+    strange(sos + 5) = 2
+    assert(Multimodal.jpegDecodeGray(strange) === None)
   }
 
   test("audio envelope: slice exactness; gain/decimation/dither invariance through the WAV roundtrip") {
@@ -1471,5 +1478,28 @@ class MultimodalSpec extends SparkSpec {
     // duplicate DC first pass is equally non-conforming
     val dup = enc.take(s2) ++ enc.slice(s1, s2) ++ enc.drop(s2)
     assert(Multimodal.jpegDecodeGray(dup) === None)
+  }
+
+  test("decode spread leaves a plan without computed stats unshuffled") {
+    // an RDD-backed plan reports spark.sql.defaultSizeInBytes: an unknown
+    // size, not a payload large enough to fan out
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq((1L, Array[Byte](1, 2, 3))), 1)).toDF("id", "content")
+    val spread = Multimodal.spreadForDecode(df, 1L)
+    assert(!spread.queryExecution.optimizedPlan.exists(
+      _.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.Repartition]),
+      spread.queryExecution.optimizedPlan.treeString)
+    assert(spread.rdd.getNumPartitions === 1)
+  }
+
+  test("the JPEG family keeps one decoder core and one encoder core") {
+    val src = java.nio.file.Paths.get("src/main/scala/graft/scale/Multimodal.scala")
+    assert(java.nio.file.Files.isRegularFile(src),
+      s"run from the repository root (cwd ${new java.io.File(".").getAbsolutePath})")
+    val text = new String(java.nio.file.Files.readAllBytes(src), "UTF-8")
+    for (name <- Seq("decodeSym", "syncRestart", "decTables", "putBits", "dht", "acScan")) {
+      val n = s"\\bdef $name\\(".r.findAllIn(text).size
+      assert(n === 1, s"Multimodal.scala defines $name $n times")
+    }
   }
 }
