@@ -786,11 +786,15 @@ object Graph {
     * the full recount on the union.
     */
   def triangleCountDelta(oldPairs: DataFrame, batch0: DataFrame): DataFrame = {
-    // lazy checkpoints (r21): still dedup the double uses of each adjacency
+    // lazy checkpoints (r21) on the adjacencies: they dedup the double uses
     // below, but materialize inside the caller's ONE consuming action
-    // instead of paying three eager jobs per call (guide §2.4)
+    // instead of paying an eager job each (guide §2.4). The batch is eager:
+    // several stages of that action read it at once, and a lazy checkpoint
+    // drops its lineage, and with it the anti-join's SQL metrics, when the
+    // first job over it ends, so the other stages' task metrics are lost
+    // ("Failed to update accumulator"; TriangleStreamSpec)
     val batch = batch0.join(oldPairs, Seq("u", "v"), "left_anti")
-      .localCheckpoint(false)
+      .localCheckpoint()
     def adj(p: DataFrame) =
       p.select(col("u").as("a"), col("v").as("b"))
         .unionByName(p.select(col("v").as("a"), col("u").as("b")))

@@ -410,7 +410,7 @@ WHERE d.doc_id % 2 = 1 ORDER BY d.doc_id"""
       val schema = s2.read.parquet(s"$wh/feed").schema
       val stream = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$wh/feed")
-      graft.streaming.AnchorStream.anchorSink(stream, idx, s"$wh/ckpt")
+      graft.streaming.Streaming.drain(stream, s"$wh/ckpt")(idx.processBatch)
         .awaitTermination()
       knScoreFromCounts(idx.served(), docs.filter(col("doc_id") % 2 === 1))
         .orderBy("doc_id")
@@ -449,18 +449,13 @@ WHERE d.doc_id % 2 = 1 ORDER BY d.doc_id"""
         maxChainDepth = 2,
         build = trigramCounts(_), keyCols = Seq("w1", "w2", "w3"))
       val schema = s2.read.parquet(s"$wh/feed").schema
-      val q = s2.readStream.schema(schema)
+      val stream = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$wh/feed")
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-        .option("checkpointLocation", s"$wh/ckpt")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          // independent indexes (separate tables, own replay gates)
-          Par.both(biIdx.processBatch(b, id), triIdx.processBatch(b, id))
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q = graft.streaming.Streaming.drain(stream, s"$wh/ckpt") { (b, id) =>
+        // independent indexes (separate tables, own replay gates)
+        Par.both(biIdx.processBatch(b, id), triIdx.processBatch(b, id))
+        ()
+      }
       q.awaitTermination()
       knTrigramFromCounts(triIdx.served(), biIdx.served(),
         docs.filter(col("doc_id") % 2 === 1))

@@ -338,7 +338,7 @@ FROM v LEFT JOIN sdp_fin s USING (word) ORDER BY v.word"""
       val schema = s2.read.parquet(s"$wh/feed").schema
       val stream = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$wh/feed")
-      graft.streaming.AnchorStream.anchorSink(stream, idx, s"$wh/ckpt")
+      graft.streaming.Streaming.drain(stream, s"$wh/ckpt")(idx.processBatch)
         .awaitTermination()
       unigramVocabFromCounts(
         idx.served().select(col("w").as("__w"), col("cnt").as("__cnt")))

@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.scale.Curation
-import graft.write.VersionedTable
+import graft.write.{BatchCommit, VersionedTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 /** Streaming anchor-text index — continuous maintenance of the q243
   * relation (inbound anchor terms per target registered domain) under a
@@ -14,10 +13,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * (one token-keyed shuffle over batch text only — O(batch)), appended by
   * reference ([[VersionedTable.stageAppend]]); serving re-aggregates the
   * bounded append chain (SUM is the merge), and [[compact]] collapses the
-  * chain into one row per key. foreachBatch redelivery is absorbed by the
-  * stamped-batch-id protocol ([[PostingsIndex]]'s): a replayed batch
-  * skips, so counts are never double-added — the additive state is
-  * exactly-once, not just convergent.
+  * chain into one row per key. foreachBatch redelivery is absorbed by
+  * [[graft.write.BatchCommit]]: a replayed batch skips, so counts are never
+  * double-added — the additive state is exactly-once, not just convergent.
   *
   * Batch-split invariance is exact (count partials form a commutative
   * monoid), so any drain of the same corpus — one batch or one doc per
@@ -44,14 +42,12 @@ final class AnchorCountIndex(spark: SparkSession, root: String,
   /** Ingest one micro-batch: append the batch's count partial. Callable
     * directly so specs drive controlled boundaries.
     */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    val tag = s"batch=$batchId"
-    if (counts.exists && counts.currentTag.contains(tag)) return
-    val partial = build(inputFilter(batch))
-      .sortWithinPartitions(keyCols.head)
-    counts.promote(counts.stageAppendOrCreate(partial), Some(tag))
-    if (counts.chainDepth > maxChainDepth) compact()
-  }
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    BatchCommit(batchId, counts) { commit =>
+      commit(counts -> (() => counts.stageAppendOrCreate(
+        build(inputFilter(batch)).sortWithinPartitions(keyCols.head))))
+      if (counts.chainDepth > maxChainDepth) compact()
+    }
 
   /** The merged counts a query reads: SUM over the append chain's
     * partials. Chain depth is bounded by the compaction policy, so the
@@ -71,19 +67,4 @@ final class AnchorCountIndex(spark: SparkSession, root: String,
       served().sortWithinPartitions(keyCols.head)), counts.currentTag)
     ()
   }
-}
-
-object AnchorStream {
-
-  /** [[AnchorCountIndex.processBatch]] as a streaming sink. */
-  def anchorSink(docs: DataFrame, index: AnchorCountIndex,
-                 checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        index.processBatch(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
 }

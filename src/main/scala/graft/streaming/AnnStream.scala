@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.scale.AnnIndex
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Incremental ANN ingestion: a vector stream drained into a persistent IVF
   * index. Each micro-batch is assigned into the EXISTING cells, quantized,
@@ -21,20 +21,15 @@ object AnnStream {
   def annAppendSink(vectors: DataFrame, root: String, checkpoint: String,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     maxChainDepth: Int = 16): StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        AnnIndex.appendToIvfIndex(batch, root, idCol, vecCol)
-        // patch-chain policy: per-cell patches accumulate one version per
-        // batch; past maxChainDepth the chain collapses (cid partitioning
-        // preserved, so probe directory-pruning survives the compaction)
-        new graft.write.VersionedTable(batch.sparkSession, s"$root/postings")
-          .compactIfNeeded(maxChainDepth, Seq("cid"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Streaming.drain(vectors, checkpoint) { (batch, _) =>
+      AnnIndex.appendToIvfIndex(batch, root, idCol, vecCol)
+      // patch-chain policy: per-cell patches accumulate one version per
+      // batch; past maxChainDepth the chain collapses (cid partitioning
+      // preserved, so probe directory-pruning survives the compaction)
+      new graft.write.VersionedTable(batch.sparkSession, s"$root/postings")
+        .compactIfNeeded(maxChainDepth, Seq("cid"))
+      ()
+    }
 
   /** The same drain for the graph-navigable index: each micro-batch
     * beam-walks the existing graph for its out-links and lands as an
@@ -54,15 +49,10 @@ object AnnStream {
                     beam: Int = 8, rounds: Int = 3, nSeeds: Int = 8,
                     idCol: String = "vec_id",
                     vecCol: String = "embedding"): StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        idx.append(batch, beam, rounds, nSeeds, idCol, vecCol)
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Streaming.drain(vectors, checkpoint) { (batch, _) =>
+      idx.append(batch, beam, rounds, nSeeds, idCol, vecCol)
+      ()
+    }
 
   /** The same drain for the composed IVF+PQ index: each micro-batch is
     * assigned + PQ-encoded under the persisted models and patch-appended
@@ -71,15 +61,10 @@ object AnnStream {
     */
   def pqAppendSink(vectors: DataFrame, root: String, checkpoint: String,
                    maxChainDepth: Int = 16): StreamingQuery =
-    vectors.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.scale.Pq.appendToIvfPqIndex(batch, root)
-        new graft.write.VersionedTable(batch.sparkSession, s"$root/postings")
-          .compactIfNeeded(maxChainDepth, Seq("cid"))
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    Streaming.drain(vectors, checkpoint) { (batch, _) =>
+      graft.scale.Pq.appendToIvfPqIndex(batch, root)
+      new graft.write.VersionedTable(batch.sparkSession, s"$root/postings")
+        .compactIfNeeded(maxChainDepth, Seq("cid"))
+      ()
+    }
 }

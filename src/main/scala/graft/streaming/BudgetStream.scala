@@ -1,7 +1,6 @@
 package graft.streaming
 
-import graft.core.Par
-import graft.write.VersionedTable
+import graft.write.{BatchCommit, VersionedTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -27,12 +26,8 @@ import org.apache.spark.sql.functions._
   * Per batch: one keyed window over the batch's narrow (id, stratum,
   * n_tokens) projection plus a broadcast state join; the admitted append is
   * O(batch) ([[VersionedTable.stageAppend]], chain-compacted). Exactly-once
-  * under foreachBatch replay: the admitted promote is stamped with the
-  * batch id; the state fold (consumed += this batch's admitted tokens) is
-  * recomputed deterministically from the SAME admitted decision, and a
-  * crash between the two promotes converges because the decision depends
-  * only on the pre-batch state (re-running the fold re-derives the same
-  * admitted set and the same new state).
+  * under foreachBatch replay: each batch commits through
+  * [[graft.write.BatchCommit]].
   */
 final class BudgetAdmitIndex(
     spark: org.apache.spark.sql.SparkSession,
@@ -66,63 +61,57 @@ final class BudgetAdmitIndex(
                    idCol: String = "doc_id", stratumCol: String = "stratum",
                    nTokensCol: String = "n_tokens", seqCol: String = "day"): Unit = {
     import spark.implicits._
-    val tag = s"batch=$batchId"
-    val admittedDone = admitted.exists && admitted.currentTag.contains(tag)
-    val stateDone = state.exists && state.currentTag.contains(tag)
-    if (admittedDone && stateDone) return
-    val b = broadcast(budgets.toDF("stratum", "__budget"))
-    // lazy checkpoints + ONE fused probe (r21): batch seq span and the
-    // state watermark land in a single cross-joined aggregate job that
-    // also materializes both checkpoints (guide §2.4)
-    val st = stateDf().localCheckpoint(false)
-    val batch = batch0.select(col(idCol).cast("long").as("id"),
-        col(stratumCol).cast("string").as("stratum"),
-        col(nTokensCol).cast("long").as("n_tokens"),
-        col(seqCol).cast("long").as("seq"))
-      .localCheckpoint(false)
-    // fail closed on out-of-order feeds (the TtlDedupIndex guard):
-    // admission is arrival-ordered, so a batch landing below the
-    // already-folded seq watermark would admit docs the prefix-closed
-    // oracle has already decided against
-    val span = batch.agg(min("seq"), max("seq"))
-      .crossJoin(st.agg(max("max_seq"))).head()
-    val batchMax = if (span.isNullAt(1)) Long.MinValue else span.getLong(1)
-    if (!span.isNullAt(0)) {
-      val seqPrev = span.getLong(2)
-      require(span.getLong(0) >= seqPrev,
-        s"BudgetAdmitIndex: batch $batchId min seq ${span.getLong(0)} " +
-          s"precedes the state watermark $seqPrev — the feed must be " +
-          "seq-ordered")
-    }
-    val adm = batch
-      .join(b, Seq("stratum"))
-      .join(broadcast(st), Seq("stratum"))
-      .withColumn("__before", coalesce(
-        sum("n_tokens").over(Window.partitionBy("stratum")
-          .orderBy("seq", "id")
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .filter(col("consumed") + col("__before") < col("__budget"))
-      .select(col("id"), col("stratum"), col("n_tokens"), col("seq"))
-      .localCheckpoint(false)
-    // pinned by one count before the overlap: the admitted stage and the
-    // state fold both read adm, and two recomputes could break (seq, id)
-    // ties differently, splitting admissions from the consumed totals
-    adm.count()
-    val newState = st
-      .join(adm.groupBy("stratum").agg(sum("n_tokens").as("__add")),
-        Seq("stratum"), "left")
-      .select(col("stratum"),
-        (col("consumed") + coalesce(col("__add"), lit(0L))).as("consumed"),
-        greatest(col("max_seq"), lit(batchMax)).as("max_seq"))
-    // the stages overlap; admitted promotes first — its tag is the replay gate
-    val (admStaged, stateStaged) = Par.both(
-      if (admittedDone) None else Some(admitted.stageAppendOrCreate(adm)),
-      state.stage(newState))
-    admStaged.foreach { v =>
-      admitted.promote(v, Some(tag))
+    BatchCommit(batchId, admitted, state) { commit =>
+      val b = broadcast(budgets.toDF("stratum", "__budget"))
+      // lazy checkpoints + ONE fused probe (r21): batch seq span and the
+      // state watermark land in a single cross-joined aggregate job that
+      // also materializes both checkpoints (guide §2.4)
+      val st = stateDf().localCheckpoint(false)
+      val batch = batch0.select(col(idCol).cast("long").as("id"),
+          col(stratumCol).cast("string").as("stratum"),
+          col(nTokensCol).cast("long").as("n_tokens"),
+          col(seqCol).cast("long").as("seq"))
+        .localCheckpoint(false)
+      // fail closed on out-of-order feeds (the TtlDedupIndex guard):
+      // admission is arrival-ordered, so a batch landing below the
+      // already-folded seq watermark would admit docs the prefix-closed
+      // oracle has already decided against
+      val span = batch.agg(min("seq"), max("seq"))
+        .crossJoin(st.agg(max("max_seq"))).head()
+      val batchMax = if (span.isNullAt(1)) Long.MinValue else span.getLong(1)
+      if (!span.isNullAt(0)) {
+        val seqPrev = span.getLong(2)
+        require(span.getLong(0) >= seqPrev,
+          s"BudgetAdmitIndex: batch $batchId min seq ${span.getLong(0)} " +
+            s"precedes the state watermark $seqPrev — the feed must be " +
+            "seq-ordered")
+      }
+      val adm = batch
+        .join(b, Seq("stratum"))
+        .join(broadcast(st), Seq("stratum"))
+        .withColumn("__before", coalesce(
+          sum("n_tokens").over(Window.partitionBy("stratum")
+            .orderBy("seq", "id")
+            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
+        .filter(col("consumed") + col("__before") < col("__budget"))
+        .select(col("id"), col("stratum"), col("n_tokens"), col("seq"))
+        .localCheckpoint(false)
+      // pinned by one count before the overlap: the admitted stage and the
+      // state fold both read adm, and two recomputes could break (seq, id)
+      // ties differently, splitting admissions from the consumed totals
+      adm.count()
+      val newState = st
+        .join(adm.groupBy("stratum").agg(sum("n_tokens").as("__add")),
+          Seq("stratum"), "left")
+        .select(col("stratum"),
+          (col("consumed") + coalesce(col("__add"), lit(0L))).as("consumed"),
+          greatest(col("max_seq"), lit(batchMax)).as("max_seq"))
+      // admitted first: the admission decision reads only the pre-batch
+      // state, which a crash between the promotes leaves in place, so the
+      // redelivery re-derives the same admitted set and the same new state
+      commit(admitted -> (() => admitted.stageAppendOrCreate(adm)),
+        state -> (() => state.stage(newState)))
       admitted.compactIfNeeded(maxChainDepth)
     }
-    state.promote(stateStaged, Some(tag))
-    ()
   }
 }

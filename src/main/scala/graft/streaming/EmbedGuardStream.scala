@@ -1,11 +1,9 @@
 package graft.streaming
 
-import graft.core.Par
 import graft.scale.Similarity
-import graft.write.VersionedTable
+import graft.write.{BatchCommit, VersionedTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 /** Streaming SEMANTIC admission guard — the q287 embedding decontamination
   * screen on the ingest path: a crawled vector is admitted iff it is not
@@ -21,15 +19,14 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * ([[Similarity.semanticDecontaminate]]): `dot > 0` and
   * `dot²·cosDen² ≥ cosNum²·self(c)·self(e)` — no float crosses the
   * admission decision. Per batch: one O(batch) quantize + a broadcast
-  * panel join + a stamped append of the admitted ids (the torn-retry
-  * anti-join absorbs foreachBatch redelivery). Fails CLOSED on an
+  * panel join + an append of the admitted ids, committed through
+  * [[graft.write.BatchCommit]]. Fails CLOSED on an
   * unseeded index — screening against an empty panel would silently
   * admit everything.
   *
   * Admission contract: a row with a NULL embedding is neither admitted
   * nor screen-rejected — it cannot be scored against the panel. Such
-  * rows are recorded in the `dropped` table (same stamped-append
-  * protocol), so callers can distinguish screen-rejected ids
+  * rows are recorded in the `dropped` table (same batch commit), so callers can distinguish screen-rejected ids
   * (in neither `served()` nor `droppedNull()`) from malformed input
   * (in `droppedNull()`).
   */
@@ -57,35 +54,33 @@ final class EmbedGuardIndex(spark: SparkSession, root: String,
     require(panel.exists,
       "EmbedGuardIndex: processBatch before seed — an empty panel would " +
         "silently admit everything; fail closed instead")
-    val tag = s"batch=$batchId"
-    if (admitted.exists && admitted.currentTag.contains(tag)) return
-    val nulls0 = batch.filter(col("embedding").isNull)
-      .select(col("vec_id").cast("long").as("vec_id")).distinct()
-    val nulls = if (dropped.exists)
-      nulls0.join(dropped.read(), Seq("vec_id"), "left_anti") else nulls0
-    val cz = Similarity.quantizeInt8(batch.filter(col("embedding").isNotNull))
-      .select(col("vec_id").cast("long").as("vec_id"), col("qcode").as("cc"))
-    val dot = Similarity.int8Dot(col("cc"), col("ec"))
-    val cself = Similarity.int8Dot(col("cc"), col("cc"))
-    val flagged = cz
-      .join(broadcast(panel.read()),
-        dot > 0 && dot * dot * lit(cosDen.toLong * cosDen) >=
-          lit(cosNum.toLong * cosNum) * cself * col("eself"))
-      .select("vec_id").distinct()
-    val adm0 = cz.select("vec_id").distinct()
-      .join(flagged, Seq("vec_id"), "left_anti")
-    // torn-retry anti-join: a replayed batch must not duplicate ids the
-    // crashed attempt already appended
-    val adm = if (admitted.exists)
-      adm0.join(admitted.read(), Seq("vec_id"), "left_anti") else adm0
-    // the two stages overlap; dropped promotes first — admitted's tag is the
-    // batch-completion gate, so a crash after it must find the nulls recorded
-    val (droppedStaged, admStaged) = Par.both(
-      dropped.stageAppendOrCreate(nulls), admitted.stageAppendOrCreate(adm))
-    dropped.promote(droppedStaged, Some(tag))
-    if (dropped.chainDepth > maxChainDepth) { dropped.compact(); () }
-    admitted.promote(admStaged, Some(tag))
-    if (admitted.chainDepth > maxChainDepth) { admitted.compact(); () }
+    BatchCommit(batchId, dropped, admitted) { commit =>
+      val nulls0 = batch.filter(col("embedding").isNull)
+        .select(col("vec_id").cast("long").as("vec_id")).distinct()
+      val nulls = if (dropped.exists)
+        nulls0.join(dropped.read(), Seq("vec_id"), "left_anti") else nulls0
+      val cz = Similarity.quantizeInt8(batch.filter(col("embedding").isNotNull))
+        .select(col("vec_id").cast("long").as("vec_id"), col("qcode").as("cc"))
+      val dot = Similarity.int8Dot(col("cc"), col("ec"))
+      val cself = Similarity.int8Dot(col("cc"), col("cc"))
+      val flagged = cz
+        .join(broadcast(panel.read()),
+          dot > 0 && dot * dot * lit(cosDen.toLong * cosDen) >=
+            lit(cosNum.toLong * cosNum) * cself * col("eself"))
+        .select("vec_id").distinct()
+      val adm0 = cz.select("vec_id").distinct()
+        .join(flagged, Seq("vec_id"), "left_anti")
+      // torn-retry anti-join: a replayed batch must not duplicate ids the
+      // crashed attempt already appended
+      val adm = if (admitted.exists)
+        adm0.join(admitted.read(), Seq("vec_id"), "left_anti") else adm0
+      // dropped, then admitted; either order converges: each stage reads
+      // only the batch, the frozen panel and its own pre-batch table
+      commit(dropped -> (() => dropped.stageAppendOrCreate(nulls)),
+        admitted -> (() => admitted.stageAppendOrCreate(adm)))
+      dropped.compactIfNeeded(maxChainDepth)
+      admitted.compactIfNeeded(maxChainDepth)
+    }
   }
 
   /** Every admitted vector id. */
@@ -95,19 +90,4 @@ final class EmbedGuardIndex(spark: SparkSession, root: String,
     * rejections (those are in neither table).
     */
   def droppedNull(): DataFrame = dropped.read().select("vec_id")
-}
-
-object EmbedGuardStream {
-
-  /** [[EmbedGuardIndex.processBatch]] as a streaming sink. */
-  def embedGuardSink(vecs: DataFrame, index: EmbedGuardIndex,
-                     checkpoint: String): StreamingQuery =
-    vecs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        index.processBatch(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
 }

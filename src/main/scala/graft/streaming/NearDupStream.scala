@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.scale.{Cluster, Curation, Dedup}
-import graft.write.VersionedTable
+import graft.write.{BatchCommit, VersionedTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 /** Streaming MinHash near-dup dedup — the continuous-crawl form of the batch
   * [[graft.scale.Dedup]] q26 pipeline, and the first real need of a crawl
@@ -31,9 +30,8 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   *      persisted signature index and drop on verified Jaccard >=
   *      threshold ([[Curation.nearDupAgainstIndex]] — old text is read only
   *      for candidate ids, column-pruned).
-  *   3. GROW: accepted rows merge into both tables (latest-wins on doc_id,
-  *      so a replayed batch — whose rows match only themselves in the index,
-  *      never drop on the self-pair — is absorbed idempotently).
+  *   3. GROW: accepted rows append to both tables, committed through
+  *      [[graft.write.BatchCommit]].
   *
   * Semantics: a doc survives iff it is not in the transitive near-dup
   * closure of any earlier-accepted or lower-id-same-batch doc — the greedy
@@ -41,11 +39,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * construction (a crawl cannot un-accept history).
   *
   * Scale notes: every step is the already-bucketed batch machinery; the
-  * index side of the banding join is narrow longs. The two writes use the
-  * W3 whole-table merge — the same shape as every streaming sink here; an
-  * append-heavy deployment would swap them for per-bucket patch versions
-  * ([[graft.write.VersionedTable.stagePatch]]) without touching the
-  * protocol.
+  * index side of the banding join is narrow longs. The two writes are
+  * O(batch) appends ([[graft.write.VersionedTable.stageAppend]]), their
+  * chains compacted past `maxChainDepth`.
   */
 final class NearDupIndex(spark: SparkSession, root: String,
                          threshold: Double = 0.8, numHashes: Int = 64,
@@ -123,69 +119,47 @@ final class NearDupIndex(spark: SparkSession, root: String,
     * old files inherited by reference ([[graft.write.VersionedTable
     * .stageAppend]]) — NOT a keyed re-merge of the whole table per batch,
     * which would make each micro-batch pay an O(corpus) rewrite. Append
-    * alone would duplicate rows on a foreachBatch replay, so each promote
-    * is stamped with the micro-batch id atomically in the manifest and a
-    * redelivered batch skips a table whose stamp it already carries — the
-    * standard exactly-once foreachBatch sink. A crash BETWEEN the two
-    * promotes replays into a half-stamped pair: the recompute is
-    * deterministic (candidates band against the signatures table, which
-    * never runs ahead of survivors), the stamped table skips, the lagging
-    * table appends — convergent, no duplicates, no loss
-    * (StreamingNearDupSpec laws).
+    * alone would duplicate rows on a foreachBatch replay, so the batch
+    * commits through [[graft.write.BatchCommit]] (StreamingNearDupSpec
+    * laws).
     */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    val tag = s"batch=$batchId"
-    val survivorsDone = survivors.exists && survivors.currentTag.contains(tag)
-    val signaturesDone = signatures.exists && signatures.currentTag.contains(tag)
-    if (survivorsDone && signaturesDone) return
-    // tombstoned ids are rejected while their tombstone lives (see [[delete]])
-    // lazy checkpoints (r21): the survivors stage write is the batch's ONE
-    // materializing action — b, sigs and kept land in it and the signatures
-    // stage reuses the blocks (guide §2.4)
-    val b = minusTombstones(batch.select(col("doc_id"), col("text"))
-      .filter(col("text").isNotNull)).localCheckpoint(false)
-    val sigs = Dedup.minhashSignatures(b, numHashes, shingleSize)
-      .localCheckpoint(false)
-    // 1. within-batch transitive reduction to cluster min-ids
-    val pairs = Dedup.jaccardVerify(b,
-      Dedup.minhashCandidates(sigs, bands, numHashes),
-      shingleSize, threshold)
-    val reps = Cluster.dropNearDups(b, pairs)
-    // 2. cross-batch: survivors-so-far are the "old snapshot"
-    val kept = (if (!signatures.exists) reps
-                else Curation.nearDupAgainstIndex(reps, servedSignatures(),
-                  servedSurvivors(), threshold, numHashes, bands, shingleSize))
-      .localCheckpoint(false)
-    // 3. grow both tables with the accepted rows
-    val keptSigs = sigs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-    if (!survivorsDone) survivors.promote(survivors.stageAppendOrCreate(kept), Some(tag))
-    if (!signaturesDone)
-      signatures.promote(signatures.stageAppendOrCreate(keptSigs), Some(tag))
-    // bound the append chains a continuous crawl accumulates: read cost
-    // stays O(maxChainDepth) union legs, the O(table) rewrite amortizes to
-    // one every ~maxChainDepth batches (policy law in StreamingNearDupSpec).
-    // Routed through the purge-aware compaction so a rewrite that's being
-    // paid anyway also clears pending tombstones.
-    if (survivors.chainDepth > maxChainDepth ||
-        signatures.chainDepth > maxChainDepth)
-      compactPurge()
-  }
-}
-
-object NearDupStream {
-
-  /** [[NearDupIndex.processBatch]] as a streaming sink: drain a document
-    * stream into the index; `index.survivors` is the continuously-deduped
-    * corpus.
-    */
-  def nearDupDedupSink(docs: DataFrame, index: NearDupIndex,
-                       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        index.processBatch(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    BatchCommit(batchId, survivors, signatures) { commit =>
+      // tombstoned ids are rejected while their tombstone lives (see
+      // [[delete]]); lazy checkpoints (r21): the survivors stage write is
+      // the batch's ONE materializing action — b, sigs and kept land in it
+      // and the signatures stage reuses the blocks (guide §2.4)
+      val b = minusTombstones(batch.select(col("doc_id"), col("text"))
+        .filter(col("text").isNotNull)).localCheckpoint(false)
+      val sigs = Dedup.minhashSignatures(b, numHashes, shingleSize)
+        .localCheckpoint(false)
+      // 1. within-batch transitive reduction to cluster min-ids
+      val pairs = Dedup.jaccardVerify(b,
+        Dedup.minhashCandidates(sigs, bands, numHashes),
+        shingleSize, threshold)
+      val reps = Cluster.dropNearDups(b, pairs)
+      // 2. cross-batch: survivors-so-far are the "old snapshot"
+      val kept = (if (!signatures.exists) reps
+                  else Curation.nearDupAgainstIndex(reps, servedSignatures(),
+                    servedSurvivors(), threshold, numHashes, bands, shingleSize))
+        .localCheckpoint(false)
+      // 3. grow both tables with the accepted rows: survivors, then
+      // signatures, staged one after the other so the signatures stage
+      // reuses the blocks the survivors stage materialized. In this order
+      // the candidates always band against a signatures table that never
+      // runs ahead of survivors, so a redelivery after a crash between the
+      // promotes recomputes the same accepted rows
+      commit(survivors -> (() => survivors.stageAppendOrCreate(kept)))
+      commit(signatures -> (() => signatures.stageAppendOrCreate(
+        sigs.join(kept.select("doc_id"), Seq("doc_id"), "left_semi"))))
+      // bound the append chains a continuous crawl accumulates: read cost
+      // stays O(maxChainDepth) union legs, the O(table) rewrite amortizes
+      // to one every ~maxChainDepth batches (policy law in
+      // StreamingNearDupSpec). Routed through the purge-aware compaction
+      // so a rewrite that's being paid anyway also clears pending
+      // tombstones.
+      if (survivors.chainDepth > maxChainDepth ||
+          signatures.chainDepth > maxChainDepth)
+        compactPurge()
+    }
 }

@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.scale.{Cluster, Multimodal}
-import graft.write.VersionedTable
+import graft.write.{BatchCommit, VersionedTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 /** Streaming image near-dup dedup over perceptual hashes — the q216 batch
   * pipeline (decode through the real codec → dHash → Hamming-banded
@@ -29,8 +28,9 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   *      hash lies within `maxHamming` — the id-inequality guard is what
   *      lets a replayed batch, whose rows already sit in the index,
   *      re-accept identically instead of self-matching;
-  *   4. GROW: accepted hashes append, batch-stamped (exactly-once under
-  *      foreachBatch redelivery), chain-compacted past `maxChainDepth`.
+  *   4. GROW: accepted hashes append through [[graft.write.BatchCommit]]
+  *      (exactly-once under foreachBatch redelivery), chain-compacted past
+  *      `maxChainDepth`.
   *
   * Semantics: greedy temporal, same as every accept-only crawl index here —
   * an image survives iff it is not within `maxHamming` of any
@@ -93,60 +93,58 @@ final class PhashIndex(spark: SparkSession, root: String,
   def accepted(): DataFrame = hashes.read()
 
   /** Drain one image batch: (asset_id, payload binary, fmt ∈ png|gif|jpeg). */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    val tag = s"batch=$batchId"
-    if (hashes.exists && hashes.currentTag.contains(tag)) return
-    val ss = batch.sparkSession
-    import ss.implicits._
-    // spread the decode (the batch's CPU cost) across cores ONLY when the
-    // batch carries enough payload bytes for the decode win to beat the
-    // shuffle cost (r21, VERDICT item 3: the unconditional shuffle-to-cores
-    // regressed the small-batch drain q219 — its per-batch shuffle + 32-task
-    // overhead exceeded the decode saved). The split count derives from the
-    // batch's OWN size (one decode task per ~MiB of payload, capped at the
-    // core count), so a tiny batch moves zero bytes and a heavy one still
-    // fans out — scale-adaptive in both directions (guide §2.1, §6).
-    val src0 = batch.select(col("asset_id").cast("long"), col("payload"), col("fmt"))
-    val src = PhashStream.decodeSpread(src0)
-    val hashed = src
-      .as[(Long, Array[Byte], String)]
-      .mapPartitions(_.map { case (aid, bytes, fmt) =>
-        (aid, Multimodal.decodeDhash(aid, bytes, fmt))
-      })
-      // lazy (r21): the decode runs once, inside the first consuming job
-      // (the within-batch CC's edge count), and every later use reads the
-      // persisted blocks — no dedicated checkpoint job
-      .toDF("asset_id", "dhash").localCheckpoint(false)
-    val pairs = Multimodal.phashPairs(hashed, "asset_id", "dhash",
-      bands, bandBits, maxHamming)
-    val labels = Cluster.connectedComponents(pairs)
-      .withColumnRenamed("doc_id", "asset_id")
-    val reps = hashed.join(labels, Seq("asset_id"), "left")
-      .filter(col("cluster").isNull || col("cluster") === col("asset_id"))
-      .select("asset_id", "dhash")
-    val kept =
-      (if (!hashes.exists) minusTombstones(reps)
-       else {
-         // an id already accepted is an id-level re-crawl, not a new image:
-         // skip it outright (growth is append-only per id, like
-         // PostingsIndex — raw table, so a tombstoned id cannot
-         // resurrect-by-append while its tombstone lives); the CONTENT
-         // check bands against [[served]], so erased images stop
-         // suppressing near twins immediately
-         val fresh = minusTombstones(reps.join(accepted().select("asset_id"),
-           Seq("asset_id"), "left_anti"))
-         fresh.join(
-           Multimodal.phashCollisions(fresh, served(), "asset_id", "dhash",
-             bands, bandBits, maxHamming),
-           Seq("asset_id"), "left_anti")
-       })
-        .localCheckpoint(false) // materialized by the stage write (r21)
-    hashes.promote(hashes.stageAppendOrCreate(kept), Some(tag))
-    // bound the append chain; a rewrite that's being paid anyway also
-    // clears pending tombstones (the NearDupIndex policy)
-    if (hashes.chainDepth > maxChainDepth) compactPurge()
-    ()
-  }
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    BatchCommit(batchId, hashes) { commit =>
+      val ss = batch.sparkSession
+      import ss.implicits._
+      // spread the decode (the batch's CPU cost) across cores ONLY when the
+      // batch carries enough payload bytes for the decode win to beat the
+      // shuffle cost (r21, VERDICT item 3: the unconditional shuffle-to-cores
+      // regressed the small-batch drain q219 — its per-batch shuffle + 32-task
+      // overhead exceeded the decode saved). The split count derives from the
+      // batch's OWN size (one decode task per ~MiB of payload, capped at the
+      // core count), so a tiny batch moves zero bytes and a heavy one still
+      // fans out — scale-adaptive in both directions (guide §2.1, §6).
+      val src0 = batch.select(col("asset_id").cast("long"), col("payload"), col("fmt"))
+      val src = PhashStream.decodeSpread(src0)
+      val hashed = src
+        .as[(Long, Array[Byte], String)]
+        .mapPartitions(_.map { case (aid, bytes, fmt) =>
+          (aid, Multimodal.decodeDhash(aid, bytes, fmt))
+        })
+        // lazy (r21): the decode runs once, inside the first consuming job
+        // (the within-batch CC's edge count), and every later use reads the
+        // persisted blocks — no dedicated checkpoint job
+        .toDF("asset_id", "dhash").localCheckpoint(false)
+      val pairs = Multimodal.phashPairs(hashed, "asset_id", "dhash",
+        bands, bandBits, maxHamming)
+      val labels = Cluster.connectedComponents(pairs)
+        .withColumnRenamed("doc_id", "asset_id")
+      val reps = hashed.join(labels, Seq("asset_id"), "left")
+        .filter(col("cluster").isNull || col("cluster") === col("asset_id"))
+        .select("asset_id", "dhash")
+      val kept =
+        (if (!hashes.exists) minusTombstones(reps)
+         else {
+           // an id already accepted is an id-level re-crawl, not a new image:
+           // skip it outright (growth is append-only per id, like
+           // PostingsIndex — raw table, so a tombstoned id cannot
+           // resurrect-by-append while its tombstone lives); the CONTENT
+           // check bands against [[served]], so erased images stop
+           // suppressing near twins immediately
+           val fresh = minusTombstones(reps.join(accepted().select("asset_id"),
+             Seq("asset_id"), "left_anti"))
+           fresh.join(
+             Multimodal.phashCollisions(fresh, served(), "asset_id", "dhash",
+               bands, bandBits, maxHamming),
+             Seq("asset_id"), "left_anti")
+         })
+          .localCheckpoint(false) // materialized by the stage write (r21)
+      commit(hashes -> (() => hashes.stageAppendOrCreate(kept)))
+      // bound the append chain; a rewrite that's being paid anyway also
+      // clears pending tombstones (the NearDupIndex policy)
+      if (hashes.chainDepth > maxChainDepth) compactPurge()
+    }
 }
 
 /** Streaming VIDEO near-dup dedup — the q221 batch pipeline (animated-GIF
@@ -166,7 +164,7 @@ final class PhashIndex(spark: SparkSession, root: String,
   * Per batch: within-batch video components (frame-banded pairs → vote →
   * transitive min-id), then the cross-batch vote against the SERVED frame
   * relation (tombstoned videos excluded, so erased content stops
-  * suppressing immediately), then an O(batch) stamped append. Replay and
+  * suppressing immediately), then an O(batch) batch-committed append. Replay and
   * delete semantics are exactly [[PhashIndex]]'s (same laws, spec'd in
   * VideoPhashStreamSpec).
   *
@@ -265,66 +263,64 @@ final class VideoPhashIndex(spark: SparkSession, root: String,
     * dispatches on the container magic; frame keys are
     * container-invariant, so cross-container re-encodes vote).
     */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    val tag = s"batch=$batchId"
-    if (frames.exists && frames.currentTag.contains(tag)) return
-    val ss = batch.sparkSession
-    import ss.implicits._
-    // byte-gated decode spread (see [[PhashIndex.processBatch]] — video
-    // payloads are large, so heavy batches still fan out)
-    val src0 = batch.select(col("asset_id").cast("long"), col("payload"))
-    val src = PhashStream.decodeSpread(src0)
-    val hashed = src
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (vid, bytes) =>
-        // every decodable modality hashes: frames when the codec is in the
-        // frame path's subset, PLUS the PCM audio track's envelope when
-        // one exists (f = AudioF — its own modality row). That audio row
-        // is what lets a LATER avc1 re-encode (frame path refuses the
-        // codec) still vote against this asset. Assets with NEITHER path
-        // stay fail-closed.
-        val audio = Multimodal.mp4AudioEnvelopeHash(bytes)
-          .map(h => (vid, VideoPhashIndex.AudioF, h))
-        Multimodal.videoDecodeGrayFrames(bytes) match {
-          case Some((w, h, fs)) =>
-            fs.iterator.zipWithIndex.map { case (px, f) =>
-              (vid, f, Multimodal.dHash56(px, w, h))
-            } ++ audio.iterator
-          case None =>
-            audio.map(Iterator.single(_)).getOrElse(
-              throw new IllegalStateException(s"undecodable video $vid"))
-        }
-      })
-      // lazy decode checkpoint (see [[PhashIndex.processBatch]])
-      .toDF("asset_id", "f", "dhash").localCheckpoint(false)
-    // within-batch: frame-banded pairs → >= minFrameVotes vote → components
-    // (votePairs emits both orientations of each unordered pair; keep one)
-    val videoPairs = votePairs(hashed, hashed)
-      .filter(col("p_id") < col("i_id"))
-      .select(col("p_id").as("doc_a"), col("i_id").as("doc_b"))
-    val labels = Cluster.connectedComponents(videoPairs)
-      .withColumnRenamed("doc_id", "asset_id")
-    val reps = hashed.join(labels, Seq("asset_id"), "left")
-      .filter(col("cluster").isNull || col("cluster") === col("asset_id"))
-      .select("asset_id", "f", "dhash")
-    val kept =
-      (if (!frames.exists) minusTombstones(reps)
-       else {
-         // id-level re-crawl skip against the RAW table (append-only per
-         // id, no resurrection while a tombstone lives); the CONTENT vote
-         // runs against [[served]] so erased videos stop suppressing
-         val fresh = minusTombstones(reps.join(
-           accepted().select("asset_id").distinct(),
-           Seq("asset_id"), "left_anti"))
-         fresh.join(
-           votePairs(fresh, served()).select(col("p_id").as("asset_id")).distinct(),
-           Seq("asset_id"), "left_anti")
-       })
-        .localCheckpoint(false) // materialized by the stage write (r21)
-    frames.promote(frames.stageAppendOrCreate(kept), Some(tag))
-    if (frames.chainDepth > maxChainDepth) compactPurge()
-    ()
-  }
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    BatchCommit(batchId, frames) { commit =>
+      val ss = batch.sparkSession
+      import ss.implicits._
+      // byte-gated decode spread (see [[PhashIndex.processBatch]] — video
+      // payloads are large, so heavy batches still fan out)
+      val src0 = batch.select(col("asset_id").cast("long"), col("payload"))
+      val src = PhashStream.decodeSpread(src0)
+      val hashed = src
+        .as[(Long, Array[Byte])]
+        .mapPartitions(_.flatMap { case (vid, bytes) =>
+          // every decodable modality hashes: frames when the codec is in the
+          // frame path's subset, PLUS the PCM audio track's envelope when
+          // one exists (f = AudioF — its own modality row). That audio row
+          // is what lets a LATER avc1 re-encode (frame path refuses the
+          // codec) still vote against this asset. Assets with NEITHER path
+          // stay fail-closed.
+          val audio = Multimodal.mp4AudioEnvelopeHash(bytes)
+            .map(h => (vid, VideoPhashIndex.AudioF, h))
+          Multimodal.videoDecodeGrayFrames(bytes) match {
+            case Some((w, h, fs)) =>
+              fs.iterator.zipWithIndex.map { case (px, f) =>
+                (vid, f, Multimodal.dHash56(px, w, h))
+              } ++ audio.iterator
+            case None =>
+              audio.map(Iterator.single(_)).getOrElse(
+                throw new IllegalStateException(s"undecodable video $vid"))
+          }
+        })
+        // lazy decode checkpoint (see [[PhashIndex.processBatch]])
+        .toDF("asset_id", "f", "dhash").localCheckpoint(false)
+      // within-batch: frame-banded pairs → >= minFrameVotes vote → components
+      // (votePairs emits both orientations of each unordered pair; keep one)
+      val videoPairs = votePairs(hashed, hashed)
+        .filter(col("p_id") < col("i_id"))
+        .select(col("p_id").as("doc_a"), col("i_id").as("doc_b"))
+      val labels = Cluster.connectedComponents(videoPairs)
+        .withColumnRenamed("doc_id", "asset_id")
+      val reps = hashed.join(labels, Seq("asset_id"), "left")
+        .filter(col("cluster").isNull || col("cluster") === col("asset_id"))
+        .select("asset_id", "f", "dhash")
+      val kept =
+        (if (!frames.exists) minusTombstones(reps)
+         else {
+           // id-level re-crawl skip against the RAW table (append-only per
+           // id, no resurrection while a tombstone lives); the CONTENT vote
+           // runs against [[served]] so erased videos stop suppressing
+           val fresh = minusTombstones(reps.join(
+             accepted().select("asset_id").distinct(),
+             Seq("asset_id"), "left_anti"))
+           fresh.join(
+             votePairs(fresh, served()).select(col("p_id").as("asset_id")).distinct(),
+             Seq("asset_id"), "left_anti")
+         })
+          .localCheckpoint(false) // materialized by the stage write (r21)
+      commit(frames -> (() => frames.stageAppendOrCreate(kept)))
+      if (frames.chainDepth > maxChainDepth) compactPurge()
+    }
 }
 
 object VideoPhashIndex {
@@ -350,34 +346,4 @@ object PhashStream {
     */
   private[streaming] def decodeSpread(src: DataFrame): DataFrame =
     graft.scale.Multimodal.spreadForDecode(src, SpreadBytesPerTask)
-
-  /** [[PhashIndex.processBatch]] as a streaming sink: drain an image
-    * stream into the index; `index.accepted()` is the continuously-deduped
-    * hash relation.
-    */
-  def phashDedupSink(images: DataFrame, index: PhashIndex,
-                     checkpoint: String): StreamingQuery =
-    images.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        index.processBatch(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-
-  /** [[VideoPhashIndex.processBatch]] as a streaming sink: drain an
-    * animated-GIF video stream into the index; `index.served()` is the
-    * continuously-deduped frame-hash relation.
-    */
-  def videoPhashDedupSink(videos: DataFrame, index: VideoPhashIndex,
-                          checkpoint: String): StreamingQuery =
-    videos.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        index.processBatch(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
 }

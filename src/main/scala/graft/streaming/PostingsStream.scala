@@ -1,11 +1,9 @@
 package graft.streaming
 
-import graft.core.Par
 import graft.scale.Retrieval
-import graft.write.VersionedTable
+import graft.write.{BatchCommit, VersionedTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 /** Streaming inverted-index maintenance — the lexical complement of
   * [[AnnStream]]: a document crawl drained into a persistent postings table
@@ -24,8 +22,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * postings can never collide with stored (term, doc_id) rows and the
   * merged read is exactly the batch-built index — no keyed merge needed.
   * What append semantics can't absorb is a foreachBatch REDELIVERY (same
-  * rows twice), so each promote stamps the micro-batch id in the manifest
-  * and a replayed batch skips — the [[NearDupIndex]] exactly-once protocol.
+  * rows twice); each batch commits through [[graft.write.BatchCommit]].
   *
   * Batch files are sorted by term before the write so each parquet file
   * carries a tight term min/max envelope — a single-term serving scan
@@ -102,38 +99,38 @@ final class PostingsIndex(spark: SparkSession, root: String,
       coalesce(sum("len"), lit(0L)).as("sum_len"))
 
   /** Index one micro-batch of (doc_id, text). Callable directly so specs
-    * drive controlled batch boundaries. Three tagged promotes (postings,
-    * lengths partial, stats partial), each guarded separately, so a
-    * redelivery after a crash between them completes exactly-once.
+    * drive controlled batch boundaries.
     */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    val tag = s"batch=$batchId"
-    val done = (t: VersionedTable) => t.currentTag.contains(tag)
-    if (done(postings) && (!maintainSidecars || done(lengths) && done(stats))) return
-    val incoming = batch.select(col("doc_id"), col("text"))
-      .filter(col("text").isNotNull)
-    // a tombstoned id stays deleted while its tombstone lives: admitting it
-    // would append NEW rows next to its not-yet-purged old rows (see class
-    // scaladoc — the append-growth/upsert-growth asymmetry). Lazy
-    // checkpoint: the first stage write to touch it materializes the scan +
-    // anti-join; the concurrent stages below can race that materialization
-    // and rescan the batch (bounded at batch size, in otherwise-idle
-    // tasks; the anti-join is deterministic, so a rescan yields the same
-    // rows) — still at-most what the OLD form paid, which recomputed the
-    // anti-join serially in all three stages (r21).
-    val live = ts.minus(incoming).localCheckpoint(false)
-    val lp = lenPartial(live).localCheckpoint(false)
-    val parts = Seq(postings -> build(live).sortWithinPartitions("term")) ++
-      (if (maintainSidecars) Seq(lengths -> lp, stats -> statsPartial(lp)) else Nil)
-    val todo = parts.filterNot(p => done(p._1))
-    // independent tables: the stages overlap; the tagged promotes follow in
-    // the order the redelivery protocol's crash argument uses
-    val versions = Par.all(todo.map { case (t, df) => () => t.stageAppendOrCreate(df) })
-    todo.zip(versions).foreach { case ((t, _), v) => t.promote(v, Some(tag)) }
-    // chain-depth policy: bounded read cost for a continuous drain
-    // (amortized rewrite — see VersionedTable.compactIfNeeded); routed
-    // through the purge-aware compaction so pending tombstones clear too
-    if (postings.chainDepth > maxChainDepth) compact()
+    val sidecars = if (maintainSidecars) Seq(lengths, stats) else Nil
+    BatchCommit(batchId, postings +: sidecars: _*) { commit =>
+      val incoming = batch.select(col("doc_id"), col("text"))
+        .filter(col("text").isNotNull)
+      // a tombstoned id stays deleted while its tombstone lives: admitting
+      // it would append NEW rows next to its not-yet-purged old rows (see
+      // class scaladoc — the append-growth/upsert-growth asymmetry). Lazy
+      // checkpoint: the first stage write to touch it materializes the
+      // scan + anti-join; the concurrent stages below can race that
+      // materialization and rescan the batch (bounded at batch size, in
+      // otherwise-idle tasks; the anti-join is deterministic, so a rescan
+      // yields the same rows) — still at-most what the OLD form paid, which
+      // recomputed the anti-join serially in all three stages (r21).
+      val live = ts.minus(incoming).localCheckpoint(false)
+      val lp = lenPartial(live).localCheckpoint(false)
+      // any promote order converges: each table's rows derive from the
+      // batch and the tombstones alone, never from another table
+      val sidecarStages =
+        if (maintainSidecars)
+          Seq(lengths -> (() => lengths.stageAppendOrCreate(lp)),
+            stats -> (() => stats.stageAppendOrCreate(statsPartial(lp))))
+        else Nil
+      commit(Seq(postings -> (() => postings.stageAppendOrCreate(
+        build(live).sortWithinPartitions("term")))) ++ sidecarStages: _*)
+      // chain-depth policy: bounded read cost for a continuous drain
+      // (amortized rewrite — see VersionedTable.compactIfNeeded); routed
+      // through the purge-aware compaction so pending tombstones clear too
+      if (postings.chainDepth > maxChainDepth) compact()
+    }
   }
 
   /** Delete a batch of doc ids: O(batch) tombstone append, no postings
@@ -231,8 +228,8 @@ final class PostingsIndex(spark: SparkSession, root: String,
   * O(query-terms) postings + a candidate-joined sidecar + O(1) stats,
   * exactly the [[PostingsIndex.bm25Serve]] shape with a field dimension.
   *
-  * Everything else is [[PostingsIndex]]'s protocol verbatim: stamped
-  * exactly-once promotes per micro-batch, term-sorted batch files for
+  * Everything else is [[PostingsIndex]]'s protocol verbatim: one
+  * [[graft.write.BatchCommit]] per micro-batch, term-sorted batch files for
   * row-group pruning, LSM tombstone deletes with reject-while-tombstoned
   * re-ingest, purge-on-compact, and the `Σ stats == totals(lengths)`
   * invariant (per field) with serve-time tombstone subtraction.
@@ -271,28 +268,26 @@ final class FieldedPostingsIndex(spark: SparkSession, root: String,
     lp.agg(count(lit(1)).cast("long").as("n_docs"),
       lenCols.map(c => coalesce(sum(c), lit(0L)).as(s"sum_$c")): _*)
 
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    val tag = s"batch=$batchId"
-    val done = (t: VersionedTable) => t.currentTag.contains(tag)
-    if (done(postings) && done(lengths) && done(stats)) return
-    // reject-while-tombstoned (the PostingsIndex append-growth asymmetry);
-    // lazy checkpoints, materialized ONCE by the count below BEFORE the
-    // concurrent stage writes launch — three racing stages would otherwise
-    // each recompute the batch scan + anti-join + tokenize (the lazy-
-    // checkpoint race this round measured in NnDescent); one count job
-    // replaces the two eager checkpoint jobs the old form paid (r21)
-    val live = ts.minus(batch.filter(col("doc_id").isNotNull))
-      .localCheckpoint(false)
-    val lp = lenPartial(live).localCheckpoint(false)
-    lp.count()
-    val todo = Seq(
-      postings -> Retrieval.fieldedInvertedIndex(live, fields).sortWithinPartitions("term"),
-      lengths -> lp, stats -> statsPartial(lp)).filterNot(p => done(p._1))
-    // PostingsIndex.processBatch's overlap and promote order
-    val versions = Par.all(todo.map { case (t, df) => () => t.stageAppendOrCreate(df) })
-    todo.zip(versions).foreach { case ((t, _), v) => t.promote(v, Some(tag)) }
-    if (postings.chainDepth > maxChainDepth) compact()
-  }
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    BatchCommit(batchId, postings, lengths, stats) { commit =>
+      // reject-while-tombstoned (the PostingsIndex append-growth
+      // asymmetry); lazy checkpoints, materialized ONCE by the count below
+      // BEFORE the concurrent stage writes launch — three racing stages
+      // would otherwise each recompute the batch scan + anti-join +
+      // tokenize (the lazy-checkpoint race this round measured in
+      // NnDescent); one count job replaces the two eager checkpoint jobs
+      // the old form paid (r21)
+      val live = ts.minus(batch.filter(col("doc_id").isNotNull))
+        .localCheckpoint(false)
+      val lp = lenPartial(live).localCheckpoint(false)
+      lp.count()
+      // PostingsIndex.processBatch's promote order, for its reason
+      commit(postings -> (() => postings.stageAppendOrCreate(
+          Retrieval.fieldedInvertedIndex(live, fields).sortWithinPartitions("term"))),
+        lengths -> (() => lengths.stageAppendOrCreate(lp)),
+        stats -> (() => stats.stageAppendOrCreate(statsPartial(lp))))
+      if (postings.chainDepth > maxChainDepth) compact()
+    }
 
   def delete(deletedIds: DataFrame, idCol: String = "doc_id"): Unit =
     ts.add(deletedIds, idCol)
@@ -380,22 +375,4 @@ final class FieldedPostingsIndex(spark: SparkSession, root: String,
       stats.promote(stats.stage(total), stats.currentTag)
     }
   }
-}
-
-object PostingsStream {
-
-  /** [[PostingsIndex.processBatch]] as a streaming sink: drain a document
-    * stream into the index; `index.served()` is the postings table a query
-    * may read.
-    */
-  def postingsSink(docs: DataFrame, index: PostingsIndex,
-                   checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        index.processBatch(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
 }

@@ -1,10 +1,9 @@
 package graft.streaming
 
 import graft.scale.Curation
-import graft.write.VersionedTable
+import graft.write.{BatchCommit, VersionedTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 /** Streaming span-level eval decontamination —
   * [[graft.scale.Curation.scrubEvalSpans]] as a continuous ingest: the
@@ -17,7 +16,7 @@ import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
   * only on the eval set, never on other docs or batch boundaries, so any
   * split of the same corpus drains to the same clean table (the q270
   * frozen-guard argument) and the oracle is q268's closed form verbatim.
-  * Exactly-once under foreachBatch redelivery via the stamped promote.
+  * Exactly-once under foreachBatch redelivery via [[graft.write.BatchCommit]].
   */
 final class ScrubIndex(spark: SparkSession, root: String, n: Int = 8,
                        maxChainDepth: Int = 16) {
@@ -35,26 +34,10 @@ final class ScrubIndex(spark: SparkSession, root: String, n: Int = 8,
   /** Scrub one micro-batch of (doc_id, text). */
   def processBatch(batch: DataFrame, batchId: Long): Unit = {
     require(grams.exists, s"ScrubIndex at $root must be seeded before draining")
-    val tag = s"batch=$batchId"
-    if (clean.exists && clean.currentTag.contains(tag)) return
-    val scrubbed = Curation.scrubAgainstGrams(
-      batch.filter(col("text").isNotNull), grams.read(), n)
-    clean.promote(clean.stageAppendOrCreate(scrubbed), Some(tag))
-    if (clean.chainDepth > maxChainDepth) { clean.compact(); () }
+    BatchCommit(batchId, clean) { commit =>
+      commit(clean -> (() => clean.stageAppendOrCreate(Curation.scrubAgainstGrams(
+        batch.filter(col("text").isNotNull), grams.read(), n))))
+      clean.compactIfNeeded(maxChainDepth)
+    }
   }
-}
-
-object ScrubStream {
-
-  /** [[ScrubIndex.processBatch]] as a streaming sink. */
-  def scrubSink(docs: DataFrame, index: ScrubIndex,
-                checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        index.processBatch(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
 }

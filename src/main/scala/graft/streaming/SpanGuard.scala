@@ -1,10 +1,8 @@
 package graft.streaming
 
-import graft.core.Par
-import graft.write.VersionedTable
+import graft.write.{BatchCommit, VersionedTable}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
 
 /** Streaming EXACT-substring admission guard: a crawl is admitted only if
   * none of its `n`-token spans has been seen in a PREVIOUS micro-batch —
@@ -57,74 +55,52 @@ final class SpanGuardIndex(spark: SparkSession, root: String,
   def seed(reference: DataFrame): Unit =
     spans.promote(spans.stage(docSpans(reference).select("h").distinct()))
 
-  /** Ingest one micro-batch of (doc_id, text). */
-  def processBatch(batch: DataFrame, batchId: Long): Unit = {
-    val tag = s"batch=$batchId"
-    // replay gate: the spans promote carries the stamp in growing mode;
-    // in frozen (screen-only) mode the spans table never moves, so the
-    // admitted log carries it instead
-    val done =
-      if (growSpans) spans.exists && spans.currentTag.contains(tag)
-      else admitted.exists && admitted.currentTag.contains(tag)
-    if (done) return
-    val sc = spark.sparkContext
-    sc.setJobDescription(s"spanguard $tag: batch spans")
-    val ds = docSpans(batch).localCheckpoint()
-    val rejected =
-      if (spans.exists) ds.join(spans.read(), Seq("h"), "left_semi")
-        .select("doc_id").distinct()
-      else ds.select("doc_id").limit(0)
-    // anti-join vs the stored log: a crash between the two promotes
-    // (admitted landed, spans didn't) replays the batch, and the append
-    // must not duplicate the already-admitted ids
-    val adm0 = batch.select("doc_id").distinct()
-      .join(rejected, Seq("doc_id"), "left_anti")
-    val adm = if (admitted.exists)
-      adm0.join(admitted.read(), Seq("doc_id"), "left_anti") else adm0
-    val admTag = if (growSpans) None else Some(tag)
-    // the two staging writes are independent of each other (both read only
-    // the checkpointed batch spans and the PRE-promote table states), so
-    // they overlap; the PROMOTES stay strictly ordered (admitted, then
-    // spans) — the crash story below depends on that order
-    val (admStaged, spansStaged) = Par.both({
-      sc.setJobDescription(s"spanguard $tag: admitted append")
-      admitted.stageAppendOrCreate(adm)
-    }, {
-      if (!growSpans) None
-      else {
+  /** Ingest one micro-batch of (doc_id, text). Each phase's jobs carry a
+    * `spanguard batch=N: …` description; the caller's own description is
+    * restored on return, normal or not.
+    */
+  def processBatch(batch: DataFrame, batchId: Long): Unit =
+    // frozen (screen-only) mode never moves the spans table: only the
+    // admitted log commits
+    BatchCommit(batchId, admitted +: (if (growSpans) Seq(spans) else Nil): _*) { commit =>
+      val sc = spark.sparkContext
+      val callerDescription = sc.getLocalProperty("spark.job.description")
+      def phase(name: String): Unit = sc.setJobDescription(s"spanguard ${commit.tag}: $name")
+      try {
+        phase("batch spans")
+        val ds = docSpans(batch).localCheckpoint()
+        val rejected =
+          if (spans.exists) ds.join(spans.read(), Seq("h"), "left_semi")
+            .select("doc_id").distinct()
+          else ds.select("doc_id").limit(0)
+        // anti-join vs the stored log: a torn retry must not duplicate
+        // already-admitted ids
+        val adm0 = batch.select("doc_id").distinct()
+          .join(rejected, Seq("doc_id"), "left_anti")
+        val adm = if (admitted.exists)
+          adm0.join(admitted.read(), Seq("doc_id"), "left_anti") else adm0
         // ALL batch spans enter the index (the re-crawl rule): admission
         // never depends on earlier admissions, only on earlier batches
-        val fresh =
-          if (spans.exists) ds.select("h").distinct()
-            .join(spans.read(), Seq("h"), "left_anti")
-          else ds.select("h").distinct()
-        sc.setJobDescription(s"spanguard $tag: spans append")
-        Some(spans.stageAppendOrCreate(fresh))
-      }
-    })
-    admitted.promote(admStaged, admTag)
-    spansStaged.foreach { v =>
-      spans.promote(v, Some(tag))
-      sc.setJobDescription(s"spanguard $tag: spans compact")
-      if (spans.chainDepth > maxChainDepth) { spans.compact(); () }
+        val spansStage =
+          if (!growSpans) Nil
+          else Seq(spans -> (() => {
+            val fresh =
+              if (spans.exists) ds.select("h").distinct()
+                .join(spans.read(), Seq("h"), "left_anti")
+              else ds.select("h").distinct()
+            phase("spans append")
+            spans.stageAppendOrCreate(fresh)
+          }))
+        // admitted, then spans: the rejections read the pre-batch spans,
+        // which a crash between the promotes leaves in place
+        commit(Seq(admitted -> (() => {
+          phase("admitted append")
+          admitted.stageAppendOrCreate(adm)
+        })) ++ spansStage: _*)
+        phase("spans compact")
+        spans.compactIfNeeded(maxChainDepth)
+        phase("admitted compact")
+        admitted.compactIfNeeded(maxChainDepth)
+      } finally sc.setJobDescription(callerDescription)
     }
-    sc.setJobDescription(s"spanguard $tag: admitted compact")
-    if (admitted.chainDepth > maxChainDepth) { admitted.compact(); () }
-    sc.setJobDescription(null)
-  }
-}
-
-object SpanGuard {
-
-  /** [[SpanGuardIndex.processBatch]] as a streaming sink. */
-  def spanGuardSink(docs: DataFrame, index: SpanGuardIndex,
-                    checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        index.processBatch(batch, batchId)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
 }

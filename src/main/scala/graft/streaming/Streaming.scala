@@ -17,6 +17,25 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object Streaming {
 
+  /** The one streaming drain: run `f` on every micro-batch the stream holds
+    * now, with `(batch, batchId)`, then stop (`Trigger.AvailableNow`),
+    * checkpointing progress at `checkpoint`. Spark redelivers a batch whose
+    * checkpoint commit did not land under the same id, so `f` must be
+    * idempotent per id: a keyed merge, or a [[graft.write.BatchCommit]].
+    * `mode` matters only to stateful plans: stream-stream joins emit only in
+    * Append, keyed-state operators only in Update; a stateless plan runs the
+    * same under either.
+    */
+  def drain(stream: DataFrame, checkpoint: String,
+            mode: OutputMode = OutputMode.Update())
+           (f: (DataFrame, Long) => Unit): StreamingQuery =
+    stream.writeStream
+      .outputMode(mode)
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(f)
+      .trigger(Trigger.AvailableNow())
+      .start()
+
   /** W3 as a streaming sink: each micro-batch is merged into the versioned
     * table with latest-wins dedup — identical semantics to the batch
     * pipeline, so a stream restart or duplicate delivery is absorbed the
@@ -29,14 +48,9 @@ object Streaming {
                            // keyed-state operators only in Update — the merge
                            // semantics downstream are identical either way
                            outputMode: OutputMode = OutputMode.Update()): StreamingQuery =
-    stream.writeStream
-      .outputMode(outputMode)
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        table.incrementalDedup(batch, keys, orderCols)
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    drain(stream, checkpoint, outputMode) { (batch, _) =>
+      table.incrementalDedup(batch, keys, orderCols)
+    }
 
   /** CDC-merge sink: folds a changelog stream into a snapshot table by
     * GLOBAL latest-wins-by-`seqCol`, retaining delete tombstones in the
@@ -54,20 +68,15 @@ object Streaming {
   def cdcMergeSink(changes: DataFrame, table: VersionedTable,
                    keys: Seq[String], seqCol: String, opCol: String,
                    checkpoint: String): StreamingQuery =
-    changes.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val existing = if (table.exists) table.read() else batch.limit(0)
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(keys.map(col): _*).orderBy(col(seqCol).desc)
-        val merged = existing.unionByName(batch)
-          .withColumn("__rn", row_number().over(w))
-          .filter(col("__rn") === 1).drop("__rn")
-        table.promote(table.stage(merged))
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    drain(changes, checkpoint) { (batch, _) =>
+      val existing = if (table.exists) table.read() else batch.limit(0)
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(keys.map(col): _*).orderBy(col(seqCol).desc)
+      val merged = existing.unionByName(batch)
+        .withColumn("__rn", row_number().over(w))
+        .filter(col("__rn") === 1).drop("__rn")
+      table.promote(table.stage(merged))
+    }
 
   /** Theta-sketch maintenance sink: each micro-batch's per-group sketch
     * merges into the stored state by re-selecting the k smallest hashes —
@@ -79,21 +88,16 @@ object Streaming {
     */
   def thetaMergeSink(rows: DataFrame, table: VersionedTable, groupCol: String,
                      keyCol: String, k: Int, checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val batchSketch = graft.scale.Sketches.thetaSketch(batch, groupCol, col(keyCol), k)
-        val merged =
-          if (table.exists)
-            graft.ops.TopK.topKPerKey(
-              table.read().unionByName(batchSketch).distinct(),
-              Seq("g"), Seq(col("h").asc), k)
-          else batchSketch
-        table.promote(table.stage(merged))
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    drain(rows, checkpoint) { (batch, _) =>
+      val batchSketch = graft.scale.Sketches.thetaSketch(batch, groupCol, col(keyCol), k)
+      val merged =
+        if (table.exists)
+          graft.ops.TopK.topKPerKey(
+            table.read().unionByName(batchSketch).distinct(),
+            Seq("g"), Seq(col("h").asc), k)
+        else batchSketch
+      table.promote(table.stage(merged))
+    }
 
   /** Quantile-sketch maintenance sink: each micro-batch's per-group
     * hash-bottom sample merges into the stored state by re-selecting the
@@ -106,22 +110,17 @@ object Streaming {
   def quantileMergeSink(rows: DataFrame, table: VersionedTable, groupCol: String,
                         keyCol: String, valCol: String, k: Int,
                         checkpoint: String): StreamingQuery =
-    rows.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val batchSketch = graft.scale.Sketches.quantileSketch(
-          batch, groupCol, col(keyCol), col(valCol), k)
-        val merged =
-          if (table.exists)
-            graft.ops.TopK.topKPerKey(
-              table.read().unionByName(batchSketch).distinct(),
-              Seq("g"), Seq(col("h").asc, col("v").asc), k)
-          else batchSketch
-        table.promote(table.stage(merged))
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    drain(rows, checkpoint) { (batch, _) =>
+      val batchSketch = graft.scale.Sketches.quantileSketch(
+        batch, groupCol, col(keyCol), col(valCol), k)
+      val merged =
+        if (table.exists)
+          graft.ops.TopK.topKPerKey(
+            table.read().unionByName(batchSketch).distinct(),
+            Seq("g"), Seq(col("h").asc, col("v").asc), k)
+        else batchSketch
+      table.promote(table.stage(merged))
+    }
 
   /** Watermarked tumbling-window counts per event type: late events beyond
     * the watermark are dropped, window state is evicted once the watermark
@@ -147,15 +146,10 @@ object Streaming {
     */
   def windowedCountsSink(counts: DataFrame, table: VersionedTable,
                          checkpoint: String): StreamingQuery =
-    counts.writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        table.incrementalDedup(batch, keys = Seq("window_start", "event_type"),
-          orderCols = Seq("n_events"))
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    drain(counts, checkpoint) { (batch, _) =>
+      table.incrementalDedup(batch, keys = Seq("window_start", "event_type"),
+      orderCols = Seq("n_events"))
+    }
 
   /** Session windows (gap-based), the streaming twin of the batch q16
     * sessionization: a session closes after `gap` of inactivity per user.
@@ -354,15 +348,10 @@ object Streaming {
     */
   def exactDedupSink(keeps: Dataset[DocKeep], table: VersionedTable,
                      checkpoint: String): StreamingQuery =
-    keeps.toDF().writeStream
-      .outputMode(OutputMode.Update())
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        table.incrementalDedup(batch, keys = Seq("content_hash"),
-          orderCols = Seq("copies"))
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
+    drain(keeps.toDF(), checkpoint) { (batch, _) =>
+      table.incrementalDedup(batch, keys = Seq("content_hash"),
+      orderCols = Seq("copies"))
+    }
 
   /** Read the documents table shape as a file stream (parquet) — the
     * readStream entry point for streaming curation.

@@ -243,7 +243,7 @@ object StreamingQueries {
         .withColumn("doc_id", col("doc_id") + 300000)
         .withColumn("text", expr("substring(text, instr(text, ' ') + 1)"))
       val crawl2 = exactRecrawl.unionByName(editedRecrawl)
-      NearDupStream.nearDupDedupSink(crawl2, index, s"$wh/ckpt2")
+      Streaming.drain(crawl2, s"$wh/ckpt2")(index.processBatch)
         .awaitTermination()
       index.survivors.read().orderBy("doc_id")
     },
@@ -472,7 +472,7 @@ object StreamingQueries {
       val index = new PostingsIndex(s, s"$wh/lex", maintainSidecars = false)
       val s2 = s.newSession()
       val docs = Streaming.docsStream(s2, d).select("doc_id", "text")
-      PostingsStream.postingsSink(docs, index, s"$wh/ckpt").awaitTermination()
+      Streaming.drain(docs, s"$wh/ckpt")(index.processBatch).awaitTermination()
       graft.scale.Retrieval.topPostings(index.postings.read(), k = 3)
         .select(col("term"), col("rnk"), col("doc_id"), col("tf"))
         .orderBy("term", "rnk")
@@ -535,14 +535,7 @@ object StreamingQueries {
       val docs = Streaming.docsStream(s2, d).select(col("doc_id"), col("text"),
         when(col("doc_id") % 11 === 0, "zebra guide")
           .otherwise("plain guide").as("title"))
-      docs.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-        .option("checkpointLocation", s"$wh/ckpt")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          index.processBatch(b, id)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start().awaitTermination()
+      Streaming.drain(docs, s"$wh/ckpt")(index.processBatch).awaitTermination()
       index.bm25fServe(Seq("title" -> 3L, "text" -> 1L), Seq("zebra", "merge"))
         .select("doc_id", "tf_zebra", "tf_merge", "score")
         .orderBy(col("score").desc, col("doc_id")).limit(25)
@@ -652,15 +645,10 @@ object StreamingQueries {
       val stream = Streaming.docsStream(s2, d)
         .select(col("doc_id"),
           graft.scale.Curation.htmlFixture(col("doc_id"), col("text")).as("text"))
-      val q = stream.writeStream
-        .outputMode(OutputMode.Update())
-        .option("checkpointLocation", s"$wh/ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          table.incrementalDedup(graft.scale.Curation.extractText(batch),
-            keys = Seq("doc_id"), orderCols = Seq("doc_id"))
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q = Streaming.drain(stream, s"$wh/ckpt") { (batch, _) =>
+        table.incrementalDedup(graft.scale.Curation.extractText(batch),
+          keys = Seq("doc_id"), orderCols = Seq("doc_id"))
+      }
       q.awaitTermination()
       table.read().select("doc_id", "text").orderBy("doc_id")
     },
@@ -730,15 +718,7 @@ object StreamingQueries {
       val stream = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$wh/feed")
       val sink = new TriangleStream(edges, stats)
-      val q = stream.writeStream
-        .outputMode(OutputMode.Append())
-        .option("checkpointLocation", s"$wh/ckpt")
-        .foreachBatch { (batch0: org.apache.spark.sql.DataFrame, batchId: Long) =>
-          sink.processBatch(batch0, batchId)
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      Streaming.drain(stream, s"$wh/ckpt")(sink.processBatch).awaitTermination()
       stats.read()
     },
 
@@ -1041,7 +1021,7 @@ object StreamingQueries {
           })
           .toDF("asset_id", "payload", "fmt")
       }
-      PhashStream.phashDedupSink(arrivals, index, s"$wh/ckpt").awaitTermination()
+      Streaming.drain(arrivals, s"$wh/ckpt")(index.processBatch).awaitTermination()
       index.accepted()
         .select(col("asset_id").cast("long").as("asset_id"),
           col("dhash").cast("long").as("dhash"))
@@ -1251,7 +1231,7 @@ object StreamingQueries {
           .toDF("asset_id", "payload")
           .write.parquet(fp)
       }
-      PhashStream.videoPhashDedupSink(arrivals, index, s"$wh/ckpt")
+      Streaming.drain(arrivals, s"$wh/ckpt")(index.processBatch)
         .awaitTermination()
       val served = index.served()
         .withColumn("phase", lit("served")).localCheckpoint()
@@ -1352,7 +1332,7 @@ object StreamingQueries {
           .toDF("asset_id", "payload")
           .write.parquet(fp)
       }
-      PhashStream.videoPhashDedupSink(arrivals, index, s"$wh/ckpt")
+      Streaming.drain(arrivals, s"$wh/ckpt")(index.processBatch)
         .awaitTermination()
       val served = index.served()
         .withColumn("phase", lit("served")).localCheckpoint()
@@ -1405,7 +1385,7 @@ object StreamingQueries {
           .toDF("asset_id", "payload")
           .write.parquet(fp)
       }
-      PhashStream.videoPhashDedupSink(arrivals, index, s"$wh/ckpt")
+      Streaming.drain(arrivals, s"$wh/ckpt")(index.processBatch)
         .awaitTermination()
       val served = index.served().select("asset_id").distinct()
         .withColumn("phase", lit("served")).localCheckpoint()
@@ -1486,7 +1466,7 @@ object StreamingQueries {
           .toDF("asset_id", "payload")
           .write.parquet(fp)
       }
-      PhashStream.videoPhashDedupSink(arrivals, index, s"$wh/ckpt")
+      Streaming.drain(arrivals, s"$wh/ckpt")(index.processBatch)
         .awaitTermination()
       val served = index.served().select("asset_id").distinct()
         .withColumn("phase", lit("served")).localCheckpoint()
@@ -1616,7 +1596,7 @@ object StreamingQueries {
           }
           .toDF("asset_id", "payload", "fmt")
       }
-      PhashStream.phashDedupSink(arrivals, index, s"$wh/ckpt").awaitTermination()
+      Streaming.drain(arrivals, s"$wh/ckpt")(index.processBatch).awaitTermination()
       index.accepted()
         .select(col("asset_id").cast("long").as("asset_id"),
           col("dhash").cast("long").as("dhash"))
@@ -1670,14 +1650,9 @@ object StreamingQueries {
       val schema = s2.read.parquet(s"$wh/feed").schema
       val stream = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$wh/feed")
-      val q = stream.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .option("checkpointLocation", s"$wh/ckpt")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          sink.processBatch(b, id, idCol = "doc_id", keyCol = "c")
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q = Streaming.drain(stream, s"$wh/ckpt") { (b, id) =>
+        sink.processBatch(b, id, idCol = "doc_id", keyCol = "c")
+      }
       q.awaitTermination()
       sink.admitted.read()
         .select(lit("admit").as("phase"), col("key").as("c"),
@@ -1732,15 +1707,10 @@ object StreamingQueries {
       val schema = s2.read.parquet(s"$wh/feed").schema
       val stream = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$wh/feed")
-      val q = stream.writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
-        .option("checkpointLocation", s"$wh/ckpt")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          sink.processBatch(b, id, idCol = "doc_id", stratumCol = "lang",
-            nTokensCol = "n_tokens", seqCol = "day")
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q = Streaming.drain(stream, s"$wh/ckpt") { (b, id) =>
+        sink.processBatch(b, id, idCol = "doc_id", stratumCol = "lang",
+          nTokensCol = "n_tokens", seqCol = "day")
+      }
       q.awaitTermination()
       sink.admitted.read()
         .select(lit("admit").as("phase"), col("stratum").as("lang"),
@@ -1853,22 +1823,17 @@ object StreamingQueries {
       val schema = s2.read.parquet(s"$wh/feed").schema
       val stream = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$wh/feed")
-      val q = stream.writeStream
-        .outputMode(OutputMode.Update())
-        .option("checkpointLocation", s"$wh/ckpt")
-        .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-          // lazy checkpoints + count (r21): extract, anti-join and the
-          // emptiness answer land in ONE job instead of three (guide §2.4)
-          val e = domainEdges(batch).localCheckpoint(false)
-          if (!edgesOut.exists) { idx.build(e); () }
-          else {
-            val fresh = e.join(edgesOut.read().select("src", "dst"),
-              Seq("src", "dst"), "left_anti").localCheckpoint(false)
-            if (fresh.count() > 0) { idx.append(fresh); () }
-          }
+      val q = Streaming.drain(stream, s"$wh/ckpt") { (batch, _) =>
+        // lazy checkpoints + count (r21): extract, anti-join and the
+        // emptiness answer land in ONE job instead of three (guide §2.4)
+        val e = domainEdges(batch).localCheckpoint(false)
+        if (!edgesOut.exists) { idx.build(e); () }
+        else {
+          val fresh = e.join(edgesOut.read().select("src", "dst"),
+            Seq("src", "dst"), "left_anti").localCheckpoint(false)
+          if (fresh.count() > 0) { idx.append(fresh); () }
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      }
       q.awaitTermination()
       idx.ranks(Graph.Iters)
         .select(col("node"), col("rank").cast("long").as("rank"))
@@ -1905,7 +1870,7 @@ object StreamingQueries {
       val schema = s2.read.parquet(s"$wh/feed").schema
       val stream = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$wh/feed")
-      AnchorStream.anchorSink(stream, idx, s"$wh/ckpt").awaitTermination()
+      Streaming.drain(stream, s"$wh/ckpt")(idx.processBatch).awaitTermination()
       idx.served()
         .withColumn("rnk", row_number().over(Window.partitionBy("domain")
           .orderBy(col("cnt").desc, col("term"))).cast("long"))
@@ -1952,7 +1917,7 @@ object StreamingQueries {
       val schema = s2.read.parquet(s"$wh/feed").schema
       val stream = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$wh/feed")
-      SpanGuard.spanGuardSink(stream, idx, s"$wh/ckpt").awaitTermination()
+      Streaming.drain(stream, s"$wh/ckpt")(idx.processBatch).awaitTermination()
       docs.select("doc_id")
         .join(idx.admitted.read().withColumn("__a", lit(1)),
           Seq("doc_id"), "left")
@@ -2012,7 +1977,7 @@ object StreamingQueries {
       val schema = s2.read.parquet(s"$wh/feed").schema
       val stream = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$wh/feed")
-      SpanGuard.spanGuardSink(stream, idx, s"$wh/ckpt").awaitTermination()
+      Streaming.drain(stream, s"$wh/ckpt")(idx.processBatch).awaitTermination()
       docs.select("doc_id")
         .join(idx.admitted.read().withColumn("__a", lit(1)),
           Seq("doc_id"), "left")
@@ -2083,7 +2048,7 @@ object StreamingQueries {
       val schema = s2.read.parquet(s"$wh/feed").schema
       val stream = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$wh/feed")
-      ScrubStream.scrubSink(stream, idx, s"$wh/ckpt").awaitTermination()
+      Streaming.drain(stream, s"$wh/ckpt")(idx.processBatch).awaitTermination()
       idx.clean.read()
         .select(col("doc_id"), col("clean_text"), col("n_scrubbed"))
         .orderBy("doc_id")
@@ -2115,7 +2080,7 @@ object StreamingQueries {
       val schema = s2.read.parquet(s"$wh/feed").schema
       val stream = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$wh/feed")
-      AnchorStream.anchorSink(stream, idx, s"$wh/ckpt").awaitTermination()
+      Streaming.drain(stream, s"$wh/ckpt")(idx.processBatch).awaitTermination()
       Curation.zipfBucketsFromCounts(idx.served()).orderBy("bucket")
     },
 
@@ -2157,18 +2122,13 @@ object StreamingQueries {
       val biIdx = new AnchorCountIndex(s2, s"$wh/bi", maxChainDepth = 2,
         build = graft.scale.Curation.bigramCounts(_), keyCols = Seq("w1", "w2"))
       val schema = s2.read.parquet(s"$wh/feed").schema
-      val q = s2.readStream.schema(schema)
+      val stream = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$wh/feed")
-        .writeStream
-        .outputMode(org.apache.spark.sql.streaming.OutputMode.Update())
-        .option("checkpointLocation", s"$wh/ckpt")
-        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-          // independent indexes (separate tables, own replay gates)
-          Par.both(uniIdx.processBatch(b, id), biIdx.processBatch(b, id))
-          ()
-        }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val q = Streaming.drain(stream, s"$wh/ckpt") { (b, id) =>
+        // independent indexes (separate tables, own replay gates)
+        Par.both(uniIdx.processBatch(b, id), biIdx.processBatch(b, id))
+        ()
+      }
       q.awaitTermination()
       graft.scale.Curation.collocationsFromCounts(
           uniIdx.served(), biIdx.served())
@@ -2226,7 +2186,7 @@ object StreamingQueries {
       val schema = s2.read.parquet(s"$wh/feed").schema
       val stream = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$wh/feed")
-      SpanGuard.spanGuardSink(stream, idx, s"$wh/ckpt").awaitTermination()
+      Streaming.drain(stream, s"$wh/ckpt")(idx.processBatch).awaitTermination()
       docs.select("doc_id")
         .join(idx.admitted.read().withColumn("__a", lit(1)),
           Seq("doc_id"), "left")
@@ -2285,7 +2245,7 @@ object StreamingQueries {
       val schema = s2.read.parquet(s"$wh/feed").schema
       val stream = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$wh/feed")
-      EmbedGuardStream.embedGuardSink(stream, idx, s"$wh/ckpt")
+      Streaming.drain(stream, s"$wh/ckpt")(idx.processBatch)
         .awaitTermination()
       idx.served().orderBy("vec_id")
     },
@@ -2316,7 +2276,7 @@ object StreamingQueries {
       val schema = s2.read.parquet(assetsDir).schema
       val stream = s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(assetsDir)
-      AnchorStream.anchorSink(stream, idx, s"$wh/ckpt").awaitTermination()
+      Streaming.drain(stream, s"$wh/ckpt")(idx.processBatch).awaitTermination()
       idx.served()
         .select(col("container"), col("codec"), col("status"),
           col("n_assets").cast("long").as("n_assets"))

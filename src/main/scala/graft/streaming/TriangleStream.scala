@@ -1,7 +1,7 @@
 package graft.streaming
 
 import graft.scale.Graph
-import graft.write.VersionedTable
+import graft.write.{BatchCommit, VersionedTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -18,14 +18,13 @@ import org.apache.spark.sql.functions._
   * `maxChainDepth` union legs, amortizing the O(|E|) rewrite to one every
   * ~maxChainDepth batches — the LSM trade, same policy as [[PostingsStream]].
   *
-  * Exactly-once under foreachBatch replay: both promotes are stamped with the
-  * micro-batch id atomically in the manifest; a redelivered batch skips a
-  * table whose stamp it already carries. The count table promotes FIRST: a
-  * crash between the two promotes replays into (stats stamped, edges behind) —
-  * the replay skips the delta and appends the (deterministically recomputed,
-  * anti-joined) edge rows, so the pair converges with no double count and no
-  * lost edges. The reverse order would recompute the delta against an edge
-  * table that already contains the batch, double-counting its triangles.
+  * Exactly-once under foreachBatch replay through [[graft.write.BatchCommit]].
+  * The count table commits FIRST: a crash between the two commits replays
+  * into (stats stamped, edges behind) — the replay skips the delta and
+  * appends the (deterministically recomputed, anti-joined) edge rows, so the
+  * pair converges with no double count and no lost edges. The reverse order
+  * would recompute the delta against an edge table that already contains
+  * the batch, double-counting its triangles.
   */
 final class TriangleStream(
     val edges: VersionedTable,
@@ -36,46 +35,36 @@ final class TriangleStream(
     * Callable directly (the foreachBatch body) so specs can drive controlled
     * batch boundaries.
     */
-  def processBatch(batch0: DataFrame, batchId: Long): Unit = {
-    val tag = s"batch=$batchId"
-    val statsDone = stats.exists && stats.currentTag.contains(tag)
-    val edgesDone = edges.exists && edges.currentTag.contains(tag)
-    if (statsDone && edgesDone) return
-    // lazy checkpoints (r21): batch and newEdges materialize inside the
-    // first consuming stage write and are reused by the second — per-batch
-    // jobs drop from ~6 to ~2 (guide §2.4)
-    val batch = batch0.localCheckpoint(false)
-    val old = if (edges.exists) edges.read() else batch.limit(0)
-    // arrivals can repeat edges already in the table (at-least-once feeds);
-    // only genuinely new edges enter the count or the table
-    val newEdges =
-      (if (edges.exists) batch.join(old, Seq("u", "v"), "left_anti") else batch)
-        .localCheckpoint(false)
-    // SEQUENTIAL stage writes: the stats stage's plan folds prev + delta as
-    // a 1-row cross join (no head() driver round-trips) and is the batch's
-    // one heavy job — it materializes the lazy batch/newEdges checkpoints;
-    // the edges stage then reuses the blocks. Overlapping the two in
-    // futures was measured against here: both would race the unmaterialized
-    // newEdges and duplicate the anti-join's table scan (the lazy-
-    // checkpoint race this round measured in NnDescent). Promote order
-    // unchanged — stats FIRST (see class scaladoc: the reverse order
-    // double counts on replay).
-    val statsStaged =
-      if (statsDone) None
-      else {
+  def processBatch(batch0: DataFrame, batchId: Long): Unit =
+    BatchCommit(batchId, stats, edges) { commit =>
+      // lazy checkpoints (r21): batch and newEdges materialize inside the
+      // first consuming job and are reused by the second — per-batch jobs
+      // drop from ~6 to ~2 (guide §2.4)
+      val batch = batch0.localCheckpoint(false)
+      val old = if (edges.exists) edges.read() else batch.limit(0)
+      // arrivals can repeat edges already in the table (at-least-once
+      // feeds); only genuinely new edges enter the count or the table
+      val newEdges =
+        (if (edges.exists) batch.join(old, Seq("u", "v"), "left_anti") else batch)
+          .localCheckpoint(false)
+      // SEQUENTIAL commits, stats then edges (see class scaladoc: the
+      // reverse order double counts on replay). The stats stage's plan
+      // folds prev + delta as a 1-row cross join (no head() driver
+      // round-trips) and materializes the lazy batch/newEdges checkpoints;
+      // the edges stage then reuses the blocks. Overlapping the two stages
+      // was measured against here: both would race the unmaterialized
+      // newEdges and duplicate the anti-join's table scan (the
+      // lazy-checkpoint race this round measured in NnDescent).
+      commit(stats -> (() => {
         val spark = batch0.sparkSession
         import spark.implicits._
         val prevDf =
           if (stats.exists) stats.read().select(col("n_triangles").as("__prev"))
           else Seq(0L).toDF("__prev")
-        val next = Graph.triangleCountDelta(old, newEdges).crossJoin(prevDf)
-          .select((col("__prev") + col("delta_triangles")).as("n_triangles"))
-        Some(stats.stage(next))
-      }
-    val edgesStaged =
-      if (edgesDone) None else Some(edges.stageAppendOrCreate(newEdges))
-    statsStaged.foreach(v => stats.promote(v, Some(tag)))
-    edgesStaged.foreach(v => edges.promote(v, Some(tag)))
-    edges.compactIfNeeded(maxChainDepth)
-  }
+        stats.stage(Graph.triangleCountDelta(old, newEdges).crossJoin(prevDf)
+          .select((col("__prev") + col("delta_triangles")).as("n_triangles")))
+      }))
+      commit(edges -> (() => edges.stageAppendOrCreate(newEdges)))
+      edges.compactIfNeeded(maxChainDepth)
+    }
 }

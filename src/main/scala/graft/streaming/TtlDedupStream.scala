@@ -1,7 +1,6 @@
 package graft.streaming
 
-import graft.core.Par
-import graft.write.VersionedTable
+import graft.write.{BatchCommit, VersionedTable}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -33,14 +32,10 @@ import org.apache.spark.sql.functions._
   * first in-batch row — the order contract makes state days ≤ batch days,
   * so the coalesce IS the most-recent-prior rule.
   *
-  * Exactly-once under foreachBatch replay: the admitted table's promote is
-  * stamped with the batch id; a redelivered batch skips it. The state
-  * update is a pure idempotent fold (max-merge of last-seen days + watermark
-  * eviction — re-applying the same batch is a no-op), so it simply re-runs
-  * on replay: a crash between the two promotes converges on either order.
-  * Per batch the admitted append is O(batch) ([[VersionedTable.stageAppend]],
-  * chain-compacted); the state rewrite is O(window state) — bounded by the
-  * TTL, the whole point.
+  * Exactly-once under foreachBatch replay: each batch commits through
+  * [[graft.write.BatchCommit]]. Per batch the admitted append is O(batch)
+  * ([[VersionedTable.stageAppend]], chain-compacted); the state rewrite is
+  * O(window state) — bounded by the TTL, the whole point.
   */
 final class TtlDedupIndex(
     spark: org.apache.spark.sql.SparkSession,
@@ -62,37 +57,29 @@ final class TtlDedupIndex(
   /** One micro-batch of (idCol, keyCol, dayCol) sightings. */
   def processBatch(batch0: DataFrame, batchId: Long,
                    idCol: String = "doc_id", keyCol: String = "key",
-                   dayCol: String = "day"): Unit = {
-    val tag = s"batch=$batchId"
-    val admittedDone = admitted.exists && admitted.currentTag.contains(tag)
-    val stateDone = state.exists && state.currentTag.contains(tag)
-    if (admittedDone && stateDone) return
-    // lazy checkpoints + ONE fused probe (r21): batch size, batch min day
-    // and the state watermark land in a single 1×1 cross-joined aggregate
-    // job that also materializes both checkpoints — replacing the eager
-    // checkpoint, isEmpty and two head() jobs (guide §2.4)
-    val batch = batch0.select(col(idCol).cast("long").as("id"),
-      col(keyCol).cast("long").as("key"), col(dayCol).cast("long").as("day"))
-      .localCheckpoint(false)
-    val st = windowState().localCheckpoint(false)
-    val probe = batch.agg(count(lit(1)).as("n"), min("day").as("bmin"))
-      .crossJoin(st.agg(max("last_seen").as("wm")))
-      .head()
-    if (probe.getLong(0) == 0) return
-    val batchMin = probe.getLong(1)
-    val wmPrev = if (state.exists && !probe.isNullAt(2)) probe.getLong(2)
-                 else Long.MinValue
-    // fail closed on out-of-order feeds: suppression below the watermark
-    // would have been decided differently had this batch arrived on time
-    require(batchMin >= wmPrev,
-      s"TtlDedupIndex: batch $batchId min day $batchMin precedes the " +
-        s"state watermark $wmPrev — the feed must be day-ordered")
-    // the admitted STAGE overlaps the state fold (independent tables; both
-    // read only the checkpointed batch/state); the scaladoc's crash
-    // argument holds on either promote order
-    val (admStaged, (wm, merged)) = Par.both(
-      if (admittedDone) None
-      else {
+                   dayCol: String = "day"): Unit =
+    BatchCommit(batchId, admitted, state) { commit =>
+      // lazy checkpoints + ONE fused probe (r21): batch size, batch min day
+      // and the state watermark land in a single 1×1 cross-joined
+      // aggregate job that also materializes both checkpoints — replacing
+      // the eager checkpoint, isEmpty and two head() jobs (guide §2.4)
+      val batch = batch0.select(col(idCol).cast("long").as("id"),
+        col(keyCol).cast("long").as("key"), col(dayCol).cast("long").as("day"))
+        .localCheckpoint(false)
+      val st = windowState().localCheckpoint(false)
+      val probe = batch.agg(count(lit(1)).as("n"), min("day").as("bmin"))
+        .crossJoin(st.agg(max("last_seen").as("wm")))
+        .head()
+      if (probe.getLong(0) > 0) {
+        val batchMin = probe.getLong(1)
+        val wmPrev = if (state.exists && !probe.isNullAt(2)) probe.getLong(2)
+                     else Long.MinValue
+        // fail closed on out-of-order feeds: suppression below the
+        // watermark would have been decided differently had this batch
+        // arrived on time
+        require(batchMin >= wmPrev,
+          s"TtlDedupIndex: batch $batchId min day $batchMin precedes the " +
+            s"state watermark $wmPrev — the feed must be day-ordered")
         val prevInBatch = lag("day", 1)
           .over(Window.partitionBy("key").orderBy("day", "id"))
         val adm = batch
@@ -101,21 +88,19 @@ final class TtlDedupIndex(
           .withColumn("__prev", coalesce(col("__prev_b"), col("__prev_s")))
           .filter(col("__prev").isNull || col("day") - col("__prev") > ttlDays)
           .select(col("id"), col("key"), col("day"))
-        Some(admitted.stageAppendOrCreate(adm))
-      }, {
-        // idempotent fold: max-merge last sightings, evict past the watermark
-        val m = st
-          .unionByName(batch.groupBy("key").agg(max("day").as("last_seen")))
-          .groupBy("key").agg(max("last_seen").as("last_seen"))
-          .localCheckpoint(false)
-        (m.agg(max("last_seen")).head().getLong(0), m)
-      })
-    admStaged.foreach { v =>
-      admitted.promote(v, Some(tag))
-      admitted.compactIfNeeded(maxChainDepth)
+        // admitted first: its rows are decided against the pre-batch
+        // state, which a crash between the promotes leaves in place
+        commit(admitted -> (() => admitted.stageAppendOrCreate(adm)),
+          state -> (() => {
+            // max-merge last sightings, evict past the watermark
+            val m = st
+              .unionByName(batch.groupBy("key").agg(max("day").as("last_seen")))
+              .groupBy("key").agg(max("last_seen").as("last_seen"))
+              .localCheckpoint(false)
+            val wm = m.agg(max("last_seen")).head().getLong(0)
+            state.stage(m.filter(lit(wm) - col("last_seen") <= ttlDays))
+          }))
+        admitted.compactIfNeeded(maxChainDepth)
+      }
     }
-    val live = merged.filter(lit(wm) - col("last_seen") <= ttlDays)
-    state.promote(state.stage(live), Some(tag))
-    ()
-  }
 }

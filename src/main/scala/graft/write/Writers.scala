@@ -1,10 +1,12 @@
 package graft.write
 
+import graft.core.Par
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.charset.StandardCharsets
+import scala.jdk.CollectionConverters._
 
 /** The reference's four idempotent write-semantics patterns, re-expressed as
   * pure DataFrame combinators (testable without I/O) plus a versioned-table
@@ -183,11 +185,17 @@ object Writers {
 final class VersionedTable(spark: SparkSession, root: String) {
   private val manifest = Paths.get(root, "_MANIFEST")
 
-  def currentVersion: Option[Int] =
-    if (Files.exists(manifest))
-      Some(new String(Files.readAllBytes(manifest), StandardCharsets.UTF_8)
-        .linesIterator.next().trim.toInt)
-    else None
+  /** The committed (version, tag), read in one pass over `_MANIFEST`. */
+  private def committed: Option[(Int, Option[String])] =
+    if (!Files.exists(manifest)) None
+    else {
+      val lines = new String(Files.readAllBytes(manifest), StandardCharsets.UTF_8)
+        .linesIterator
+      val v = lines.next().trim.toInt
+      Some((v, lines.find(_.nonEmpty).map(_.trim)))
+    }
+
+  def currentVersion: Option[Int] = committed.map(_._1)
 
   /** The tag recorded with the last promote, if any — used by idempotent
     * streaming sinks to stamp the micro-batch id a version corresponds to,
@@ -196,10 +204,7 @@ final class VersionedTable(spark: SparkSession, root: String) {
     * what makes APPEND versions (no keyed merge to absorb a redelivery)
     * exactly-once.
     */
-  def currentTag: Option[String] =
-    if (!Files.exists(manifest)) None
-    else new String(Files.readAllBytes(manifest), StandardCharsets.UTF_8)
-      .linesIterator.drop(1).find(_.nonEmpty).map(_.trim)
+  def currentTag: Option[String] = committed.flatMap(_._2)
 
   def exists: Boolean = currentVersion.isDefined
 
@@ -277,43 +282,25 @@ final class VersionedTable(spark: SparkSession, root: String) {
   private def reader(v: Int): org.apache.spark.sql.DataFrameReader =
     schemaOf(v).fold(spark.read)(spark.read.schema)
 
-  /** Hive partition directories (`col=value`) directly under version `v`. */
-  private def partitionDirs(v: Int): Seq[String] = {
-    val dir = Paths.get(root, s"v$v")
+  /** The names directly under `dir`, sorted; none if it is not a directory. */
+  private def names(dir: Path): Seq[String] =
     if (!Files.isDirectory(dir)) Nil
     else {
       val stream = Files.list(dir)
-      try {
-        val it = stream.iterator()
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (it.hasNext) {
-          val name = it.next().getFileName.toString
-          if (name.contains("=")) out += name
-        }
-        out.sorted.toSeq
-      } finally stream.close()
+      try stream.iterator.asScala.map(_.getFileName.toString).toVector.sorted
+      finally stream.close()
     }
-  }
+
+  /** Hive partition directories (`col=value`) directly under version `v`. */
+  private def partitionDirs(v: Int): Seq[String] =
+    names(Paths.get(root, s"v$v")).filter(_.contains("="))
 
   /** Data files (`part-*.parquet`) directly under version `v` — the
     * entry unit for unpartitioned append chains.
     */
-  private def partFiles(v: Int): Seq[String] = {
-    val dir = Paths.get(root, s"v$v")
-    if (!Files.isDirectory(dir)) Nil
-    else {
-      val stream = Files.list(dir)
-      try {
-        val it = stream.iterator()
-        val out = scala.collection.mutable.ArrayBuffer.empty[String]
-        while (it.hasNext) {
-          val name = it.next().getFileName.toString
-          if (name.startsWith("part-") && name.endsWith(".parquet")) out += name
-        }
-        out.sorted.toSeq
-      } finally stream.close()
-    }
-  }
+  private def partFiles(v: Int): Seq[String] =
+    names(Paths.get(root, s"v$v"))
+      .filter(n => n.startsWith("part-") && n.endsWith(".parquet"))
 
   /** Per-unit provenance of a version: (sourceVersion, name) pairs, where a
     * name is a hive partition directory (partitioned tables) or a data file
@@ -328,7 +315,6 @@ final class VersionedTable(spark: SparkSession, root: String) {
       val dirs = partitionDirs(v)
       if (dirs.nonEmpty) dirs.map(d => (v, d)) else partFiles(v).map(f => (v, f))
     } else {
-      import scala.jdk.CollectionConverters._
       Files.readAllLines(fl, StandardCharsets.UTF_8).asScala.toSeq
         .filter(_.nonEmpty)
         .map { line =>
@@ -404,22 +390,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
   /** Every staged version present on disk, ascending (the committed one is
     * `currentVersion`; later entries are staged-but-unpromoted).
     */
-  def versions: Seq[Int] = {
-    val dir = Paths.get(root)
-    if (!Files.isDirectory(dir)) Nil
-    else {
-      val stream = Files.list(dir)
-      try {
-        val vs = stream.iterator()
-        val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-        while (vs.hasNext) {
-          val name = vs.next().getFileName.toString
-          if (name.matches("v\\d+")) out += name.drop(1).toInt
-        }
-        out.sorted.toSeq
-      } finally stream.close()
-    }
-  }
+  def versions: Seq[Int] =
+    names(Paths.get(root)).filter(_.matches("v\\d+")).map(_.drop(1).toInt).sorted
 
   /** Retention vacuum: physically reclaim every version older than the
     * last `keep` committed ones, without breaking the retained versions'
@@ -459,14 +431,8 @@ final class VersionedTable(spark: SparkSession, root: String) {
     val reachable: Set[(Int, String)] = retained.flatMap(entries).toSet
     var removedUnits = 0L
     val removedVersions = scala.collection.mutable.ArrayBuffer.empty[Int]
-    def deleteRecursively(p: java.nio.file.Path): Unit = {
-      if (Files.isDirectory(p)) {
-        val stream = Files.list(p)
-        try {
-          val it = stream.iterator()
-          while (it.hasNext) deleteRecursively(it.next())
-        } finally stream.close()
-      }
+    def deleteRecursively(p: Path): Unit = {
+      names(p).foreach(n => deleteRecursively(p.resolve(n)))
       Files.deleteIfExists(p)
     }
     expired.foreach { v =>
@@ -482,25 +448,16 @@ final class VersionedTable(spark: SparkSession, root: String) {
       dead.foreach { u => deleteRecursively(dir.resolve(u)); removedUnits += 1 }
       Files.deleteIfExists(fileListPath(v))
       if (kept.isEmpty) { deleteRecursively(dir); removedVersions += v }
-      else {
+      else
         // mark, then sweep leftovers the unit walk does not cover
-        // (_SUCCESS, checksum sidecars) so only data units remain
-        val stream = Files.list(dir)
-        try {
-          val it = stream.iterator()
-          val extra = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-          while (it.hasNext) {
-            val p = it.next()
-            val n = p.getFileName.toString
-            // _SCHEMA survives the sweep: retained versions' file lists
-            // still read this dir's kept units through reader(v), and
-            // deleting the sidecar would silently restore the per-read
-            // schema-inference job captureSchema exists to remove (r21)
-            if (!kept.contains(n) && n != "_VACUUMED" && n != "_SCHEMA") extra += p
-          }
-          extra.foreach(deleteRecursively)
-        } finally stream.close()
-      }
+        // (_SUCCESS, checksum sidecars) so only data units remain.
+        // _SCHEMA survives the sweep: retained versions' file lists
+        // still read this dir's kept units through reader(v), and
+        // deleting the sidecar would silently restore the per-read
+        // schema-inference job captureSchema exists to remove (r21)
+        names(dir)
+          .filterNot(n => kept.contains(n) || n == "_VACUUMED" || n == "_SCHEMA")
+          .foreach(n => deleteRecursively(dir.resolve(n)))
     }
     (removedVersions.toSeq, removedUnits)
   }
@@ -583,6 +540,59 @@ final class VersionedTable(spark: SparkSession, root: String) {
   def upsert(incoming: DataFrame, keys: Seq[String]): Unit = {
     val merged = if (exists) Writers.upsert(read(), incoming, keys) else incoming
     promote(stage(merged))
+  }
+}
+
+/** One micro-batch's exactly-once commit across the [[VersionedTable]]s a
+  * streaming sink grows: W5's stage-then-atomic-swap run once per
+  * foreachBatch call, with the batch id stamped into each table's manifest
+  * ([[VersionedTable.currentTag]]) by the same atomic write that flips it.
+  *
+  * Protocol: [[BatchCommit.apply]] skips the whole batch when every table
+  * already carries its stamp. Otherwise the sink computes its stage inputs
+  * and calls [[apply]] with (table, stage) pairs: the stages of the tables
+  * not yet stamped run together ([[graft.core.Par.all]]), every stage
+  * settles before any promote, and the promotes follow argument order.
+  * A sink that must stage one table after another's promote calls
+  * [[apply]] once per table.
+  *
+  * Crash convergence: Spark redelivers a micro-batch whose checkpoint
+  * commit did not land, under the same id, so a crash anywhere in a sink
+  * ends in a redelivery. Each promote is one atomic manifest rename, so the
+  * redelivery finds every table either stamped (its promote landed: its
+  * stage is skipped) or exactly at its pre-batch version (its stage runs
+  * again). A failed stage promotes nothing, and no orphaned stage is still
+  * writing into a version directory a retry stages into. Promotes land in
+  * argument order, so the stamped tables are always a prefix of it; each
+  * sink picks the order under which recomputing the unstamped rest, against
+  * the stamped prefix's post-batch state, yields the uninterrupted rows —
+  * and states its reason where it commits. Compactions carry the current
+  * tag forward ([[VersionedTable.compact]]), so the stamp survives them.
+  */
+final class BatchCommit private (val tag: String, tables: Seq[VersionedTable],
+                                 pending: Seq[VersionedTable]) {
+
+  /** Stage the listed tables' thunks together, skipping tables already
+    * stamped with this batch, then promote in argument order.
+    */
+  def apply(stages: (VersionedTable, () => Int)*): Unit = {
+    require(stages.forall(s => tables.exists(_ eq s._1)),
+      "BatchCommit: stage for a table the commit was not opened on")
+    val todo = stages.filter(s => pending.exists(_ eq s._1))
+    val versions = Par.all(todo.map(_._2))
+    todo.zip(versions).foreach { case ((t, _), v) => t.promote(v, Some(tag)) }
+  }
+}
+
+object BatchCommit {
+
+  /** Open micro-batch `batchId` over `tables` and run `body` with it,
+    * unless every table already carries the batch's stamp.
+    */
+  def apply(batchId: Long, tables: VersionedTable*)(body: BatchCommit => Unit): Unit = {
+    val tag = s"batch=$batchId"
+    val pending = tables.filterNot(_.currentTag.contains(tag))
+    if (pending.nonEmpty) body(new BatchCommit(tag, tables, pending))
   }
 }
 

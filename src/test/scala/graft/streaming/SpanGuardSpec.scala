@@ -75,4 +75,40 @@ class SpanGuardSpec extends SparkSpec {
       .toDF("doc_id", "text"), 1L)
     assert(admittedSet(idx) === Set(1L, 3L))
   }
+
+  test("a batch that throws leaves the caller's job description in place") {
+    val sc = spark.sparkContext
+    val key = "spark.job.description"
+    val boom = udf { (t: String) =>
+      if (t.contains("boom")) throw new IllegalStateException("span failure")
+      t
+    }
+    // the failure fires inside the eager batch-spans checkpoint
+    val idx = new SpanGuardIndex(spark, root("throws"), n = 4,
+      spanFn = Some(df => df.select(col("doc_id"), md5(boom(col("text"))).as("h"))))
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties).flatMap(p => Option(p.getProperty(key)))
+          .getOrElse("<none>"))
+    }
+    sc.setJobDescription("caller")
+    try {
+      intercept[Exception] {
+        idx.processBatch(Seq((1L, "boom a b c d")).toDF("doc_id", "text"), 0L)
+      }
+      assert(sc.getLocalProperty(key) === "caller")
+    } finally sc.setJobDescription(null)
+    intercept[Exception] {
+      idx.processBatch(Seq((2L, "boom e f g h")).toDF("doc_id", "text"), 1L)
+    }
+    sc.addSparkListener(listener)
+    try {
+      spark.range(1).count()
+      org.apache.spark.GraftListenerBridge.flushListeners(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val descs = seen.asScala.toSeq
+    assert(descs.nonEmpty && !descs.exists(_.startsWith("spanguard")), descs)
+  }
 }

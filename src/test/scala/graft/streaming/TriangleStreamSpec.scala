@@ -84,4 +84,32 @@ class TriangleStreamSpec extends SparkSpec {
     s.processBatch(edgesDF(kN.takeRight(3)), 11L)
     assert(s.edges.currentVersion === ev && s.stats.currentVersion === sv)
   }
+
+  test("a drain loses no task metrics: no update reaches a collected accumulator") {
+    // the DAGScheduler logs "Failed to update accumulator" when a task
+    // reports into an SQL metric the driver no longer holds. The session,
+    // and with it Spark's log4j setup, must exist before the appender
+    // attaches; the GC after each batch collects unreachable metrics.
+    val s = mk("metrics", maxChainDepth = 3)
+    val lost = new java.util.concurrent.atomic.AtomicInteger
+    val appender = new org.apache.logging.log4j.core.appender.AbstractAppender(
+        "lost-accumulators", null, null, true,
+        org.apache.logging.log4j.core.config.Property.EMPTY_ARRAY) {
+      override def append(e: org.apache.logging.log4j.core.LogEvent): Unit =
+        if (e.getMessage.getFormattedMessage.contains("Failed to update accumulator"))
+          lost.incrementAndGet()
+    }
+    appender.start()
+    val logger = org.apache.logging.log4j.LogManager
+      .getLogger("org.apache.spark.scheduler.DAGScheduler")
+      .asInstanceOf[org.apache.logging.log4j.core.Logger]
+    logger.addAppender(appender)
+    try k5.grouped(2).zipWithIndex.foreach { case (b, i) =>
+      s.processBatch(edgesDF(b), i.toLong)
+      System.gc()
+    }
+    finally logger.removeAppender(appender)
+    assert(s.stats.read().as[Long].head() === 10L)
+    assert(lost.get === 0, s"${lost.get} task metric updates were lost")
+  }
 }

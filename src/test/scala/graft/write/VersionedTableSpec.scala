@@ -158,6 +158,42 @@ class VersionedTableSpec extends SparkSpec {
     } finally dirs.close()
   }
 
+  test("BatchCommit: a stamped batch skips its body; stages settle before promotes in argument order") {
+    val a = new VersionedTable(spark, s"${tmp()}/a")
+    val b = new VersionedTable(spark, s"${tmp()}/b")
+    def rows(x: Long) = Seq(x).toDF("id")
+    BatchCommit(0L, a, b) { c =>
+      c(a -> (() => a.stageAppendOrCreate(rows(1))), b -> (() => b.stageAppendOrCreate(rows(1))))
+    }
+    assert(a.currentTag === b.currentTag && a.currentTag.nonEmpty)
+    var ran = false
+    BatchCommit(0L, a, b)(_ => ran = true)
+    assert(!ran, "a batch every table carries the stamp of must not run")
+    // a failing stage promotes nothing, even the table whose stage passed
+    val before = (a.currentVersion, b.currentVersion)
+    intercept[IllegalStateException] {
+      BatchCommit(1L, a, b) { c =>
+        c(a -> (() => a.stageAppendOrCreate(rows(2))),
+          b -> (() => throw new IllegalStateException("stage failed")))
+      }
+    }
+    assert((a.currentVersion, b.currentVersion) === before)
+    // a redelivery stages only the tables the batch has not stamped
+    BatchCommit(1L, a) { c => c(a -> (() => a.stageAppend(rows(2)))) }
+    val staged = scala.collection.mutable.ArrayBuffer.empty[String]
+    BatchCommit(1L, a, b) { c =>
+      c(a -> (() => { staged += "a"; a.stageAppend(rows(2)) }),
+        b -> (() => { staged += "b"; b.stageAppend(rows(2)) }))
+    }
+    assert(staged === Seq("b"))
+    assert(a.read().count() === 2 && b.read().count() === 2)
+    assert(a.currentTag === b.currentTag)
+    // a stage for a table the commit was not opened on is a caller bug
+    intercept[IllegalArgumentException] {
+      BatchCommit(2L, a) { c => c(b -> (() => b.stageAppend(rows(3)))) }
+    }
+  }
+
   test("SummaryBuilder eq gate requires exact count") {
     val wh = tmp()
     Seq((1, "a"), (2, "b")).toDF("id", "v").createOrReplaceTempView("eq_input")
