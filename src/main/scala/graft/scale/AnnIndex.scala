@@ -41,9 +41,7 @@ object AnnIndex {
   private def centroidsTable(spark: SparkSession, root: String) =
     new VersionedTable(spark, s"$root/centroids")
   private def postingsTable(spark: SparkSession, root: String) =
-    new VersionedTable(spark, s"$root/postings")
-  private def tombstonesTable(spark: SparkSession, root: String) =
-    new VersionedTable(spark, s"$root/tombstones")
+    new IvfCells(spark, root).postings
 
   /** Build (or rebuild) the index at `root`: train centroids over a bounded
     * sample, assign every corpus vector its nearest cell, quantize to int8
@@ -104,7 +102,8 @@ object AnnIndex {
     * Under a full probe the appended index answers exactly like a fresh
     * index over the union corpus (AnnIndexSpec law — cell assignment can
     * differ, the scanned set cannot), and re-appending the same batch is a
-    * no-op (idempotence law).
+    * no-op (idempotence law). A re-ingested tombstoned id un-deletes
+    * ([[IvfCells.append]] holds the crash-order argument).
     *
     * Write cost is O(touched cells), NOT O(corpus): only the cells the batch
     * assigns into are read (directory-pruned), merged, and rewritten; every
@@ -128,37 +127,10 @@ object AnnIndex {
     val spark = newVectors.sparkSession
     Similarity.requireNumericId(newVectors, idCol, "appendToIvfIndex")
     val cents = readCentroids(spark, root)
-    val newPostings = Similarity.quantizeInt8(newVectors, vecCol)
+    new IvfCells(spark, root).append(Similarity.quantizeInt8(newVectors, vecCol)
       .withColumn("cid", element_at(
         Similarity.nearestCidsExpr(cents, col(vecCol).cast("array<double>"), 1), 1))
-      .select(col(idCol).cast("long").as("nid"), col("qcode").as("code"), col("cid"))
-      // lazy checkpoint (r21): the touched-cid collect below materializes it
-      // — one job for quantize+assign+collect instead of two
-      .localCheckpoint(false)
-    val touched = newPostings.select("cid").distinct().collect().map(_.getInt(0))
-    val pt = postingsTable(spark, root)
-    val existingTouched = pt.read()
-      .filter(col("cid").isin(touched.map(Integer.valueOf): _*))
-    val merged = graft.write.Writers.upsert(existingTouched, newPostings, Seq("nid"))
-    // a re-ingested id un-deletes: clear any tombstone the batch's nids
-    // carry, or the fresh posting would stay invisible at probe time
-    // (latest-op-wins across the append/delete history). The tombstone
-    // table is delete-batch-sized, so the rewrite is O(tombstones).
-    // Order matters: the tombstones clear BEFORE the postings promote. A
-    // crash between the two then leaves the id un-tombstoned with its old
-    // (or no) posting — a state the caller's retry of the append converges
-    // out of. The reverse order is NOT convergent: posting promoted, id
-    // still tombstoned → the next compaction physically purges the fresh
-    // posting and truncates the tombstone, silently degrading
-    // latest-op-wins to delete-wins.
-    val tt = tombstonesTable(spark, root)
-    if (tt.exists)
-      // no checkpoint needed: the stage write reads v{cur} while writing
-      // v{next} — distinct directories, and the batch side is already
-      // checkpointed, so the one stage job is the whole cost (r21)
-      tt.promote(tt.stage(
-        tt.read().join(newPostings.select("nid"), Seq("nid"), "left_anti")))
-    pt.promote(pt.stagePatch(merged, Seq("cid")))
+      .select(col(idCol).cast("long").as("nid"), col("qcode").as("code"), col("cid")))
     IvfIndex(root, cents.length)
   }
 
@@ -180,28 +152,12 @@ object AnnIndex {
     */
   def deleteFromIvfIndex(deletedIds: DataFrame, root: String,
                          idCol: String = "vec_id",
-                         maxChainDepth: Int = 4): Unit = {
-    val spark = deletedIds.sparkSession
-    val ids = deletedIds.select(col(idCol).cast("long").as("nid")).distinct()
-    val tt = tombstonesTable(spark, root)
-    if (tt.exists) {
-      // lazy checkpoint + count: one job answers emptiness AND materializes
-      // the blocks the append writes (r21)
-      val fresh = ids.join(tt.read(), Seq("nid"), "left_anti")
-        .localCheckpoint(false)
-      if (fresh.count() > 0) {
-        tt.promote(tt.stageAppend(fresh))
-        tt.compactIfNeeded(maxChainDepth)
-      }
-    } else tt.promote(tt.stage(ids))
-  }
+                         maxChainDepth: Int = 4): Unit =
+    new IvfCells(deletedIds.sparkSession, root, maxChainDepth).delete(deletedIds, idCol)
 
   /** The ids currently tombstoned (empty frame if none ever were). */
-  def tombstones(spark: SparkSession, root: String): DataFrame = {
-    val tt = tombstonesTable(spark, root)
-    if (tt.exists) tt.read()
-    else spark.range(0).select(col("id").as("nid"))
-  }
+  def tombstones(spark: SparkSession, root: String): DataFrame =
+    new IvfCells(spark, root).dead()
 
   /** Collapse the postings patch chain an append-heavy crawl accumulates
     * ([[appendToIvfIndex]] patches only touched cells, so each append adds a
@@ -212,26 +168,8 @@ object AnnIndex {
     * through the oracle). Run periodically, between appends — the promote
     * carries the current tag, so any batch-stamped protocol survives.
     */
-  def compactIvfIndex(spark: SparkSession, root: String): Unit = {
-    val pt = postingsTable(spark, root)
-    val tt = tombstonesTable(spark, root)
-    // lazy checkpoint + count: ONE job answers emptiness and materializes
-    // the blocks the purge join reads (r21; was checkpoint + isEmpty = two)
-    val dead0 = if (tt.exists) Some(tt.read().localCheckpoint(false)) else None
-    val dead = dead0.filter(_.count() > 0)
-    if (dead.nonEmpty) {
-      // physical delete: rewrite the postings without the tombstoned rows,
-      // then truncate the tombstone set in a SECOND promote. Crash between
-      // the two leaves stale tombstones over already-purged postings —
-      // the anti-join then matches nothing, so serving stays correct and
-      // the next compaction clears them (convergent, like the streaming
-      // sinks' half-stamped pairs).
-      val purged = pt.read().join(dead.get, Seq("nid"), "left_anti")
-      pt.promote(pt.stage(purged, Seq("cid")), pt.currentTag)
-      tt.promote(tt.stage(dead.get.limit(0)))
-    } else pt.compact(Seq("cid"))
-    ()
-  }
+  def compactIvfIndex(spark: SparkSession, root: String): Unit =
+    new IvfCells(spark, root).compact()
 
   /** Split oversized cells — the maintenance op the append path makes
     * necessary: [[appendToIvfIndex]] assigns every new vector into the
@@ -330,8 +268,9 @@ object AnnIndex {
       .sortBy(_._1)
 
   /** Probe a prebuilt index: route each query to its `nProbe` nearest cells,
-    * scan ONLY those cells' postings (the cid filter is a driver-resolved IN
-    * list over a partition column — directory pruning, no corpus scan), and
+    * scan ONLY those cells' live postings ([[IvfCells.candidates]]: a
+    * driver-resolved cid IN list over the partition column, the optional
+    * `pred` pushed into the same scan, tombstones anti-joined out), and
     * rerank by the exact int8 dot product. Output (qid, rnk, nid, score),
     * the [[Similarity.quantizedTopK]] shape.
     *
@@ -345,8 +284,8 @@ object AnnIndex {
     Similarity.requireNumericId(queries, idCol, "probeIvf")
     val cents = readCentroids(spark, root)
     // LAZY localCheckpoint: the quantize + centroid-assignment job runs ONCE
-    // — the probeCids collect below materializes the blocks and the
-    // candidate join reuses them (a second evaluation would double the
+    // — the candidate read's cell collect materializes the blocks and the
+    // scoring join reuses them (a second evaluation would double the
     // query-side work on the path built for probe-many serving); lazy, so
     // the collect is the ONE job instead of checkpoint + collect (r21)
     val q = Similarity.quantizeInt8(queries, vecCol)
@@ -355,27 +294,7 @@ object AnnIndex {
           math.min(nProbe, cents.length))))
       .select(col(idCol).cast("long").as("qid"), col("qcode").as("qc"), col("cid"))
       .localCheckpoint(false)
-    val probeCids = q.select("cid").distinct().collect().map(_.getInt(0))
-    // guard the broadcast-small-queries contract: a corpus-sized query table
-    // would both blow the broadcast below and turn this IN list into a
-    // megabyte plan literal — route that shape through knnJoinQuantized
-    require(probeCids.length <= 65536,
-      s"probeIvf routed ${probeCids.length} distinct cells — the query table " +
-        "is not broadcast-small; use Similarity.knnJoinQuantized for " +
-        "corpus-vs-corpus kNN")
-    val postings1 = postingsTable(spark, root).read()
-      .filter(col("cid").isin(probeCids.map(Integer.valueOf): _*))
-    // filtered search: the metadata predicate lands ON the postings scan
-    // (PushedFilters beside the cid pruning — PlanSpec law), so rows the
-    // filter rejects never reach the scoring heap
-    val postings0 = pred.fold(postings1)(postings1.filter)
-    // tombstoned ids are invisible until compaction physically drops them;
-    // the tombstone set is delete-batch-sized, so AQE broadcasts the
-    // anti-join side — no extra shuffle on the postings
-    val tt = tombstonesTable(spark, root)
-    val postings =
-      if (tt.exists) postings0.join(broadcast(tt.read()), Seq("nid"), "left_anti")
-      else postings0
+    val postings = new IvfCells(spark, root).candidates(q, pred, "probeIvf")
     val scored = postings.join(broadcast(q), Seq("cid"))
       .filter(col("qid") =!= col("nid"))
       .select(col("qid"), col("nid"), Similarity.int8Dot(col("qc"), col("code")).as("score"))

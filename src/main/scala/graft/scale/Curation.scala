@@ -1610,15 +1610,19 @@ object Curation {
     .filter(col("url").rlike("(?i)^https?://"))
 
   private[graft] def robotsVerdictsFromLinks(links: DataFrame): DataFrame = {
-    // lazy checkpoint: cand0 feeds BOTH the domain probe branch and the
+    // checkpoint: cand0 feeds BOTH the domain probe branch and the
     // candidate union below — DataFrame reuse is not CSE'd by the
-    // optimizer, so without it the extraction chain runs twice (r21)
+    // optimizer, so without it the extraction chain runs twice (r21).
+    // EAGER: the two branches are concurrent stages of one action, and a
+    // lazy checkpoint drops its lineage, and with it the SQL metrics, when
+    // the first job over it ends, so the other stage's task metrics are
+    // lost (q246 under GC pressure)
     val cand0 = links
       .select(canonicalizeUrl(col("url")).as("cu"))
       .select(urlDomain(col("cu")).as("domain"),
         regexp_extract(col("cu"),
           "^[a-zA-Z][a-zA-Z0-9+.-]*://[^/?#]*([^?]*)", 1).as("path"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     val doms = cand0.select("domain").distinct()
       .withColumn("k", regexp_extract(col("domain"), "^site([0-9])", 1))
       .filter(col("k") =!= "")
@@ -2767,9 +2771,10 @@ object Curation {
         |ORDER BY trust DESC, domain, slot""".stripMargin) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       val docs = Tables.documents(s, d).select("doc_id")
-      // ONE link extraction feeds both sides (r21): lazily checkpointed so
-      // the robots and trust branches read the same materialized blocks
-      val links = crawlLinks(docs).localCheckpoint(false)
+      // ONE link extraction feeds both sides (r21): checkpointed so the
+      // robots and trust branches read the same materialized blocks; eager
+      // for the reason cand0 is (robotsVerdictsFromLinks)
+      val links = crawlLinks(docs).localCheckpoint()
       val allowed = robotsVerdictsFromLinks(links).filter(col("allowed"))
         .select("domain", "path")
       val trust = crawlTrustFromLinks(links)

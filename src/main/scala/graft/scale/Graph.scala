@@ -785,16 +785,23 @@ object Graph {
     * by an anti-join here). The q196 law: old-count + delta hash-equals
     * the full recount on the union.
     */
-  def triangleCountDelta(oldPairs: DataFrame, batch0: DataFrame): DataFrame = {
+  def triangleCountDelta(oldPairs: DataFrame, batch0: DataFrame): DataFrame =
+    triangleCountDeltaOfNew(oldPairs,
+      batch0.join(oldPairs, Seq("u", "v"), "left_anti").localCheckpoint())
+
+  /** [[triangleCountDelta]] for a batch already disjoint from `oldPairs`
+    * and checkpointed EAGERLY — the streaming sink's entry point
+    * ([[graft.streaming.TriangleStream]] anti-joins each batch against its
+    * edge table anyway, and appends the same rows). Eager, because several
+    * stages of the consuming action read the batch at once: a lazy
+    * checkpoint drops its lineage, and with it the anti-join's SQL
+    * metrics, when the first job over it ends, so the other stages' task
+    * metrics are lost ("Failed to update accumulator"; TriangleStreamSpec).
+    */
+  private[graft] def triangleCountDeltaOfNew(oldPairs: DataFrame, batch: DataFrame): DataFrame = {
     // lazy checkpoints (r21) on the adjacencies: they dedup the double uses
     // below, but materialize inside the caller's ONE consuming action
-    // instead of paying an eager job each (guide §2.4). The batch is eager:
-    // several stages of that action read it at once, and a lazy checkpoint
-    // drops its lineage, and with it the anti-join's SQL metrics, when the
-    // first job over it ends, so the other stages' task metrics are lost
-    // ("Failed to update accumulator"; TriangleStreamSpec)
-    val batch = batch0.join(oldPairs, Seq("u", "v"), "left_anti")
-      .localCheckpoint()
+    // instead of paying an eager job each (guide §2.4)
     def adj(p: DataFrame) =
       p.select(col("u").as("a"), col("v").as("b"))
         .unionByName(p.select(col("v").as("a"), col("u").as("b")))
@@ -960,13 +967,16 @@ object Graph {
     */
   def trustRank(edges: DataFrame, seeds: DataFrame, iters: Int): DataFrame = {
     val strength = edges.groupBy("src").agg(sum("w").as("strength"))
-    // lazy checkpoints (r21): still dedup the per-round reuse of e/sd, but
-    // materialize inside the caller's one consuming action
+    // EAGER, as in personalizedPageRank: every round's stages of the
+    // caller's one action read e and sd at once, and a lazy checkpoint
+    // drops its lineage, and with it the SQL metrics, when the first job
+    // over it ends, so the other stages' task metrics are lost (q244 under
+    // GC pressure)
     val e = edges.join(strength, "src")
       .select(col("src"), col("dst"), col("w"), col("strength"))
-      .localCheckpoint(false)
+      .localCheckpoint()
     val sd = seeds.select(col(seeds.columns.head).as("node")).distinct()
-      .withColumn("__s", lit(1L)).localCheckpoint(false)
+      .withColumn("__s", lit(1L)).localCheckpoint()
     def restart(nodes: DataFrame) = nodes
       .join(sd, Seq("node"), "left")
       .select(col("node"), when(col("__s").isNotNull, lit(Base))

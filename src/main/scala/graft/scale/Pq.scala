@@ -191,34 +191,21 @@ object Pq {
     val newPostings = Kmeans.assignNearest(Kmeans.quantizeGrid(newVectors), coarse)
       .select(col("vec_id").cast("long").as("nid"),
         pqCodesExpr(book, col("gcode")).as("codes"), col("cid"))
-      // lazy checkpoint (r21): the touched-cid collect materializes it
+      // lazy: the encode runs once, in the precondition check when it runs,
+      // else in the cell store's touched-cell collect
       .localCheckpoint(false)
-    val touched = newPostings.select("cid").distinct().collect().map(_.getInt(0))
-    val pt = table(spark, root, "postings")
+    val cells = new IvfCells(spark, root)
     if (assertNewIds) {
-      val stale = pt.read().select("nid", "cid")
+      val stale = cells.postings.read().select("nid", "cid")
         .join(newPostings.select(col("nid"), col("cid").as("new_cid")), "nid")
         .filter(col("cid") =!= col("new_cid")).limit(1).count()
       require(stale == 0L,
         s"appendToIvfPqIndex: incoming nid already exists in a different cell " +
           s"of $root/postings — delete-then-append or rebuild (see scaladoc)")
     }
-    val existingTouched = pt.read()
-      .filter(col("cid").isin(touched.map(Integer.valueOf): _*))
-    val merged = graft.write.Writers.upsert(existingTouched, newPostings, Seq("nid"))
     // a re-ingested id un-deletes (the [[AnnIndex.appendToIvfIndex]]
-    // latest-op-wins rule); the tombstone table is delete-batch-sized,
-    // so the rewrite is O(tombstones). Tombstones clear BEFORE the
-    // postings promote — a crash between the two is then convergent under
-    // caller retry, where the reverse order lets the next compaction purge
-    // the fresh posting (delete-wins; see AnnIndex.appendToIvfIndex).
-    val tt = table(spark, root, "tombstones")
-    if (tt.exists)
-      // no checkpoint needed: the stage write reads v{cur} while writing
-      // v{next} — distinct directories (r21)
-      tt.promote(tt.stage(
-        tt.read().join(newPostings.select("nid"), Seq("nid"), "left_anti")))
-    pt.promote(pt.stagePatch(merged, Seq("cid")))
+    // latest-op-wins rule, crash order in [[IvfCells.append]])
+    cells.append(newPostings)
     IvfPqIndex(root, coarse.length)
   }
 
@@ -232,28 +219,12 @@ object Pq {
     */
   def deleteFromIvfPqIndex(deletedIds: DataFrame, root: String,
                            idCol: String = "vec_id",
-                           maxChainDepth: Int = 4): Unit = {
-    val spark = deletedIds.sparkSession
-    val ids = deletedIds.select(col(idCol).cast("long").as("nid")).distinct()
-    val tt = table(spark, root, "tombstones")
-    if (tt.exists) {
-      // lazy checkpoint + count: one job answers emptiness AND
-      // materializes the blocks the append writes (r21)
-      val fresh = ids.join(tt.read(), Seq("nid"), "left_anti")
-        .localCheckpoint(false)
-      if (fresh.count() > 0) {
-        tt.promote(tt.stageAppend(fresh))
-        tt.compactIfNeeded(maxChainDepth)
-      }
-    } else tt.promote(tt.stage(ids))
-  }
+                           maxChainDepth: Int = 4): Unit =
+    new IvfCells(deletedIds.sparkSession, root, maxChainDepth).delete(deletedIds, idCol)
 
   /** The ids currently tombstoned (empty frame if none ever were). */
-  def pqTombstones(spark: SparkSession, root: String): DataFrame = {
-    val tt = table(spark, root, "tombstones")
-    if (tt.exists) tt.read()
-    else spark.range(0).select(col("id").as("nid"))
-  }
+  def pqTombstones(spark: SparkSession, root: String): DataFrame =
+    new IvfCells(spark, root).dead()
 
   /** Collapse the postings patch chain; if tombstones are pending, the
     * rewrite drops the dead rows and a second promote truncates the set
@@ -261,24 +232,13 @@ object Pq {
     * the anti-join then matches nothing, convergent like
     * [[AnnIndex.compactIvfIndex]]).
     */
-  def compactIvfPqIndex(spark: SparkSession, root: String): Unit = {
-    val pt = table(spark, root, "postings")
-    val tt = table(spark, root, "tombstones")
-    // lazy checkpoint + count: ONE job answers emptiness and materializes
-    // the blocks the purge join reads (r21)
-    val dead0 = if (tt.exists) Some(tt.read().localCheckpoint(false)) else None
-    val dead = dead0.filter(_.count() > 0)
-    if (dead.nonEmpty) {
-      val purged = pt.read().join(dead.get, Seq("nid"), "left_anti")
-      pt.promote(pt.stage(purged, Seq("cid")), pt.currentTag)
-      tt.promote(tt.stage(dead.get.limit(0)))
-    } else pt.compact(Seq("cid"))
-    ()
-  }
+  def compactIvfPqIndex(spark: SparkSession, root: String): Unit =
+    new IvfCells(spark, root).compact()
 
   /** Probe: route each query to its `nProbe` nearest coarse cells (exact
     * integer distances, ties to the smaller cid), scan ONLY those cells'
-    * postings (partition-pruned cid IN list), and ADC-score candidates via
+    * live postings ([[IvfCells.candidates]]: partition-pruned cid IN list,
+    * tombstones anti-joined out), and ADC-score candidates via
     * the broadcast (qid, m, cid, d) distance table — the [[adcTopK]]
     * arithmetic behind an index. Candidates explode to M narrow rows that
     * reduce map-side into the (qid, nid) score; the bounded per-key heap
@@ -304,11 +264,10 @@ object Pq {
       .transform(graft.ops.TopK.topKPerKey(_, Seq("qid"),
         Seq(col("cdist").asc, col("ccid").asc), nProbe))
       .select(col("qid"), col("ccid").as("cid"))
-      // lazy: the probe-cid collect is the one materializing job (r21)
+      // lazy: the candidate read's cell collect is the one materializing
+      // job (r21)
       .localCheckpoint(false)
-    val probeCids = route.select("cid").distinct().collect().map(_.getInt(0))
-    require(probeCids.length <= 65536,
-      "probeIvfPq routed too many cells — query table is not broadcast-small")
+    val postings = new IvfCells(spark, root).candidates(route, pred, "probeIvfPq")
     // distance table: query subvectors × codebook, qid × M × K rows
     val dt = qg.select(col("vec_id").as("qid"),
         posexplode(array((0 until M).map(m =>
@@ -317,15 +276,6 @@ object Pq {
       .select(col("qid"), col("m").cast("long").as("m"), col("bcid"),
         aggregate(zip_with(col("sub"), col("bcent"), (a, b) => (a - b) * (a - b)),
           lit(0L), (acc, v) => acc + v).as("d"))
-    val postings1 = table(spark, root, "postings").read()
-      .filter(col("cid").isin(probeCids.map(Integer.valueOf): _*))
-    // filtered search: predicate pushed into the codes-only scan, pre-heap
-    val postings0 = pred.fold(postings1)(postings1.filter)
-    // tombstoned ids are invisible until compaction drops them physically
-    val tt = table(spark, root, "tombstones")
-    val postings =
-      if (tt.exists) postings0.join(broadcast(tt.read()), Seq("nid"), "left_anti")
-      else postings0
     val cand = postings.join(broadcast(route), Seq("cid"))
     val scored = cand
       .select(col("qid"), col("nid"), posexplode(col("codes")).as(Seq("m", "bcid")))
@@ -423,7 +373,8 @@ object Pq {
     * re-expresses itself as a residual AGAINST EACH ROUTED CELL before the
     * ADC table builds — the distance table is keyed (qid, cell, m, code),
     * queries × nProbe × M × k rows, still metadata-sized under the
-    * broadcast-small-queries contract.
+    * broadcast-small-queries contract. Candidates come from the same
+    * [[IvfCells.candidates]] read, so tombstoned ids are never served.
     */
   def probeIvfPqResidual(spark: SparkSession, root: String, queries: DataFrame,
                          k: Int, nProbe: Int = 2,
@@ -445,9 +396,7 @@ object Pq {
       .select(col("qid"), col("ccid").as("cid"),
         zip_with(col("gcode"), col("ccent"), (a, b) => a - b + lit(ResOffset)).as("rq"))
       .localCheckpoint(false)
-    val probeCids = route.select("cid").distinct().collect().map(_.getInt(0))
-    require(probeCids.length <= 65536,
-      "probeIvfPqResidual routed too many cells — query table is not broadcast-small")
+    val postings = new IvfCells(spark, root).candidates(route, pred, "probeIvfPqResidual")
     val dt = route.select(col("qid"), col("cid"),
         posexplode(array((0 until M).map(m =>
           slice(col("rq"), m * SubDim + 1, SubDim)): _*)).as(Seq("m", "sub")))
@@ -455,10 +404,6 @@ object Pq {
       .select(col("qid"), col("cid"), col("m").cast("long").as("m"), col("bcid"),
         aggregate(zip_with(col("sub"), col("bcent"), (a, b) => (a - b) * (a - b)),
           lit(0L), (acc, v) => acc + v).as("d"))
-    val postings0 = table(spark, root, "postings").read()
-      .filter(col("cid").isin(probeCids.map(Integer.valueOf): _*))
-    // filtered search: predicate pushed into the codes-only scan, pre-heap
-    val postings = pred.fold(postings0)(postings0.filter)
     postings.join(broadcast(route.select("qid", "cid")), Seq("cid"))
       .select(col("qid"), col("cid"), col("nid"), posexplode(col("codes")).as(Seq("m", "bcid")))
       .withColumn("m", col("m").cast("long"))

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.scale.AnnIndex
+import graft.scale.{AnnIndex, IvfCells}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -21,14 +21,20 @@ object AnnStream {
   def annAppendSink(vectors: DataFrame, root: String, checkpoint: String,
                     idCol: String = "vec_id", vecCol: String = "embedding",
                     maxChainDepth: Int = 16): StreamingQuery =
+    ivfAppendSink(vectors, root, checkpoint, maxChainDepth)(
+      AnnIndex.appendToIvfIndex(_, root, idCol, vecCol))
+
+  /** The one drain body of both IVF flavours: append the micro-batch, then
+    * apply the patch-chain policy — per-cell patches accumulate one version
+    * per batch, and past `maxChainDepth` the chain collapses (cid
+    * partitioning preserved, so probe directory-pruning survives the
+    * compaction).
+    */
+  private def ivfAppendSink(vectors: DataFrame, root: String, checkpoint: String,
+                            maxChainDepth: Int)(append: DataFrame => Any): StreamingQuery =
     Streaming.drain(vectors, checkpoint) { (batch, _) =>
-      AnnIndex.appendToIvfIndex(batch, root, idCol, vecCol)
-      // patch-chain policy: per-cell patches accumulate one version per
-      // batch; past maxChainDepth the chain collapses (cid partitioning
-      // preserved, so probe directory-pruning survives the compaction)
-      new graft.write.VersionedTable(batch.sparkSession, s"$root/postings")
-        .compactIfNeeded(maxChainDepth, Seq("cid"))
-      ()
+      append(batch)
+      new IvfCells(batch.sparkSession, root).compactChainIfNeeded(maxChainDepth)
     }
 
   /** The same drain for the graph-navigable index: each micro-batch
@@ -61,10 +67,6 @@ object AnnStream {
     */
   def pqAppendSink(vectors: DataFrame, root: String, checkpoint: String,
                    maxChainDepth: Int = 16): StreamingQuery =
-    Streaming.drain(vectors, checkpoint) { (batch, _) =>
-      graft.scale.Pq.appendToIvfPqIndex(batch, root)
-      new graft.write.VersionedTable(batch.sparkSession, s"$root/postings")
-        .compactIfNeeded(maxChainDepth, Seq("cid"))
-      ()
-    }
+    ivfAppendSink(vectors, root, checkpoint, maxChainDepth)(
+      graft.scale.Pq.appendToIvfPqIndex(_, root))
 }

@@ -126,11 +126,14 @@ final class NearDupIndex(spark: SparkSession, root: String,
   def processBatch(batch: DataFrame, batchId: Long): Unit =
     BatchCommit(batchId, survivors, signatures) { commit =>
       // tombstoned ids are rejected while their tombstone lives (see
-      // [[delete]]); lazy checkpoints (r21): the survivors stage write is
-      // the batch's ONE materializing action — b, sigs and kept land in it
-      // and the signatures stage reuses the blocks (guide §2.4)
+      // [[delete]]). b is EAGER: several stages of the survivors stage's
+      // action read it at once, and a lazy checkpoint drops its lineage, and
+      // with it the scan's SQL metrics, when the first job over it ends, so
+      // the other stages' task metrics were lost (StreamingNearDupSpec).
+      // sigs and kept stay lazy (r21): each materializes inside the survivors
+      // stage and the signatures stage reuses the blocks (guide §2.4)
       val b = minusTombstones(batch.select(col("doc_id"), col("text"))
-        .filter(col("text").isNotNull)).localCheckpoint(false)
+        .filter(col("text").isNotNull)).localCheckpoint()
       val sigs = Dedup.minhashSignatures(b, numHashes, shingleSize)
         .localCheckpoint(false)
       // 1. within-batch transitive reduction to cluster min-ids

@@ -196,11 +196,11 @@ final class PostingsIndex(spark: SparkSession, root: String,
   def compact(): Unit = {
     if (maintainSidecars)
       ts.purgeInto(
-        postings -> ((df: DataFrame) => df.sortWithinPartitions("term")),
-        lengths -> identity[DataFrame] _)
+        (postings, (df: DataFrame) => df.sortWithinPartitions("term"), Nil),
+        (lengths, identity[DataFrame] _, Nil))
     else
       ts.purgeInto(
-        postings -> ((df: DataFrame) => df.sortWithinPartitions("term")))
+        (postings, (df: DataFrame) => df.sortWithinPartitions("term"), Nil))
     // Re-base the stats chain on the (now purged) physical sidecar — this
     // restores the `Σ stats == totals(lengths)` invariant after a purge and
     // collapses the per-batch partial chain to one row either way. The one
@@ -366,8 +366,8 @@ final class FieldedPostingsIndex(spark: SparkSession, root: String,
     */
   def compact(): Unit = {
     ts.purgeInto(
-      postings -> ((df: DataFrame) => df.sortWithinPartitions("term")),
-      lengths -> identity[DataFrame] _)
+      (postings, (df: DataFrame) => df.sortWithinPartitions("term"), Nil),
+      (lengths, identity[DataFrame] _, Nil))
     if (stats.exists) {
       val total = lengths.read()
         .agg(count(lit(1)).cast("long").as("n_docs"),

@@ -37,31 +37,27 @@ final class TriangleStream(
     */
   def processBatch(batch0: DataFrame, batchId: Long): Unit =
     BatchCommit(batchId, stats, edges) { commit =>
-      // lazy checkpoints (r21): batch and newEdges materialize inside the
-      // first consuming job and are reused by the second — per-batch jobs
-      // drop from ~6 to ~2 (guide §2.4)
-      val batch = batch0.localCheckpoint(false)
-      val old = if (edges.exists) edges.read() else batch.limit(0)
       // arrivals can repeat edges already in the table (at-least-once
-      // feeds); only genuinely new edges enter the count or the table
+      // feeds); only genuinely new edges enter the count or the table. One
+      // EAGER checkpoint serves both stages: the delta trusts it as disjoint
+      // (no second anti-join against the same table) and reads it from
+      // several stages at once, which a lazy checkpoint cannot serve
+      // without losing task metrics (Graph.triangleCountDeltaOfNew)
       val newEdges =
-        (if (edges.exists) batch.join(old, Seq("u", "v"), "left_anti") else batch)
-          .localCheckpoint(false)
+        (if (edges.exists) batch0.join(edges.read(), Seq("u", "v"), "left_anti")
+         else batch0).localCheckpoint()
+      val old = if (edges.exists) edges.read() else newEdges.limit(0)
       // SEQUENTIAL commits, stats then edges (see class scaladoc: the
       // reverse order double counts on replay). The stats stage's plan
       // folds prev + delta as a 1-row cross join (no head() driver
-      // round-trips) and materializes the lazy batch/newEdges checkpoints;
-      // the edges stage then reuses the blocks. Overlapping the two stages
-      // was measured against here: both would race the unmaterialized
-      // newEdges and duplicate the anti-join's table scan (the
-      // lazy-checkpoint race this round measured in NnDescent).
+      // round-trips); the edges stage then appends the checkpointed rows.
       commit(stats -> (() => {
         val spark = batch0.sparkSession
         import spark.implicits._
         val prevDf =
           if (stats.exists) stats.read().select(col("n_triangles").as("__prev"))
           else Seq(0L).toDF("__prev")
-        stats.stage(Graph.triangleCountDelta(old, newEdges).crossJoin(prevDf)
+        stats.stage(Graph.triangleCountDeltaOfNew(old, newEdges).crossJoin(prevDf)
           .select((col("__prev") + col("delta_triangles")).as("n_triangles")))
       }))
       commit(edges -> (() => edges.stageAppendOrCreate(newEdges)))

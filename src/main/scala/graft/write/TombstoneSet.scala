@@ -8,7 +8,10 @@ import org.apache.spark.sql.functions._
   * with takedown deletes ([[graft.streaming.PhashIndex]],
   * [[graft.streaming.VideoPhashIndex]], [[graft.streaming.NearDupIndex]],
   * [[graft.streaming.PostingsIndex]],
-  * [[graft.scale.NnDescent.NavIndex]]): a [[VersionedTable]] of one long
+  * [[graft.streaming.FieldedPostingsIndex]],
+  * [[graft.scale.NnDescent.NavIndex]], and both IVF flavours,
+  * [[graft.scale.AnnIndex]] and [[graft.scale.Pq]], through their shared
+  * cell store [[graft.scale.IvfCells]]): a [[VersionedTable]] of one long
   * id column.
   *
   *  - [[add]]: O(delete-batch) dedup append — the primary tables are never
@@ -27,8 +30,9 @@ import org.apache.spark.sql.functions._
   *    drop the tombstone BEFORE the primary promote — see
   *    NnDescent.NavIndex.append for the ordering argument).
   *
-  * Extracted because five hand-rolled copies had already drifted in their
-  * purge promote counts and chain-compaction routing.
+  * Extracted because seven hand-rolled copies had already drifted in their
+  * purge promote counts, chain-compaction routing and (the IVF+PQ residual
+  * probe) whether a probe read the set at all.
   *
   * Job accounting (the r21 optimization pass): lifecycle queries call
   * [[dead]]/[[minus]] once per serve PHASE — historically an eager
@@ -92,9 +96,12 @@ final class TombstoneSet(spark: SparkSession, root: String, idCol: String,
     } else table.promote(table.stage(ids))
   }
 
-  /** `df` minus tombstoned ids (no-op while the set is absent). */
+  /** `df` minus tombstoned ids (no-op while the set is absent). The set is
+    * delete-batch-sized, so it is the broadcast side: the anti-join never
+    * shuffles `df`, whatever the broadcast threshold.
+    */
   def minus(df: DataFrame): DataFrame =
-    if (table.exists) df.join(table.read(), Seq(idCol), "left_anti")
+    if (table.exists) df.join(broadcast(table.read()), Seq(idCol), "left_anti")
     else df
 
   /** The current dead-id relation, checkpointed, when any ids pend. */
@@ -124,36 +131,35 @@ final class TombstoneSet(spark: SparkSession, root: String, idCol: String,
       primeMemo(None)
     }
 
-  /** The full purge protocol: if ids pend, rewrite each primary table as
-    * itself anti-join the dead set — `reshape` runs on the purged relation
-    * (e.g. a term re-sort so row-group envelopes survive) — carrying the
-    * table's current stamp, then truncate the set; with nothing pending,
-    * plain-compact each primary instead (the rewrite is being paid anyway,
-    * so the append chain collapses too).
+  /** The full purge protocol: restage each primary table as itself minus
+    * the dead set — `reshape` runs on the restaged relation (e.g. a term
+    * re-sort so row-group envelopes survive), `partitionCols` keep its
+    * directory layout — carrying the table's current stamp, then truncate
+    * the set. With nothing pending the same restage runs without the
+    * anti-join (the rewrite is being paid anyway, so the append chain
+    * collapses too) and the set is left alone.
     */
   def purge(primaries: VersionedTable*): Unit =
-    purgeInto(primaries.map(t => (t, identity[DataFrame] _)): _*)
+    purgeInto(primaries.map(t => (t, identity[DataFrame] _, Nil)): _*)
 
-  /** [[purge]] with a per-table reshape hook on the purged relation. The
-    * per-primary purge REWRITES are independent of each other (each reads
-    * its own table's pre-promote state plus the checkpointed dead set), so
-    * they stage concurrently and back-fill each other's task tails (guide
-    * §2.6); the PROMOTES stay strictly ordered — primaries first, in
-    * argument order, then the tombstone truncate — which is the order the
-    * crash-convergence argument depends on.
+  /** [[purge]] with a per-table reshape hook and partition columns. The
+    * per-primary REWRITES are independent of each other (each reads its own
+    * table's pre-promote state plus the checkpointed dead set), so they
+    * stage concurrently and back-fill each other's task tails (guide §2.6);
+    * the PROMOTES stay strictly ordered — primaries first, in argument
+    * order, then the tombstone truncate — which is the order the
+    * crash-convergence argument depends on. [[dead]] is resolved here, on
+    * the calling thread, before any stage starts.
     */
-  def purgeInto(primaries: (VersionedTable, DataFrame => DataFrame)*): Unit =
-    dead() match {
-      case Some(d) =>
-        val versions = Par.all(primaries.map { case (t, reshape) =>
-          () => t.stage(reshape(t.read().join(d, Seq(idCol), "left_anti")))
-        })
-        primaries.zip(versions).foreach { case ((t, _), v) =>
-          t.promote(v, t.currentTag)
-        }
-        table.promote(table.stage(d.limit(0)))
-        primeMemo(None)
-      case None =>
-        primaries.foreach { case (t, _) => t.compact() }
+  def purgeInto(primaries: (VersionedTable, DataFrame => DataFrame, Seq[String])*): Unit = {
+    val d = dead()
+    val versions = Par.all(primaries.map { case (t, reshape, partitionCols) =>
+      () => t.stage(reshape(d.fold(t.read())(t.read().join(_, Seq(idCol), "left_anti"))),
+        partitionCols)
+    })
+    primaries.zip(versions).foreach { case ((t, _, _), v) =>
+      t.promote(v, t.currentTag)
     }
+    if (d.nonEmpty) truncate()
+  }
 }

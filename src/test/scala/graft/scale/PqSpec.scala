@@ -260,6 +260,24 @@ class PqSpec extends SparkSpec {
     assert(got === want && got.nonEmpty)
   }
 
+  test("residual probe honours deletes: no tombstoned id served, same answer after compaction") {
+    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .select(col("vec_id"), col("embedding"))
+    val n = emb.count()
+    val root = graft.core.Scratch.dir("graft-pqresdel") + "/ivfpq-res"
+    Pq.buildIvfPqResidualIndex(emb, root)
+    Pq.deleteFromIvfPqIndex(emb.select("vec_id").filter(col("vec_id") % 13 === 2), root)
+    val queries = emb.filter(col("vec_id") < 3)
+    def full() = Pq.probeIvfPqResidual(spark, root, queries, k = n.toInt, nProbe = Pq.Cells)
+      .collect().map(_.toSeq).toSet
+    val served = full()
+    assert(served.nonEmpty)
+    assert(!served.exists(r => r(1).asInstanceOf[Long] % 13 == 2),
+      "a tombstoned id was served")
+    Pq.compactIvfPqIndex(spark, root)
+    assert(full() === served)
+  }
+
   test("exact duplicates share codes and scores") {
     val base = corpus(10)
     val twins = base.withColumn("vec_id", col("vec_id") + 100)

@@ -172,4 +172,100 @@ class BatchCommitCrashSpec extends SparkSpec {
     } finally walk.close()
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
+
+  /** One IVF flavour's lifecycle over the fixture embeddings, probed at
+    * full coverage (every cell, k = corpus size) so cell routing cannot
+    * mask a liveness difference.
+    */
+  private final case class Ivf(build: (DataFrame, String) => Unit,
+                               append: (DataFrame, String) => Unit,
+                               delete: (DataFrame, String) => Unit,
+                               compact: String => Unit,
+                               probe: (String, DataFrame, Int) => DataFrame)
+
+  private val ivfs: Seq[(String, Ivf)] = Seq(
+    "AnnIndex" -> Ivf(
+      (c, r) => graft.scale.AnnIndex.buildIvfIndex(c, r),
+      (b, r) => graft.scale.AnnIndex.appendToIvfIndex(b, r),
+      (d, r) => graft.scale.AnnIndex.deleteFromIvfIndex(d, r),
+      r => graft.scale.AnnIndex.compactIvfIndex(spark, r),
+      (r, q, k) => graft.scale.AnnIndex.probeIvf(spark, r, q, k, nProbe = Int.MaxValue)),
+    "Pq" -> Ivf(
+      (c, r) => graft.scale.Pq.buildIvfPqIndex(c, r),
+      (b, r) => graft.scale.Pq.appendToIvfPqIndex(b, r),
+      (d, r) => graft.scale.Pq.deleteFromIvfPqIndex(d, r),
+      r => graft.scale.Pq.compactIvfPqIndex(spark, r),
+      (r, q, k) => graft.scale.Pq.probeIvfPq(spark, r, q, k, nProbe = graft.scale.Pq.Cells)))
+
+  private lazy val emb = Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
+  private lazy val deleted = emb.filter(col("vec_id") % 7 === 1)
+  // re-ingests some deleted ids (un-delete) beside new twin ids
+  private lazy val batch = deleted.filter(col("vec_id") < 40).unionByName(
+    emb.filter(col("vec_id") < 5).withColumn("vec_id", col("vec_id") + 100000))
+
+  /** Build on the fixture, tombstone `deleted`, and return the two tables. */
+  private def ivfWithPendingDeletes(ivf: Ivf, r: String): (VersionedTable, VersionedTable) = {
+    ivf.build(emb, r)
+    ivf.delete(deleted.select("vec_id"), r)
+    (new VersionedTable(spark, s"$r/postings"), new VersionedTable(spark, s"$r/tombstones"))
+  }
+
+  private def fullProbe(ivf: Ivf, r: String): Set[Seq[Any]] =
+    set(ivf.probe(r, emb.filter(col("vec_id") < 3), emb.count().toInt + 10))
+
+  ivfs.foreach { case (name, ivf) =>
+    test(s"$name: an append over a pending tombstone redone after a crash between its promotes serves the uninterrupted result") {
+      val clean = root(s"$name-append-clean")
+      ivfWithPendingDeletes(ivf, clean)
+      ivf.append(batch, clean)
+      val want = fullProbe(ivf, clean)
+      val r = root(s"$name-append-crash")
+      val (postings, tombstones) = ivfWithPendingDeletes(ivf, r)
+      val (pv, tv) = ((postings.currentVersion.get, postings.currentTag), tombstones.currentVersion)
+      ivf.append(batch, r)
+      assert(tombstones.currentVersion !== tv, "the append cleared no tombstone")
+      // the crash: the tombstone clear landed, the postings promote did not
+      postings.promote(pv._1, pv._2)
+      ivf.append(batch, r)
+      assert(fullProbe(ivf, r) === want)
+    }
+
+    test(s"$name: a compaction redone after a crash between the purge and the truncate serves the uninterrupted result") {
+      val clean = root(s"$name-compact-clean")
+      ivfWithPendingDeletes(ivf, clean)
+      val served = fullProbe(ivf, clean)
+      ivf.compact(clean)
+      val want = fullProbe(ivf, clean)
+      assert(want === served)
+      val r = root(s"$name-compact-crash")
+      val (_, tombstones) = ivfWithPendingDeletes(ivf, r)
+      val tv = (tombstones.currentVersion.get, tombstones.currentTag)
+      ivf.compact(r)
+      // the crash: the postings purge landed, the truncate did not
+      tombstones.promote(tv._1, tv._2)
+      assert(fullProbe(ivf, r) === want)
+      ivf.compact(r)
+      assert(fullProbe(ivf, r) === want)
+      assert(tombstones.read().count() === 0)
+    }
+  }
+
+  test("main code builds a tombstone table only through TombstoneSet") {
+    val main = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(main),
+      s"run from the repository root (cwd ${new java.io.File(".").getAbsolutePath})")
+    val byHand = Seq("tombstonesTable".r, "\"tombstones\"".r,
+      "VersionedTable\\([^)]*tombstones".r)
+    val walk = java.nio.file.Files.walk(main)
+    val offenders = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator.asScala
+        .filter(p => p.toString.endsWith(".scala") && !p.endsWith("graft/write/TombstoneSet.scala"))
+        .flatMap { p =>
+          val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          byHand.flatMap(_.findFirstIn(text)).map(m => s"$p: $m")
+        }.toList
+    } finally walk.close()
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
 }

@@ -164,4 +164,31 @@ class StreamingNearDupSpec extends SparkSpec {
     assert(idx.servedSurvivors().select("doc_id").as[Long].collect().sorted
       === Array(1L, 2L, 3L, 70L))
   }
+
+  test("a drain loses no task metrics: no update reaches a collected accumulator") {
+    // the TriangleStreamSpec probe, with a GC after every batch and a
+    // steady GC pressure during it, over a drain that crosses every
+    // per-batch path: first batch (no index yet), cross-batch dedup
+    // against the index, a pending tombstone, and the chain compaction
+    val idx = new NearDupIndex(spark, root("metrics"), maxChainDepth = 2)
+    val words = (tA + " " + tB + " " + tC + " " + tD).split(' ')
+    val batches = (0 until 5).map { i =>
+      Seq((10L * i + 1, words.slice(i, i + 12).mkString(" ")),
+        (10L * i + 2, words.slice(i + 24, i + 36).mkString(" ")),
+        (10L * i + 3, dropFirstWord(words.slice(i, i + 12).mkString(" "))))
+    }
+    val (perBatch, lost) = graft.JobProbes.lostAccumulatorUpdates(gcEveryMs = 50) {
+      batches.zipWithIndex.map { case (b, i) =>
+        if (i == 2) idx.delete(Seq(1L).toDF("doc_id"))
+        val (_, jobs) = graft.JobProbes.jobs(spark) {
+          idx.processBatch(b.toDF("doc_id", "text"), i.toLong)
+        }
+        System.gc()
+        jobs
+      }
+    }
+    info(s"jobs per batch: ${perBatch.mkString(", ")}")
+    assert(idx.servedSurvivors().count() > 0)
+    assert(lost === 0, s"$lost task metric updates were lost")
+  }
 }

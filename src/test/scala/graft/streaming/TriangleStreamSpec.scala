@@ -112,4 +112,24 @@ class TriangleStreamSpec extends SparkSpec {
     assert(s.stats.read().as[Long].head() === 10L)
     assert(lost.get === 0, s"${lost.get} task metric updates were lost")
   }
+
+  test("a batch anti-joins against the edge table once: one job fewer than a second delta anti-join") {
+    // the delta trusts the sink's checkpointed disjoint batch; re-deriving
+    // it inside the delta cost one more eager checkpoint job per batch
+    val s = mk("jobs")
+    val perBatch = k5.grouped(3).zipWithIndex.map { case (b, i) =>
+      graft.JobProbes.jobs(spark)(s.processBatch(edgesDF(b), i.toLong))._2
+    }.toSeq
+    info(s"jobs per batch: ${perBatch.mkString(", ")}")
+    assert(s.stats.read().as[Long].head() === 10L)
+    assert(perBatch.drop(1).forall(_ <= TriangleStreamSpec.JobsPerLaterBatch), perBatch)
+  }
+}
+
+object TriangleStreamSpec {
+  /** Jobs of one processBatch once the edge table exists, with the delta
+    * reusing the sink's anti-join (one more when the delta anti-joins and
+    * checkpoints the batch again).
+    */
+  val JobsPerLaterBatch = 18
 }
